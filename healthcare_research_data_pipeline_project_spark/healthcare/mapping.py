@@ -274,8 +274,8 @@ def query_with(extra_ctes: list[tuple[str, str]]) -> str:
     return "WITH " + body
 
 
-#: applicationId → (sf_dir, persisted dfs) currently registered
-_WAREHOUSE_STATE: dict[str, tuple[str, list]] = {}
+#: applicationId → sf_dir whose warehouse views are currently registered
+_WAREHOUSE_STATE: dict[str, str] = {}
 
 
 def _warehouse_cache_dir(sf_dir: str) -> str:
@@ -355,12 +355,8 @@ def ensure_warehouse(spark, sf_dir: str) -> None:
     from .dialect import SPARK as _SPARK_DIALECT
 
     app_id = spark.sparkContext.applicationId
-    prev = _WAREHOUSE_STATE.get(app_id)
-    if prev is not None and prev[0] == sf_dir:
+    if _WAREHOUSE_STATE.get(app_id) == sf_dir:
         return
-    if prev is not None:
-        for old in prev[1]:
-            old.unpersist()
 
     cache = _warehouse_cache_dir(sf_dir)
     done = os.path.join(cache, "_DONE")
@@ -401,11 +397,10 @@ def ensure_warehouse(spark, sf_dir: str) -> None:
     # serve: dims as plain parquet views (no memory cache — a pruned
     # columnar scan is already ~scan-speed); facts as bucketed catalog
     # tables pointing at the shared cache location
-    dfs = []
     for name, _sql in mapping_ctes(_SPARK_DIALECT):
         loc = os.path.join(cache, name)
         if name in BUCKETED_FACTS:
             _register_bucketed(spark, name, loc, BUCKETED_FACTS[name])
         else:
             spark.read.parquet(loc).createOrReplaceTempView(name)
-    _WAREHOUSE_STATE[app_id] = (sf_dir, dfs)
+    _WAREHOUSE_STATE[app_id] = sf_dir

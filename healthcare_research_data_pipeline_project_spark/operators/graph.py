@@ -592,15 +592,14 @@ def incremental_dedup_clusters(
         # distributed fallback: changed-cluster sizes as an
         # aggregation over touched stored members + all delta members,
         # grouped by the NEW label — both inputs delta-proportional
-        # (the filter precedes the exchange)
-        sizes_b = F.broadcast(
-            track_persist(
-                upd_stored.filter("touched")
-                .select("cluster_id")
-                .unionByName(upd_delta.select("cluster_id"))
-                .groupBy("cluster_id")
-                .agg(F.count(F.lit(1)).cast("long").alias("new_size"))
-            )
+        # (the filter precedes the exchange). No broadcast hint: this
+        # is the over-cap path, so AQE picks the join from runtime size
+        sizes_b = track_persist(
+            upd_stored.filter("touched")
+            .select("cluster_id")
+            .unionByName(upd_delta.select("cluster_id"))
+            .groupBy("cluster_id")
+            .agg(F.count(F.lit(1)).cast("long").alias("new_size"))
         )
     out_stored = upd_stored.join(sizes_b, "cluster_id", "left").select(
         id_col,

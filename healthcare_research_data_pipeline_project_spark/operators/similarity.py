@@ -4,14 +4,42 @@ Embeddings are `array<float>` columns; all math is JVM-side Catalyst
 HOFs (`zip_with` + `aggregate`) — Arrow/pandas never enters the hot
 path.
 
-Scale posture:
-- brute force: broadcast the (small) query set against the partitioned
-  candidate corpus — one scan, no shuffle except the final per-query
-  top-k (a tiny aggregate). This is the exact baseline.
-- LSH (random hyperplanes): deterministic pseudo-random planes derived
-  from md5 so both engines/runs agree; candidates only join inside a
-  bucket (equi-join), then exact re-rank. This is the 100 TB path: the
-  bucket join replaces the cross product.
+Scale posture: every top-k ANN route is one filter → score → rank
+pipeline built from the same plain stage functions, so the routes
+differ only in how they generate candidates:
+
+- `_queries` / `_corpus` / `_pairs`: the query frame (qid, qe), the
+  candidate frame (cid, ce), and their broadcast join with self pairs
+  excluded — the query set is small, the corpus stays partitioned.
+- `_route(metric=...)`: IVF cell routing. Each query ranks the (tiny,
+  broadcast) centroid table by squared L2 ("l2") or cosine-to-
+  centroid ("cos"), both rounded to 6 dp with ties on cell id, so the
+  probe set is engine-reproducible and a SQL oracle can re-derive it.
+- `_cos4` / `_l2`: the scores — cosine rounded to 4 dp, and the
+  squared-L2 fold in array order.
+- `_adc_scan`: the PQ compressed scan, Σ_j LUT[j][code[j]] over the
+  stored m-byte codes, optionally restricted to routed cells.
+- `_topk` / `_adc_rank`: the per-qid `row_number` rank, kept to k.
+- `_refine`: the exact squared-L2 re-rank of a PQ shortlist
+  (IndexRefineFlat).
+
+Route compositions:
+
+| route | candidates | score | rank |
+|---|---|---|---|
+| `brute_force_topk` | `_pairs` (all) | `_cos4` | `_topk` |
+| `lsh_topk`, `lsh_multiprobe_topk` | `_pairs` on bucket | `_cos4` | `_topk` |
+| `sq8_topk` | `_pairs` (all, reconstructions) | rounded dot | `_topk` |
+| `ivf_topk`, `ivf_range_search` | `_route("cos")` ⋈ cell | `_cos4` | `_topk` / τ screen |
+| `pq_topk` | `_adc_scan` (all codes) | ADC | `_adc_rank` [+ `_refine`] |
+| `ivfpq_topk`, `ann_serve_topk` | `_route("l2")` + `_adc_scan` | ADC | `_adc_rank` [+ `_refine`] |
+
+`auto_ivf_nprobe` ranks cells with the same `_route` stage the
+serving routes use, and the audited corpus rows `sim_pq_topk` /
+`sim_ivfpq_topk` (queries/datapipe7.py) build their one candidate
+expansion from `_route` and `_adc_scan`. LSH candidates only join inside a bucket and IVF
+candidates only inside a probed cell (equi-joins), which is what
+replaces the cross product at 100 TB.
 """
 
 from __future__ import annotations
@@ -37,6 +65,141 @@ def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return df.withColumn("norm", F.sqrt(_dot(vec_col, vec_col)))
 
 
+# ---------------------------------------------------------------------------
+# Pipeline stages shared by the ANN routes (see the module docstring)
+# ---------------------------------------------------------------------------
+def _l2(a, b) -> F.Column:
+    """Squared L2 distance Σ (a_i − b_i)², folded in array order in
+    double — the fold the DuckDB oracles mirror with `list_sum`."""
+    return F.aggregate(
+        F.zip_with(
+            a,
+            b,
+            lambda x, y: (x.cast("double") - y.cast("double"))
+            * (x.cast("double") - y.cast("double")),
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _cos(a: str, b: str) -> F.Column:
+    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
+
+
+def _cos4(a: str, b: str) -> F.Column:
+    """Cosine rounded HALF_UP to 4 dp before ranking, so both engines
+    produce the identical ranking (ties then break on candidate id)."""
+    return F.round(_cos(a, b), 4).cast("double")
+
+
+def _queries(
+    emb: DataFrame, query_ids, id_col: str, vec_col: str, *extra
+) -> DataFrame:
+    return emb.filter(F.col(id_col).isin([int(q) for q in query_ids])).select(
+        F.col(id_col).alias("qid"), F.col(vec_col).alias("qe"), *extra
+    )
+
+
+def _corpus(emb: DataFrame, id_col: str, vec_col: str, *extra) -> DataFrame:
+    return emb.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("ce"), *extra)
+
+
+def _pairs(q: DataFrame, c: DataFrame, on: F.Column | None = None) -> DataFrame:
+    """Broadcast the (small) query side against the candidate side,
+    optionally on an equi-key, never pairing a query with itself."""
+    not_self = F.col("cid") != F.col("qid")
+    return F.broadcast(q).join(c, not_self if on is None else on & not_self)
+
+
+def _topk(df: DataFrame, k: int, *order) -> DataFrame:
+    """Per-qid top-k by `order` (which must end in a unique tie-break):
+    `rank` is the int row_number, kept to k. The filter sits on the bare
+    row_number so Spark plans a partial WindowGroupLimit below the
+    shuffle."""
+    w = Window.partitionBy("qid").orderBy(*order)
+    return (
+        df.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .withColumn("rank", F.col("rank").cast("int"))
+    )
+
+
+def _route(
+    q: DataFrame, cents: DataFrame, metric: str, nprobe: int | None = None
+) -> DataFrame:
+    """IVF cell routing: every (query, centroid) pair with `cr`, the
+    cell's rank for that query — squared L2 ascending ("l2") or cosine
+    to the centroid descending ("cos"; |qe| is constant per query, so
+    the centroid norm alone fixes the order). Distances are rounded to
+    6 dp before ranking and ties break on cell id: rounding absorbs
+    float summation order, so the probe set is engine-reproducible and
+    a SQL oracle can re-derive it. With `nprobe`, only the nearest
+    `nprobe` cells per query are kept."""
+    if metric == "l2":
+        key = F.round(_l2("qe", "centroid"), 6).asc()
+    else:
+        key = F.round(
+            _dot("qe", "centroid") / F.sqrt(_dot("centroid", "centroid")), 6
+        ).desc()
+    w = Window.partitionBy("qid").orderBy(key, "cell")
+    ranked = q.join(F.broadcast(cents)).withColumn("cr", F.row_number().over(w))
+    return ranked if nprobe is None else ranked.filter(F.col("cr") <= nprobe)
+
+
+def _adc_scan(
+    luts: DataFrame,
+    codes: DataFrame,
+    id_col: str,
+    *extra,
+    probe: DataFrame | None = None,
+    label_col: str = "label",
+    exclude_self: bool = True,
+) -> DataFrame:
+    """PQ compressed scan: (qid, cid, dist, *extra) with `dist` the ADC
+    distance Σ_j LUT[j][code[j]] rounded to 6 dp. Without `probe` every
+    code is a candidate (the broadcast LUTs join the codes, self pairs
+    excluded); with a routed `probe` (qid, cell) only codes inside each
+    query's probed cells are — an equi-join on the cell key."""
+    if probe is None:
+        cand = F.broadcast(luts).join(codes, F.col(id_col) != F.col("qid"))
+    else:
+        cand = probe.select("qid", F.col("cell").alias(label_col)).join(
+            codes, label_col
+        )
+        if exclude_self:
+            cand = cand.filter(F.col(id_col) != F.col("qid"))
+        cand = cand.join(F.broadcast(luts), "qid")
+    return cand.select(
+        "qid",
+        F.col(id_col).alias("cid"),
+        F.round(pq_adc_expr(), 6).alias("dist"),
+        *extra,
+    )
+
+
+def _adc_rank(scored: DataFrame, n: int) -> DataFrame:
+    return _topk(scored, n, "dist", "cid").select("qid", "cid", "dist", "rank")
+
+
+def _refine(
+    shortlist: DataFrame, emb: DataFrame, query_ids, k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Exact re-rank of a per-query PQ shortlist (FAISS's
+    IndexRefineFlat): join the full-precision vectors back for just the
+    |Q|·R shortlisted rows (broadcast — both sides are tiny by
+    construction) and keep the k nearest by exact squared L2. The
+    shortlist is persisted first so the compressed scan runs once, not
+    again inside the broadcast-exchange job."""
+    exact = (
+        F.broadcast(track_persist(shortlist).select("qid", "cid"))
+        .join(_corpus(emb, id_col, vec_col), "cid")
+        .join(F.broadcast(_queries(emb, query_ids, id_col, vec_col)), "qid")
+        .select("qid", "cid", F.round(_l2("qe", "ce"), 6).alias("dist"))
+    )
+    return _adc_rank(exact, k)
+
+
 def brute_force_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -51,30 +214,12 @@ def brute_force_topk(
     id, so the result set is deterministic across engines.
     """
     extra = extra_cols or []
-    q = (
-        emb.filter(F.col(id_col).isin(query_ids))
-        .select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qe"))
+    pairs = _pairs(
+        _queries(emb, query_ids, id_col, vec_col),
+        _corpus(emb, id_col, vec_col, *extra),
     )
-    c = emb.select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("ce"), *extra
-    )
-    pairs = F.broadcast(q).join(c, F.col("cid") != F.col("qid"))
-    scored = pairs.select(
-        "qid",
-        "cid",
-        *extra,
-        F.round(
-            _dot("qe", "ce") / (F.sqrt(_dot("qe", "qe")) * F.sqrt(_dot("ce", "ce"))), 4
-        )
-        .cast("double")
-        .alias("cos_sim"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), "cid")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .withColumn("rank", F.col("rank").cast("int"))
-    )
+    scored = pairs.select("qid", "cid", *extra, _cos4("qe", "ce").alias("cos_sim"))
+    return _topk(scored, k, F.desc("cos_sim"), "cid")
 
 
 def _half_up_units(S, scale: float = 10000.0):
@@ -836,6 +981,29 @@ def _vec_dim(df: DataFrame, vec_col: str) -> int:
     return int(row["d"])
 
 
+def _tuning_sample(
+    emb: DataFrame, n_queries: int, corpus_cap: int, id_col: str, *cols
+) -> tuple[int, DataFrame, list]:
+    """The bounded input of a one-time tuning job: (corpus row count,
+    the corpus capped at `corpus_cap` rows by a deterministic id-hash
+    stride, `n_queries` hash-spread query ids drawn from that sample)."""
+    n = emb.count()
+    corpus = emb.select(id_col, *cols)
+    if n > corpus_cap:
+        stride = -(-n // corpus_cap)
+        corpus = corpus.filter(
+            F.pmod(F.xxhash64(F.col(id_col)), F.lit(stride)) == 0
+        )
+    qids = [
+        r[0]
+        for r in corpus.select(id_col)
+        .orderBy(F.pmod(F.xxhash64(F.col(id_col)), F.lit(997)), F.col(id_col))
+        .limit(n_queries)
+        .collect()
+    ]
+    return n, corpus, qids
+
+
 def measure_similarity_profile(
     emb: DataFrame,
     k: int = 5,
@@ -863,20 +1031,7 @@ def measure_similarity_profile(
     products, a one-time tuning job per (session, corpus), the same
     lifecycle as IVF/PQ training. Never rides a hot path.
     """
-    n = emb.count()
-    corpus = emb.select(id_col, vec_col)
-    if n > corpus_cap:
-        stride = -(-n // corpus_cap)
-        corpus = corpus.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(stride)) == 0
-        )
-    qids = [
-        r[0]
-        for r in corpus.select(id_col)
-        .orderBy(F.pmod(F.xxhash64(F.col(id_col)), F.lit(997)), F.col(id_col))
-        .limit(n_queries)
-        .collect()
-    ]
+    n, corpus, qids = _tuning_sample(emb, n_queries, corpus_cap, id_col, vec_col)
     kth = (
         brute_force_topk(corpus, qids, k=k, id_col=id_col, vec_col=vec_col)
         .groupBy("qid")
@@ -994,8 +1149,8 @@ def auto_ivf_nprobe(
     bounded one-time tuning job, same lifecycle as PQ training), each
     query's quality-grade neighbors (true score at least the true
     k-th — the ANN bench's tie-robust recall definition) are counted
-    per cell, cells are ranked EXACTLY like the serving route ranks
-    them, and the returned nprobe is the smallest whose 25th-
+    per cell, cells are ranked by the serving routes' own `_route`
+    stage, and the returned nprobe is the smallest whose 25th-
     PERCENTILE per-query sample recall reaches the floor. The p25
     (not the mean) is deliberate, the same conservative-side choice
     `measure_similarity_profile` makes: the sample mean overfits 16
@@ -1008,91 +1163,43 @@ def auto_ivf_nprobe(
 
     `metric` must match the serving route: "l2" for `ivfpq_topk`
     (squared-L2 ADC + rounded-L2 centroid routing) or "cos" for
-    `ivf_topk` (cosine candidates + cosine-to-centroid routing).
-    Everything here is bounded: n_queries x corpus_cap exact scores,
-    #cells centroid distances, an n_queries x #cells census collected
-    to the driver.
+    `ivf_topk` (cosine candidates + rounded cosine-to-centroid
+    routing). Everything here is bounded: n_queries x corpus_cap exact
+    scores, #cells centroid distances, an n_queries x #cells census
+    collected to the driver.
 
-    RADIUS mode (r12, VERDICT r11 #8): pass `tau` to derive the depth
-    for `ivf_range_search` instead of a top-k route. A sample query's
-    quality set becomes its TRUE in-radius neighbors (4-dp-rounded
-    cosine ≥ τ, exactly the serving route's screen) rather than the
-    top-k, the per-query denominator is that set's size (vacuously-
-    satisfied queries with no in-radius sample neighbors drop out of
-    the census), and the returned nprobe is the smallest whose p25
-    per-query sample RADIUS recall meets the floor — so radius
-    serving inherits the same data-derived guarantee, measured in its
-    own regime rather than through the k-NN proxy. Requires
-    `metric="cos"` (the radius route is cosine-only)."""
+    RADIUS mode: pass `tau` to derive the depth for `ivf_range_search`
+    instead of a top-k route. A sample query's quality set becomes its
+    TRUE in-radius neighbors (4-dp-rounded cosine ≥ τ, exactly the
+    serving route's screen) rather than the top-k, the per-query
+    denominator is that set's size (vacuously-satisfied queries with
+    no in-radius sample neighbors drop out of the census), and the
+    returned nprobe is the smallest whose p25 per-query sample RADIUS
+    recall meets the floor — so radius serving inherits the same
+    data-derived guarantee, measured in its own regime rather than
+    through the k-NN proxy. Requires `metric="cos"` (the radius route
+    is cosine-only)."""
     if metric not in ("l2", "cos"):
         raise ValueError(f"unknown metric {metric!r}")
     if tau is not None and metric != "cos":
         raise ValueError("radius-mode nprobe derivation is cosine-only")
-    n = emb.count()
-    corpus = emb.select(id_col, vec_col, label_col)
-    if n > corpus_cap:
-        stride = -(-n // corpus_cap)
-        corpus = corpus.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(stride)) == 0
-        )
-    qids = [
-        r[0]
-        for r in corpus.select(id_col)
-        .orderBy(F.pmod(F.xxhash64(F.col(id_col)), F.lit(997)), F.col(id_col))
-        .limit(n_queries)
-        .collect()
-    ]
-    q = emb.filter(F.col(id_col).isin(qids)).select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qe")
+    _, corpus, qids = _tuning_sample(
+        emb, n_queries, corpus_cap, id_col, vec_col, label_col
     )
-    c = corpus.select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).alias("ce"),
-        F.col(label_col).alias("cell"),
-    )
-    l2_qc = F.aggregate(
-        F.zip_with(
-            "qe",
-            "ce",
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    cos_qc = _dot("qe", "ce") / (
-        F.sqrt(_dot("qe", "qe")) * F.sqrt(_dot("ce", "ce"))
-    )
-    score = l2_qc if metric == "l2" else cos_qc
-    order = [F.col("s").asc(), F.col("cid").asc()] if metric == "l2" else [
-        F.col("s").desc(), F.col("cid").asc()
-    ]
-    pairs = track_persist(
-        F.broadcast(q)
-        .join(c, F.col("cid") != F.col("qid"))
-        .select("qid", "cid", "cell", score.alias("s"))
-    )
+    q = _queries(emb, qids, id_col, vec_col)
+    c = _corpus(corpus, id_col, vec_col, F.col(label_col).alias("cell"))
+    if metric == "l2":
+        score, order, kth_of = _l2("qe", "ce"), F.col("s").asc(), F.max
+    else:
+        score, order, kth_of = _cos("qe", "ce"), F.col("s").desc(), F.min
+    pairs = track_persist(_pairs(q, c).select("qid", "cid", "cell", score.alias("s")))
     if tau is not None:
         # radius goodness: the serving route screens on the 4-dp
         # ROUNDED cosine, so the census must too
-        good = (
-            pairs.filter(F.round(F.col("s"), 4) >= F.lit(float(tau)))
-            .groupBy("qid", "cell")
-            .agg(F.count(F.lit(1)).alias("ngood"))
-        )
+        good = pairs.filter(F.round("s", 4) >= F.lit(float(tau)))
     else:
-        kth = (
-            pairs.withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("qid").orderBy(*order)
-                ),
-            )
-            .filter(F.col("rn") <= k)
-            .groupBy("qid")
-            .agg(
-                (F.max("s") if metric == "l2" else F.min("s")).alias("kth")
-            )
+        kth = _topk(pairs, k, order, "cid").groupBy("qid").agg(
+            kth_of("s").alias("kth")
         )
         eps = F.lit(1e-9)
         is_good = (
@@ -1100,41 +1207,9 @@ def auto_ivf_nprobe(
             if metric == "l2"
             else (F.col("s") >= F.col("kth") - eps)
         )
-        good = (
-            pairs.join(F.broadcast(kth), "qid")
-            .filter(is_good)
-            .groupBy("qid", "cell")
-            .agg(F.count(F.lit(1)).alias("ngood"))
-        )
-    # cell ranking: EXACTLY the serving routes' expressions — rounded
-    # squared L2 asc for ivfpq_topk, cosine-to-centroid desc for
-    # ivf_topk, ties on cell id — so the measured census reflects the
-    # probe sets the route will actually take
-    cents = label_centroids(emb, label_col, vec_col)
-    if metric == "l2":
-        cdist = F.aggregate(
-            F.zip_with(
-                "qe",
-                "centroid",
-                lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        corder = [F.round(cdist, 6).asc(), F.col("cell").asc()]
-    else:
-        cdot = _dot("qe", "centroid") / F.sqrt(_dot("centroid", "centroid"))
-        corder = [cdot.desc(), F.col("cell").asc()]
-    crank = (
-        q.join(F.broadcast(cents))
-        .select(
-            "qid",
-            "cell",
-            F.row_number()
-            .over(Window.partitionBy("qid").orderBy(*corder))
-            .alias("cr"),
-        )
-    )
+        good = pairs.join(F.broadcast(kth), "qid").filter(is_good)
+    good = good.groupBy("qid", "cell").agg(F.count(F.lit(1)).alias("ngood"))
+    crank = _route(q, label_centroids(emb, label_col, vec_col), metric)
     census = good.join(crank, ["qid", "cell"]).select("qid", "cr", "ngood")
     rows = census.collect()  # <= n_queries x #cells rows
     ncells = max((r["cr"] for r in rows), default=1)
@@ -1143,24 +1218,16 @@ def auto_ivf_nprobe(
         per_q.setdefault(r["qid"], {})[r["cr"]] = r["ngood"]
     if not per_q:
         return 1
+
+    def recall(d: dict[int, int], nprobe: int) -> float:
+        # radius mode: the denominator is that query's TRUE in-radius
+        # sample-neighbor count
+        den = k if tau is None else sum(d.values())
+        return min(den, sum(n for cr, n in d.items() if cr <= nprobe)) / den
+
     for nprobe in range(1, ncells + 1):
-        if tau is not None:
-            # per-query denominator = that query's TRUE in-radius
-            # sample-neighbor count (queries with none never enter
-            # per_q — vacuously satisfied)
-            recalls = sorted(
-                sum(cnt for cr, cnt in d.items() if cr <= nprobe)
-                / sum(d.values())
-                for d in per_q.values()
-            )
-        else:
-            recalls = sorted(
-                min(k, sum(cnt for cr, cnt in d.items() if cr <= nprobe))
-                / k
-                for d in per_q.values()
-            )
-        p25 = recalls[max(0, int(0.25 * (len(recalls) - 1)))]
-        if p25 >= target_recall:
+        recalls = sorted(recall(d, nprobe) for d in per_q.values())
+        if recalls[max(0, int(0.25 * (len(recalls) - 1)))] >= target_recall:
             return nprobe
     return ncells
 
@@ -1199,50 +1266,17 @@ def lsh_topk(
     tests measure recall against `brute_force_topk`. At scale this
     turns the O(|Q|·|C|) sweep into an equi-join on bucket id.
 
-    `num_planes=None` (the default) derives the plane count from the
-    corpus via `auto_lsh_params_for` (measured kth-NN cosine profile +
-    retention model, r10) and — because a recall-honoring
-    single-bucket probe at moderate similarity needs Hamming-1
-    probing — DELEGATES to `lsh_multiprobe_topk` with the derived
-    (planes, nprobe). Pass an explicit `num_planes` for the classic
-    single-bucket route.
+    The single-bucket route IS `lsh_multiprobe_topk` with nprobe=1 —
+    the query probes only its own bucket (identity pinned in
+    tests/test_dedup_similarity.py). `num_planes=None` (the default)
+    derives the plane count from the corpus via `auto_lsh_params_for`
+    (measured kth-NN cosine profile + retention model) and — because a
+    recall-honoring single-bucket probe at moderate similarity needs
+    Hamming-1 probing — takes the derived nprobe with it.
     """
-    if num_planes is None:
-        planes, nprobe = auto_lsh_params_for(
-            emb, k=k, id_col=id_col, vec_col=vec_col
-        )
-        return lsh_multiprobe_topk(
-            emb, query_ids, k=k, num_planes=planes, nprobe=nprobe,
-            id_col=id_col, vec_col=vec_col,
-        )
-    bucketed = lsh_bucket(emb, vec_col, num_planes)
-    q = bucketed.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qe"),
-        F.col("lsh_bucket").alias("qb"),
-    )
-    c = bucketed.select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).alias("ce"),
-        F.col("lsh_bucket").alias("cb"),
-    )
-    pairs = F.broadcast(q).join(
-        c, (F.col("qb") == F.col("cb")) & (F.col("cid") != F.col("qid"))
-    )
-    scored = pairs.select(
-        "qid",
-        "cid",
-        F.round(
-            _dot("qe", "ce") / (F.sqrt(_dot("qe", "qe")) * F.sqrt(_dot("ce", "ce"))), 4
-        )
-        .cast("double")
-        .alias("cos_sim"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), "cid")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .withColumn("rank", F.col("rank").cast("int"))
+    return lsh_multiprobe_topk(
+        emb, query_ids, k=k, num_planes=num_planes, nprobe=1,
+        id_col=id_col, vec_col=vec_col,
     )
 
 
@@ -1259,16 +1293,15 @@ def sq8_topk(
     DEQUANTIZES through the code: score = dot of the reconstructions
     x_hat_i = mn_i + q_i * (mx_i - mn_i)/255.
 
-    Ranking by the RAW integer code dot (the r4-r5 form) is a
-    measured quality defect, not an optimization: the per-dimension
-    affine offsets make sum(q_a * q_c) non-monotone in the true dot —
-    at sf0.1 its top-5 overlapped the true dot top-5 in 0/5 (r6 ANN
-    bench). FAISS SQ scans likewise compute distances on
-    reconstructions, never raw codes. Reconstruction is a per-vector
-    Catalyst transform against the broadcast min/max row; the float
-    op sequence is identical in both engines, and the score is
-    rounded to 4 dp with a cid tie-break (the cosine doctrine), so
-    the oracle still value-hashes."""
+    Ranking by the RAW integer code dot is a measured quality defect,
+    not an optimization: the per-dimension affine offsets make
+    sum(q_a * q_c) non-monotone in the true dot — at sf0.1 its top-5
+    overlapped the true dot top-5 in 0/5 (r6 ANN bench). FAISS SQ
+    scans likewise compute distances on reconstructions, never raw
+    codes. Reconstruction is a per-vector Catalyst transform against
+    the broadcast min/max row; the float op sequence is identical in
+    both engines, and the score is rounded to 4 dp with a cid
+    tie-break (the cosine doctrine), so the oracle still value-hashes."""
     e = emb.select(id_col, vec_col)
     per = (
         e.select(F.posexplode(vec_col).alias("pos", "x"))
@@ -1309,29 +1342,12 @@ def sq8_topk(
         + c.cast("double") * (F.get("mxs", i) - F.get("mns", i)) / 255.0,
     )
     qz = e.crossJoin(F.broadcast(bl)).select(id_col, recon.alias("xr"))
-    q = qz.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("qid"), F.col("xr").alias("qa")
-    )
-    c = qz.select(F.col(id_col).alias("cid"), F.col("xr").alias("qc"))
-    score = F.round(
-        F.aggregate(
-            F.zip_with("qa", "qc", lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        4,
-    ).cast("double")
-    p = (
-        F.broadcast(q)
-        .join(c, F.col("cid") != F.col("qid"))
-        .select("qid", "cid", score.alias("score_sq8"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("score_sq8"), "cid")
-    return (
-        p.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "cid", "score_sq8", "rank")
-    )
+    pairs = _pairs(_queries(qz, query_ids, id_col, "xr"), _corpus(qz, id_col, "xr"))
+    score = F.round(_dot("qe", "ce"), 4).cast("double")
+    return _topk(
+        pairs.select("qid", "cid", score.alias("score_sq8")),
+        k, F.desc("score_sq8"), "cid",
+    ).select("qid", "cid", "score_sq8", "rank")
 
 
 def _proj_expr(vec_col: str, plane: int, dim: int) -> str:
@@ -1364,9 +1380,8 @@ def lsh_multiprobe_topk(
     fans out by a factor of `nprobe`.
 
     `num_planes=None` derives (planes, nprobe) from the corpus via
-    `auto_lsh_params_for` — the measured kth-NN cosine profile, r10
-    (the caller's `nprobe` is then ignored — the derived pair is a
-    unit).
+    `auto_lsh_params_for` — the measured kth-NN cosine profile (the
+    caller's `nprobe` is then ignored — the derived pair is a unit).
     """
     if num_planes is None:
         num_planes, nprobe = auto_lsh_params_for(
@@ -1384,11 +1399,6 @@ def lsh_multiprobe_topk(
     )
     base = emb.withColumn("pr", F.expr(projs)).withColumn(
         "bkt", F.expr(bucket)
-    )
-    c = base.select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).alias("ce"),
-        F.col("bkt").alias("cb"),
     )
     # rank each plane by (|proj|, idx); flip the m lowest-margin bits.
     # The rank form avoids an argsort: rank_p = #{q : (|pr[q]|, q) <
@@ -1413,33 +1423,13 @@ def lsh_multiprobe_topk(
         "filter(concat(array(bkt), array(" + ", ".join(flips) + ")),"
         " x -> x is not null)"
     )
-    q = (
-        base.filter(F.col(id_col).isin(query_ids))
-        .withColumn("probe", F.explode(F.expr(probes)))
-        .select(
-            F.col(id_col).alias("qid"),
-            F.col(vec_col).alias("qe"),
-            "probe",
-        )
+    q = _queries(
+        base, query_ids, id_col, vec_col, F.explode(F.expr(probes)).alias("probe")
     )
-    pairs = F.broadcast(q).join(
-        c, (F.col("probe") == F.col("cb")) & (F.col("cid") != F.col("qid"))
-    )
-    scored = pairs.select(
-        "qid",
-        "cid",
-        F.round(
-            _dot("qe", "ce") / (F.sqrt(_dot("qe", "qe")) * F.sqrt(_dot("ce", "ce"))), 4
-        )
-        .cast("double")
-        .alias("cos_sim"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), "cid")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .withColumn("rank", F.col("rank").cast("int"))
-    )
+    c = _corpus(base, id_col, vec_col, F.col("bkt").alias("cb"))
+    pairs = _pairs(q, c, F.col("probe") == F.col("cb"))
+    scored = pairs.select("qid", "cid", _cos4("qe", "ce").alias("cos_sim"))
+    return _topk(scored, k, F.desc("cos_sim"), "cid")
 
 
 # ---------------------------------------------------------------------------
@@ -1566,11 +1556,11 @@ def ivf_topk(
     """IVF ANN top-k: route each query to its `nprobe` nearest cell
     centroids, score exactly only within those cells.
 
-    `nprobe=None` (the default since r11) derives the routing depth
-    from the corpus via `auto_ivf_nprobe` (metric="cos" — this
-    route's candidate scoring and centroid ranking are both cosine)
-    against its 0.85 recall floor; a fixed nprobe is an explicit
-    routing-cap opt-in, not the default.
+    `nprobe=None` (the default) derives the routing depth from the
+    corpus via `auto_ivf_nprobe` (metric="cos" — this route's
+    candidate scoring and centroid ranking are both cosine) against
+    its 0.85 recall floor; a fixed nprobe is an explicit routing-cap
+    opt-in, not the default.
 
     Plan shape at scale: the centroid table is tiny (≤ #cells) and
     broadcasts into query routing; the candidate scan is an equi-join
@@ -1584,12 +1574,7 @@ def ivf_topk(
     scored = _ivf_candidate_scores(
         emb, query_ids, nprobe, id_col, vec_col, label_col, cents
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), "cid")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .withColumn("rank", F.col("rank").cast("int"))
-    )
+    return _topk(scored, k, F.desc("cos_sim"), "cid")
 
 
 def _ivf_candidate_scores(
@@ -1602,57 +1587,19 @@ def _ivf_candidate_scores(
     cents: DataFrame | None = None,
 ) -> DataFrame:
     """Shared IVF candidate scoring: route each query to its nprobe
-    nearest cell centroids (tiny centroid table broadcast), score
-    exact rounded cosine ONLY inside those cells via the cell
-    equi-join — the cross product never forms. Pass `cents` (a
-    (cell, centroid) frame, e.g. a served trained-quantizer literal)
-    to skip re-deriving centroids from the corpus per call — the
-    serve-don't-rebuild lifecycle (r14); omitted, they are computed
-    in-line exactly as before."""
+    nearest cell centroids (`_route("cos")`), score exact rounded
+    cosine ONLY inside those cells via the cell equi-join — the cross
+    product never forms. Pass `cents` (a (cell, centroid) frame, e.g.
+    a served trained-quantizer literal) to skip re-deriving centroids
+    from the corpus per call; omitted, they are computed in-line."""
     if cents is None:
         cents = label_centroids(emb, label_col, vec_col)
-    q = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qe")
-    )
-    routed = (
-        q.join(F.broadcast(cents))
-        .select(
-            "qid", "qe", "cell",
-            # cosine to the centroid (|qe| is constant per query, so
-            # dividing by the centroid norm alone fixes the ranking).
-            # Ranked on ROUND(·, 6), the sim_ivfpq_topk routing
-            # doctrine: rounding absorbs float summation-order, so
-            # the probe set is engine-reproducible and a SQL oracle
-            # can re-derive it (sim_ivf_range_search_routed, r13); a
-            # 1e-6 centroid-cosine tie is far below any routing-
-            # quality signal, and ties still break on cell id.
-            F.round(
-                _dot("qe", "centroid")
-                / F.sqrt(_dot("centroid", "centroid")),
-                6,
-            ).alias("cdot"),
-        )
-        .withColumn(
-            "crank",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.desc("cdot"), "cell")
-            ),
-        )
-        .filter(F.col("crank") <= nprobe)
-        .select("qid", "qe", "cell")
-    )
-    c = emb.select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).alias("ce"),
-        F.col(label_col).alias("cell"),
-    )
+    routed = _route(
+        _queries(emb, query_ids, id_col, vec_col), cents, "cos", nprobe
+    ).select("qid", "qe", "cell")
+    c = _corpus(emb, id_col, vec_col, F.col(label_col).alias("cell"))
     pairs = routed.join(c, "cell").filter(F.col("cid") != F.col("qid"))
-    return pairs.select(
-        "qid", "cid",
-        F.round(
-            _dot("qe", "ce") / (F.sqrt(_dot("qe", "qe")) * F.sqrt(_dot("ce", "ce"))), 4
-        ).cast("double").alias("cos_sim"),
-    )
+    return pairs.select("qid", "cid", _cos4("qe", "ce").alias("cos_sim"))
 
 
 def ivf_range_search(
@@ -1680,7 +1627,7 @@ def ivf_range_search(
     whose p25 per-query sample radius recall — in-radius neighbors
     measured with this exact τ screen, not the k-NN proxy — meets the
     0.85 floor, so radius serving carries the same data-derived
-    guarantee as the top-k routes (VERDICT r11 #8)."""
+    guarantee as the top-k routes."""
     if nprobe is None:
         nprobe = auto_ivf_nprobe(
             emb, metric="cos", tau=tau,
@@ -1751,13 +1698,13 @@ def pq_encode(
     same doctrine as clustering._with_assignment); encoding itself is
     pure Catalyst HOFs — no shuffle, no Python.
 
-    The min-of-(dist, ci)-structs argmin is DELIBERATE (r7 tuning
-    pass): a struct-free rewrite — bind the per-subspace distance
-    array in a projection, then array_position(d, array_min(d)) —
-    was measured 2.7x SLOWER, because CollapseProject re-inlines the
-    bound array into every reference, so the m·ksub L2 computation
-    runs once per reference instead of once per row. The struct form
-    evaluates each distance exactly once."""
+    The min-of-(dist, ci)-structs argmin is DELIBERATE: a struct-free
+    rewrite — bind the per-subspace distance array in a projection,
+    then array_position(d, array_min(d)) — was measured 2.7x SLOWER,
+    because CollapseProject re-inlines the bound array into every
+    reference, so the m·ksub L2 computation runs once per reference
+    instead of once per row. The struct form evaluates each distance
+    exactly once."""
     spark = emb.sparkSession
     m, dsub = len(codebooks), len(codebooks[0][0])
     crow = spark.createDataFrame(
@@ -1769,18 +1716,8 @@ def pq_encode(
             F.transform(
                 F.get(F.col("__cb"), j),
                 lambda c, ci: F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            F.slice(
-                                F.col(vec_col), j * dsub + 1, F.lit(dsub)
-                            ),
-                            c,
-                            lambda x, y: (x.cast("double") - y)
-                            * (x.cast("double") - y),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, v: acc + v,
-                    ).alias("dist"),
+                    _l2(F.slice(F.col(vec_col), j * dsub + 1, F.lit(dsub)), c)
+                    .alias("dist"),
                     ci.alias("ci"),
                 ),
             )
@@ -1804,35 +1741,11 @@ def pq_query_luts(
     driver collect jobs inside the query; the codebooks, a k·m·dsub
     driver artifact from training, are the only literal). `qv` carries
     the full-precision query vector for refine-mode exact re-ranking."""
-    spark = emb.sparkSession
-    dsub = len(codebooks[0][0])
-    crow = spark.createDataFrame(
-        [(codebooks,)], "__cb array<array<array<double>>>"
-    )
-    lut = F.transform(
-        F.sequence(F.lit(0), F.lit(len(codebooks) - 1)),
-        lambda j: F.transform(
-            F.get(F.col("__cb"), j),
-            lambda c: F.aggregate(
-                F.zip_with(
-                    F.slice(F.col(vec_col), j * dsub + 1, F.lit(dsub)),
-                    c,
-                    lambda x, y: (x.cast("double") - y)
-                    * (x.cast("double") - y),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-        ),
-    )
-    return (
-        emb.filter(F.col(id_col).isin([int(q) for q in query_ids]))
-        .crossJoin(F.broadcast(crow))
-        .select(
-            F.col(id_col).alias("qid"),
-            F.col(vec_col).alias("qv"),
-            lut.alias("lut"),
-        )
+    return _query_frame_luts(
+        emb.filter(F.col(id_col).isin([int(q) for q in query_ids])),
+        codebooks,
+        id_col,
+        vec_col,
     )
 
 
@@ -1855,16 +1768,7 @@ def _query_frame_luts(
         F.sequence(F.lit(0), F.lit(len(codebooks) - 1)),
         lambda j: F.transform(
             F.get(F.col("__cb"), j),
-            lambda c: F.aggregate(
-                F.zip_with(
-                    F.slice(F.col(vec_col), j * dsub + 1, F.lit(dsub)),
-                    c,
-                    lambda x, y: (x.cast("double") - y)
-                    * (x.cast("double") - y),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
+            lambda c: _l2(F.slice(F.col(vec_col), j * dsub + 1, F.lit(dsub)), c),
         ),
     )
     return qdf.crossJoin(F.broadcast(crow)).select(
@@ -1916,6 +1820,12 @@ def pq_topk(
     code space, and the refine pass resolves them at full precision
     for candidate-bounded cost.
 
+    Training is deterministic (hash-sampled seeding, fixed rounds), and
+    the encoded (id, code) table IS the index (what FAISS persists):
+    callers serving many queries train and encode once and pass
+    `codebooks` / `encoded`, so the query path scans m-byte codes and
+    never re-runs the m·ksub argmin encode over the float corpus.
+
     At 100 TB the encoded corpus is 32× smaller than the float
     vectors — the scan becomes memory-bandwidth-cheap, which is the
     entire point of PQ; exactness is traded (quantization error), so
@@ -1923,81 +1833,22 @@ def pq_topk(
     equality."""
     if refine is not None and refine < k:
         raise ValueError("refine must be >= k")
-    spark = emb.sparkSession
-    # training is deterministic (hash-sampled seeding, fixed rounds),
-    # so callers serving many queries train ONCE and pass `codebooks`
-    # — the production shape (an index is built once, queried forever)
-    books = codebooks if codebooks is not None else train_pq_codebooks(
-        emb, vec_col, id_col, m=m, ksub=ksub
-    )
-    # the encoded codes ARE the index (what FAISS persists): callers
-    # serving many queries encode once, store the (id, code) table,
-    # and pass it back — the query path then scans m-byte codes, never
-    # re-runs the m·ksub argmin encode over the float corpus
-    if encoded is None:
-        encoded = pq_encode(emb, books, vec_col, id_col)
-
-    qdf = pq_query_luts(emb, books, query_ids, vec_col, id_col).select(
-        "qid", "lut"
-    )
-    scored = (
-        F.broadcast(qdf)
-        .join(encoded, F.col(id_col) != F.col("qid"))
-        .select(
-            "qid",
-            F.col(id_col).alias("cid"),
-            F.round(pq_adc_expr(), 6).alias("approx_dist"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy("approx_dist", "cid")
-    shortlist_n = refine if refine is not None else k
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= shortlist_n)
-        .select("qid", "cid", F.col("approx_dist").alias("dist"), "rank")
-    )
+    books, encoded = _pq_codes(emb, codebooks, encoded, m, ksub, vec_col, id_col)
+    luts = pq_query_luts(emb, books, query_ids, vec_col, id_col).select("qid", "lut")
+    short = _adc_rank(_adc_scan(luts, encoded, id_col), refine or k)
     if refine is None:
-        return shortlist
+        return short
+    return _refine(short, emb, query_ids, k, id_col, vec_col)
 
-    # exact re-rank of the |Q|·R shortlist: join the full-precision
-    # vectors back for just those rows (broadcast — the shortlist and
-    # the query set are both tiny by construction). The shortlist is
-    # persisted first: the compressed scan (encode + ADC, the heavy
-    # HOF expressions) must run exactly once, not re-execute inside
-    # the broadcast-exchange job.
-    shortlist = track_persist(shortlist)
-    qvec = emb.filter(
-        F.col(id_col).isin([int(q) for q in query_ids])
-    ).select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-    cvec = emb.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
-    exact = (
-        F.broadcast(shortlist.select("qid", "cid"))
-        .join(cvec, "cid")
-        .join(F.broadcast(qvec), "qid")
-        .select(
-            "qid",
-            "cid",
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("qv"),
-                        F.col("cv"),
-                        lambda x, y: (x.cast("double") - y.cast("double"))
-                        * (x.cast("double") - y.cast("double")),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-                6,
-            ).alias("exact_dist"),
-        )
-    )
-    w2 = Window.partitionBy("qid").orderBy("exact_dist", "cid")
-    return (
-        exact.withColumn("rank", F.row_number().over(w2).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "cid", F.col("exact_dist").alias("dist"), "rank")
-    )
+
+def _pq_codes(emb, codebooks, encoded, m, ksub, vec_col, id_col):
+    """The caller's (codebooks, encoded codes), trained / encoded from
+    `emb` when not given."""
+    if codebooks is None:
+        codebooks = train_pq_codebooks(emb, vec_col, id_col, m=m, ksub=ksub)
+    if encoded is None:
+        encoded = pq_encode(emb, codebooks, vec_col, id_col)
+    return codebooks, encoded
 
 
 def ivfpq_topk(
@@ -2026,7 +1877,13 @@ def ivfpq_topk(
     m-byte codes, not float vectors. Routing distances are rounded to
     6 dp before ranking (ties then break on cell id), so the probe
     set is stable under float summation order — the property the
-    audit oracle in queries/datapipe7.py relies on.
+    audit oracle in queries/datapipe7.py relies on. With every cell
+    probed the rows equal `pq_topk`'s on the same codebooks (pinned in
+    tests).
+
+    `nprobe=None` (the default) derives the routing depth from the
+    corpus via `auto_ivf_nprobe(metric="l2")`; a fixed nprobe is an
+    explicit routing-cap opt-in.
 
     by_residual=False (FAISS's non-residual IVFPQ option) keeps the
     codebooks corpus-global, so the SAME trained PQ index artifact
@@ -2037,104 +1894,27 @@ def ivfpq_topk(
     if refine is not None and refine < k:
         raise ValueError("refine must be >= k")
     if nprobe is None:
-        # r11 default: derive the routing depth from the corpus (the
-        # r10 bench showed fixed nprobe=2 serving recall@5 0.25 on the
-        # diffuse sf0.1 profile) — a fixed nprobe is an explicit
-        # routing-cap opt-in
         nprobe = auto_ivf_nprobe(
             emb, k=k, metric="l2",
             id_col=id_col, vec_col=vec_col, label_col=label_col,
         )
-    books = codebooks if codebooks is not None else train_pq_codebooks(
-        emb, vec_col, id_col, m=m, ksub=ksub
-    )
-    if encoded is None:
-        encoded = pq_encode(emb, books, vec_col, id_col)
+    books, encoded = _pq_codes(emb, codebooks, encoded, m, ksub, vec_col, id_col)
     if label_col not in encoded.columns:
         encoded = encoded.join(
             emb.select(F.col(id_col), F.col(label_col)), id_col
         )
-    cents = label_centroids(emb, label_col, vec_col)
-    q = emb.filter(
-        F.col(id_col).isin([int(x) for x in query_ids])
-    ).select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qe"))
-    cdist = F.aggregate(
-        F.zip_with(
-            "qe",
-            "centroid",
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    probe = _route(
+        _queries(emb, query_ids, id_col, vec_col),
+        label_centroids(emb, label_col, vec_col),
+        "l2",
+        nprobe,
     )
-    probe = (
-        q.join(F.broadcast(cents))
-        .select("qid", "cell", F.round(cdist, 6).alias("cd"))
-        .withColumn(
-            "cr",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy("cd", "cell")
-            ),
-        )
-        .filter(F.col("cr") <= nprobe)
-        .select("qid", "cell")
-    )
-    luts = pq_query_luts(emb, books, query_ids, vec_col, id_col).select(
-        "qid", "lut"
-    )
-    cand = (
-        probe.withColumnRenamed("cell", label_col)
-        .join(encoded, label_col)
-        .filter(F.col(id_col) != F.col("qid"))
-        .join(F.broadcast(luts), "qid")
-        .select(
-            "qid",
-            F.col(id_col).alias("cid"),
-            F.round(pq_adc_expr(), 6).alias("approx_dist"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy("approx_dist", "cid")
-    shortlist_n = refine if refine is not None else k
-    shortlist = (
-        cand.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= shortlist_n)
-        .select("qid", "cid", F.col("approx_dist").alias("dist"), "rank")
-    )
+    luts = pq_query_luts(emb, books, query_ids, vec_col, id_col).select("qid", "lut")
+    scored = _adc_scan(luts, encoded, id_col, probe=probe, label_col=label_col)
+    short = _adc_rank(scored, refine or k)
     if refine is None:
-        return shortlist
-    shortlist = track_persist(shortlist)
-    qvec = emb.filter(
-        F.col(id_col).isin([int(x) for x in query_ids])
-    ).select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-    cvec = emb.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
-    exact = (
-        F.broadcast(shortlist.select("qid", "cid"))
-        .join(cvec, "cid")
-        .join(F.broadcast(qvec), "qid")
-        .select(
-            "qid",
-            "cid",
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("qv"),
-                        F.col("cv"),
-                        lambda x, y: (x.cast("double") - y.cast("double"))
-                        * (x.cast("double") - y.cast("double")),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-                6,
-            ).alias("exact_dist"),
-        )
-    )
-    w2 = Window.partitionBy("qid").orderBy("exact_dist", "cid")
-    return (
-        exact.withColumn("rank", F.row_number().over(w2).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "cid", F.col("exact_dist").alias("dist"), "rank")
-    )
+        return short
+    return _refine(short, emb, query_ids, k, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -2437,67 +2217,26 @@ def ann_serve_topk(
     the online half of the index lifecycle, where queries arrive from
     a request stream instead of being members of the indexed corpus.
 
-    Same plan shape and same expressions as `ivfpq_topk`'s ADC stage
-    (routing distances rounded to 6 dp before ranking, ADC scores
-    rounded to 6 dp, ties break on candidate id), so for a query
-    vector that IS a corpus member the two paths return identical
-    rows — pinned in tests. Scoring is ADC-only: a pure PQ index
-    stores m-byte codes, not float vectors, so exact refine is
-    impossible at serve time by construction (FAISS needs
-    IndexRefineFlat — i.e. the originals — for the same reason);
-    callers wanting refine keep the corpus frame and use
-    `ivfpq_topk(refine=...)`. `exclude_self=False` keeps candidates
-    whose id equals the query id — external query ids share no
-    namespace with corpus ids, so dropping them would silently
+    The same stages as `ivfpq_topk`'s ADC path (`_route("l2")`,
+    `_adc_scan`, `_adc_rank`), so for a query vector that IS a corpus
+    member the two paths return identical rows — pinned in tests.
+    Scoring is ADC-only: a pure PQ index stores m-byte codes, not
+    float vectors, so exact refine is impossible at serve time by
+    construction (FAISS needs IndexRefineFlat — i.e. the originals —
+    for the same reason); callers wanting refine keep the corpus frame
+    and use `ivfpq_topk(refine=...)`. `exclude_self=False` keeps
+    candidates whose id equals the query id — external query ids share
+    no namespace with corpus ids, so dropping them would silently
     discard true neighbors."""
     encoded = index["encoded"]
-    books = index["codebooks"]
-    spark = encoded.sparkSession
-    if nprobe is None:
-        nprobe = int(index["nprobe"])
-    cents = spark.createDataFrame(
+    cents = encoded.sparkSession.createDataFrame(
         index["centroid_rows"], "cell int, centroid array<double>"
     )
-    q = queries.select(
-        F.col(qid_col).alias("qid"), F.col(vec_col).alias("qe")
+    q = queries.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("qe"))
+    probe = _route(q, cents, "l2", int(index["nprobe"]) if nprobe is None else nprobe)
+    luts = _query_frame_luts(queries, index["codebooks"], qid_col, vec_col)
+    scored = _adc_scan(
+        luts.select("qid", "lut"), encoded, id_col,
+        probe=probe, label_col=label_col, exclude_self=exclude_self,
     )
-    cdist = F.aggregate(
-        F.zip_with(
-            "qe",
-            "centroid",
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    probe = (
-        q.join(F.broadcast(cents))
-        .select("qid", "cell", F.round(cdist, 6).alias("cd"))
-        .withColumn(
-            "cr",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy("cd", "cell")
-            ),
-        )
-        .filter(F.col("cr") <= nprobe)
-        .select("qid", "cell")
-    )
-    luts = _query_frame_luts(queries, books, qid_col, vec_col).select(
-        "qid", "lut"
-    )
-    cand = probe.withColumnRenamed("cell", label_col).join(
-        encoded, label_col
-    )
-    if exclude_self:
-        cand = cand.filter(F.col(id_col) != F.col("qid"))
-    scored = cand.join(F.broadcast(luts), "qid").select(
-        "qid",
-        F.col(id_col).alias("cid"),
-        F.round(pq_adc_expr(), 6).alias("approx_dist"),
-    )
-    w = Window.partitionBy("qid").orderBy("approx_dist", "cid")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "cid", F.col("approx_dist").alias("dist"), "rank")
-    )
+    return _adc_rank(scored, k)

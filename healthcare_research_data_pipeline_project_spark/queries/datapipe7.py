@@ -1071,6 +1071,78 @@ def _pq_index(spark: SparkSession, sf_dir: str, t) -> tuple[list, str]:
     return _trained_artifact(spark, sf_dir, "pq-index-m16-k32", _build)
 
 
+def _pq_audit(cand: DataFrame, census: bool = False) -> DataFrame:
+    """Fused audit of a refined PQ route — a 10·k ADC shortlist
+    exact-re-ranked to k = _SQ_TOPK — over ONE candidate expansion
+    `cand` (qid, cid, dist = ADC, l2 = exact, [label]). All rankings
+    share the qid partitioning, so they ride one exchange: the ADC
+    shortlist (`rn_a`), the exact ranking for the true k-th (`rn_e`),
+    and the refine re-rank as a subset-first window (shortlist rows
+    order before the rest, so their row_numbers ARE the subset
+    ranking). One aggregation per qid then yields the returned-set
+    stats and the true k-th: no join, no persist.
+
+    `census=True` (a routed route) also reports the probed cells and
+    the candidate count, and takes the k-th at min(k, #candidates).
+    Queries without a k-th candidate are dropped."""
+    by = Window.partitionBy("qid")
+    base = cand.withColumn(
+        "rn_a", F.row_number().over(by.orderBy("dist", "cid"))
+    ).withColumn("rn_e", F.row_number().over(by.orderBy("l2", "cid")))
+    kth_rank, census_cols, census_out = F.lit(_SQ_TOPK), [], []
+    if census:
+        base = base.withColumn("n_cand", F.count(F.lit(1)).over(by))
+        kth_rank = F.least(F.lit(_SQ_TOPK), F.col("n_cand"))
+        census_cols = [
+            F.concat_ws(
+                ",",
+                F.transform(
+                    F.array_sort(F.collect_set("label")),
+                    lambda c: c.cast("string"),
+                ),
+            ).alias("probed_cells"),
+            F.max("n_cand").alias("n_cand"),
+        ]
+        census_out = [
+            "probed_cells", F.col("n_cand").cast("long").alias("n_candidates")
+        ]
+    shortlisted = F.col("rn_a") <= 10 * _SQ_TOPK
+    base = base.withColumn(
+        "rank",
+        F.row_number().over(
+            by.orderBy((~shortlisted).cast("int"), F.round("l2", 6), "cid")
+        ),
+    )
+    in_res = shortlisted & (F.col("rank") <= _SQ_TOPK)
+    ranks = F.when(in_res, F.col("rank"))
+    return (
+        base.groupBy("qid")
+        .agg(
+            *census_cols,
+            F.min(F.when(F.col("rn_e") == kth_rank, F.col("l2"))).alias("kth_l2"),
+            F.sum(in_res.cast("int")).cast("int").alias("n_returned"),
+            # refine re-ranks with exact L2, so the returned distance IS exact
+            F.max(F.when(in_res, F.round("l2", 6))).alias("worst_returned_l2"),
+            (
+                (F.min(ranks) == 1)
+                & (F.countDistinct(ranks) == F.sum(in_res.cast("int")))
+            ).alias("ranks_wellformed"),
+        )
+        .filter(F.col("kth_l2").isNotNull())
+        .select(
+            "qid",
+            *census_out,
+            "n_returned",
+            F.round("kth_l2", 4).cast("double").alias("true_kth_l2"),
+            "ranks_wellformed",
+            (
+                F.col("worst_returned_l2") <= F.col("kth_l2") * _PQ_SLACK + 1e-6
+            ).alias("within_slack"),
+        )
+        .orderBy("qid")
+    )
+
+
 def _pq_l2_sql(a: str, b: str) -> str:
     return (
         f"list_sum(list_transform(generate_series(1, len({a})),"
@@ -1108,114 +1180,20 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact L2 at sf0.001: 0.93. The INDEX — deterministic codebooks
     # plus the encoded (vec_id, code) table, what FAISS persists — is
     # built once per (session, corpus) and served from the trained-
-    # artifact cache afterwards: the query path scans m-byte codes and
-    # never re-runs the m·ksub argmin encode over the float corpus
-    # (and what a bench re-run measures is the QUERY path). The same
-    # artifact serves sim_ivfpq_topk (by_residual=False keeps the
-    # codebooks corpus-global).
+    # artifact cache afterwards, so what a bench re-run measures is the
+    # QUERY path. The same artifact serves sim_ivfpq_topk
+    # (by_residual=False keeps the codebooks corpus-global).
     books, codes_path = _pq_index(spark, sf_dir, t)
-    # Fused audit pass (r9): the PQ compressed scan (ADC over the
-    # stored codes), the refine re-rank, AND the brute-force true-kth
-    # audit all consume the SAME |Q|·N candidate expansion, so one
-    # broadcast join materializes it once and every ranking is a
-    # window over the same qid partitioning — one exchange, sorts
-    # only, versus the r8 shape's two candidate scans + a persist +
-    # three broadcast-exchange jobs. PQ semantics are unchanged: the
-    # shortlist is ranked purely by the code-space ADC distance
-    # (rounded to 6 like the operator), the refine re-rank purely by
-    # exact L2 within the shortlist; the exact column is computed per
+    # Fused audit: the ADC shortlist, the refine re-rank AND the
+    # brute-force true-kth audit all consume ONE |Q|·N candidate
+    # expansion (`_pq_audit`). The exact column is computed per
     # candidate anyway for the audit's independent true-kth, so the
-    # fusion adds no work the audit wasn't already paying. Scale note:
-    # a production serving path (no audit) drops the exact column and
-    # scans codes only — that path is `S.pq_topk`, tested in
-    # tests/test_pq.py; the window-per-qid shape is the same there.
+    # fusion adds no work. A production serving path (no audit) scans
+    # codes only — that path is `S.pq_topk`, tested in tests/test_pq.py.
     idx = _artifact_frame(spark, codes_path)  # (vec_id, code, embedding)
     qdf = S.pq_query_luts(t.embeddings, books, _SQ_QUERY_IDS)
-    l2 = F.aggregate(
-        F.zip_with(
-            "qv", "embedding",
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    cand = (
-        F.broadcast(qdf)
-        .join(idx, F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            F.col("vec_id").alias("cid"),
-            F.round(S.pq_adc_expr(), 6).alias("approx_dist"),
-            l2.alias("l2"),
-        )
-    )
-    # r14 fusion (guide §2.4): the r13 shape traversed the candidate
-    # expansion TWICE (the true-kth branch and the shortlist-re-rank
-    # branch) and re-attached them with a per-qid join. All three
-    # rankings share the qid partition key, so the shortlist re-rank
-    # rides the SAME exchange as the others via a subset-first window
-    # (shortlist rows order before non-shortlist rows, making their
-    # row_numbers exactly the subset ranking), and ONE aggregation per
-    # qid computes the returned-set stats AND the true k-th: one
-    # candidate traversal, one exchange, no join.
-    base = cand.withColumn(
-        "rn_a",
-        F.row_number().over(
-            Window.partitionBy("qid").orderBy("approx_dist", "cid")
-        ),
-    ).withColumn(
-        "rn_e",
-        F.row_number().over(
-            Window.partitionBy("qid").orderBy("l2", "cid")
-        ),
-    )
-    shortlisted = F.col("rn_a") <= 10 * _SQ_TOPK
-    base = base.withColumn(
-        "rank",
-        F.row_number().over(
-            Window.partitionBy("qid").orderBy(
-                (~shortlisted).cast("int"), F.round("l2", 6), "cid"
-            )
-        ),
-    )
-    in_res = shortlisted & (F.col("rank") <= _SQ_TOPK)
-    dist = F.round("l2", 6)
-    # audit summary: per query, the worst returned EXACT distance
-    # (refine re-ranks with exact L2, so `dist` IS exact) vs the true
-    # k-th best from the full candidate ranking. qids lacking a k-th
-    # row (fewer than k candidates) are dropped exactly as the old
-    # inner join dropped them.
-    return (
-        base.groupBy("qid")
-        .agg(
-            F.sum(in_res.cast("int")).cast("int").alias("n_returned"),
-            F.max(F.when(in_res, dist)).alias("worst_returned_l2"),
-            (
-                (F.min(F.when(in_res, F.col("rank"))) == 1)
-                & (F.max(F.when(in_res, F.col("rank"))) == _SQ_TOPK)
-                & (
-                    F.countDistinct(F.when(in_res, F.col("rank")))
-                    == _SQ_TOPK
-                )
-            ).alias("ranks_wellformed"),
-            F.min(
-                F.when(F.col("rn_e") == _SQ_TOPK, F.col("l2"))
-            ).alias("kth_l2"),
-        )
-        .filter(F.col("kth_l2").isNotNull())
-        .select(
-            "qid",
-            "n_returned",
-            F.round("kth_l2", 4).cast("double").alias("true_kth_l2"),
-            "ranks_wellformed",
-            (
-                F.col("worst_returned_l2")
-                <= F.col("kth_l2") * _PQ_SLACK + 1e-6
-            ).alias("within_slack"),
-        )
-        .orderBy("qid")
-    )
+    cand = S._adc_scan(qdf, idx, "vec_id", S._l2("qv", "embedding").alias("l2"))
+    return _pq_audit(cand)
 
 
 # ---------------------------------------------------------------------------
@@ -1346,130 +1324,15 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ivfpq-nprobe",
         lambda: S.auto_ivf_nprobe(t.embeddings, k=_SQ_TOPK, metric="l2"),
     )
-    q = t.embeddings.filter(F.col("vec_id").isin(_SQ_QUERY_IDS)).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    l2_c = F.aggregate(
-        F.zip_with(
-            "qe",
-            "centroid",
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    probe = (
-        q.join(F.broadcast(cents))
-        .select("qid", "cell", F.round(l2_c, 6).alias("cd"))
-        .withColumn(
-            "cr",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy("cd", "cell")
-            ),
-        )
-        .filter(F.col("cr") <= nprobe)
-        .select("qid", "cell")
-    )
+    q = S._queries(t.embeddings, _SQ_QUERY_IDS, "vec_id", "embedding")
     qdf = S.pq_query_luts(t.embeddings, books, _SQ_QUERY_IDS)
-    l2_exact = F.aggregate(
-        F.zip_with(
-            "qv",
-            "embedding",
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     # ONE candidate expansion restricted to the probed cells serves
-    # the ADC shortlist, the refine re-rank, AND the true-kth audit —
-    # the fused-audit shape sim_pq_topk established
-    cand = (
-        probe.withColumnRenamed("cell", "label")
-        .join(idx, "label")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .join(F.broadcast(qdf), "qid")
-        .select(
-            "qid",
-            "label",
-            F.col("vec_id").alias("cid"),
-            F.round(S.pq_adc_expr(), 6).alias("approx_dist"),
-            l2_exact.alias("l2"),
-        )
+    # the ADC shortlist, the refine re-rank, AND the true-kth audit
+    cand = S._adc_scan(
+        qdf, idx, "vec_id", "label", S._l2("qv", "embedding").alias("l2"),
+        probe=S._route(q, cents, "l2", nprobe),
     )
-    # r14 fusion (guide §2.4): the r13 shape persisted the candidate
-    # expansion and ran census + returned-set as two aggregate
-    # consumers re-attached by a per-qid join. All rankings share the
-    # qid partition key, so the shortlist re-rank rides the SAME
-    # exchange via a subset-first window (shortlist rows order before
-    # non-shortlist rows, so their row_numbers ARE the subset ranking)
-    # and ONE aggregation per qid computes the probe census, the true
-    # in-probe k-th, and the returned-set stats: one candidate
-    # traversal, one exchange, no persist, no join.
-    base = cand.withColumn(
-        "rn_a",
-        F.row_number().over(
-            Window.partitionBy("qid").orderBy("approx_dist", "cid")
-        ),
-    ).withColumn(
-        "rn_e",
-        F.row_number().over(Window.partitionBy("qid").orderBy("l2", "cid")),
-    ).withColumn(
-        "n_cand", F.count(F.lit(1)).over(Window.partitionBy("qid"))
-    )
-    shortlisted = F.col("rn_a") <= 10 * _SQ_TOPK
-    base = base.withColumn(
-        "rank",
-        F.row_number().over(
-            Window.partitionBy("qid").orderBy(
-                (~shortlisted).cast("int"), F.round("l2", 6), "cid"
-            )
-        ),
-    )
-    in_res = shortlisted & (F.col("rank") <= _SQ_TOPK)
-    dist = F.round("l2", 6)
-    return (
-        base.groupBy("qid")
-        .agg(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(F.collect_set("label")),
-                    lambda c: c.cast("string"),
-                ),
-            ).alias("probed_cells"),
-            F.max("n_cand").alias("n_cand"),
-            F.min(
-                F.when(
-                    F.col("rn_e")
-                    == F.least(F.lit(_SQ_TOPK), F.col("n_cand")),
-                    F.col("l2"),
-                )
-            ).alias("kth_l2"),
-            F.sum(in_res.cast("int")).cast("int").alias("n_returned"),
-            F.max(F.when(in_res, dist)).alias("worst_returned_l2"),
-            (
-                (F.min(F.when(in_res, F.col("rank"))) == 1)
-                & (
-                    F.countDistinct(F.when(in_res, F.col("rank")))
-                    == F.sum(in_res.cast("int"))
-                )
-            ).alias("ranks_wellformed"),
-        )
-        .select(
-            "qid",
-            "probed_cells",
-            F.col("n_cand").cast("long").alias("n_candidates"),
-            "n_returned",
-            F.round("kth_l2", 4).cast("double").alias("true_kth_l2"),
-            "ranks_wellformed",
-            (
-                F.col("worst_returned_l2")
-                <= F.col("kth_l2") * _PQ_SLACK + 1e-6
-            ).alias("within_slack"),
-        )
-        .orderBy("qid")
-    )
+    return _pq_audit(cand, census=True)
 
 
 # ---------------------------------------------------------------------------

@@ -307,6 +307,41 @@ def test_auto_ivf_nprobe_reaches_recall_floor(spark, emb):
     assert np_hi >= np1
 
 
+@pytest.fixture(scope="module")
+def pq_books(emb):
+    return S.train_pq_codebooks(emb, m=8, ksub=16)
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["ivfpq_all_cells", "ivfpq_all_cells_refine", "lsh_nprobe1_p6", "lsh_nprobe1_p9"],
+)
+def test_route_identities(spark, emb, pq_books, case):
+    # routes that are special cases of one another return identical
+    # rows, scores and ranks included: IVF-PQ probing every cell IS
+    # the unrouted PQ scan (same codebooks, with and without refine),
+    # and multiprobe LSH probing only the query's own bucket IS the
+    # single-bucket route
+    qids = list(range(8))
+    if case.startswith("ivfpq"):
+        refine = 200 if case.endswith("refine") else None
+        ncells = emb.select("label").distinct().count()
+        got = S.ivfpq_topk(
+            emb, qids, k=5, nprobe=ncells, codebooks=pq_books, refine=refine
+        )
+        want = S.pq_topk(emb, qids, k=5, codebooks=pq_books, refine=refine)
+    else:
+        planes = int(case.rsplit("_p", 1)[1])
+        got = S.lsh_multiprobe_topk(emb, qids, k=5, num_planes=planes, nprobe=1)
+        want = S.lsh_topk(emb, qids, k=5, num_planes=planes)
+    got_rows = sorted(tuple(r) for r in got.collect())
+    want_rows = sorted(tuple(r) for r in want.collect())
+    assert got.columns == want.columns
+    assert got_rows and got_rows == want_rows
+    if case.startswith("ivfpq"):
+        assert len(got_rows) == 5 * len(qids)
+
+
 def test_ann_index_save_load_roundtrip_serves_identically(
     spark, emb, tmp_path
 ):
