@@ -7,6 +7,14 @@ post-aggregation (distribution percentages, rate math,
 healthcare-api-main.py:323-331,527-576) moves *into* the plan so only
 final small results are collected.
 
+One action per endpoint: every handler here builds its whole response
+as one DataFrame plan and runs exactly one driver action on it (a
+cached RCA answer runs none). A response with several sections fuses
+them in-plan — grouping sets, tagged unions, cross-joined single-row
+aggregates — instead of the reference's one round-trip per section,
+which on Spark would re-plan and re-scan the same input and pay a job
+set-up for every section.
+
 Frames use the raw generator shape (generator.py): patients with
 birth_year (post-ETL), encounters with encounter_date/diagnosis_code.
 """
@@ -14,12 +22,12 @@ birth_year (post-ETL), encounters with encounter_date/diagnosis_code.
 from __future__ import annotations
 
 import datetime as dt
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.helpers import pct, rnd
-from ..operators.relational import distribution_pct
+from ..functions.helpers import pct, rnd, round_div
 
 SEARCH_LIMIT = 1000  # reference healthcare-api-main.py:268
 
@@ -63,19 +71,25 @@ def search_patients(
 def search_demographics(cohort: DataFrame) -> dict:
     """The endpoint's response shape: count + in-plan distributions
     (the reference computes these driver-side over collected rows,
-    `:527-576`)."""
-    n = cohort.count()
+    `:527-576`). One grouping-sets aggregate over the cohort yields
+    both distributions and the count, so all three come from the same
+    limited rows in one collect. grouping_id is 1 for the gender set,
+    2 for race and 3 for the grand total — absent on an empty cohort,
+    hence the count's default of 0."""
+    counts = cohort.groupingSets([["gender"], ["race"], []], "gender", "race").agg(
+        F.grouping_id().alias("gid"), F.count(F.lit(1)).alias("cnt")
+    )
+    total = F.sum("cnt").over(Window.partitionBy("gid"))
+    rows = counts.withColumn(
+        "pct", round_div(F.col("cnt") * 100, total, "pct")
+    ).collect()
     return {
-        "count": n,
+        "count": next((r["cnt"] for r in rows if r["gid"] == 3), 0),
         "demographics": {
             "gender_distribution": {
-                r["gender"]: r["pct"]
-                for r in distribution_pct(cohort, "gender").collect()
+                r["gender"]: r["pct"] for r in rows if r["gid"] == 1
             },
-            "race_distribution": {
-                r["race"]: r["pct"]
-                for r in distribution_pct(cohort, "race").collect()
-            },
+            "race_distribution": {r["race"]: r["pct"] for r in rows if r["gid"] == 2},
         },
     }
 
@@ -120,31 +134,70 @@ def quality_metrics(
     end_date: str,
 ) -> dict:
     """Composite quality snapshot (reference `:342-388`): readmission
-    rate, mean LOS, abnormal-lab rate over a reporting window — three
-    small aggregates, collected once."""
+    rate, mean LOS, abnormal-lab rate over a reporting window — the
+    encounter and lab aggregates are single rows, cross-joined and
+    collected once."""
     e = encounters.filter(F.col("encounter_date").between(start_date, end_date))
-    row = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        pct(
-            F.sum(F.col("readmission_flag").cast("int")),
-            F.count(F.lit(1)),
-            "readmission_rate",
-        ),
-        rnd(F.avg("length_of_stay"), "avg_los"),
-    ).collect()[0]
-    lab_row = labs.agg(
-        pct(
-            F.sum(F.col("abnormal_flag").cast("int")),
-            F.count(F.lit(1)),
-            "abnormal_rate",
+    row = (
+        e.agg(
+            F.count(F.lit(1)).alias("n"),
+            pct(
+                F.sum(F.col("readmission_flag").cast("int")),
+                F.count(F.lit(1)),
+                "readmission_rate",
+            ),
+            rnd(F.avg("length_of_stay"), "avg_los"),
         )
-    ).collect()[0]
+        .crossJoin(
+            labs.agg(
+                pct(
+                    F.sum(F.col("abnormal_flag").cast("int")),
+                    F.count(F.lit(1)),
+                    "abnormal_rate",
+                )
+            )
+        )
+        .collect()[0]
+    )
     return {
         "period": {"start": start_date, "end": end_date},
         "total_encounters": row["n"],
         "readmission_rate_pct": row["readmission_rate"],
         "average_length_of_stay": row["avg_los"],
-        "abnormal_lab_rate_pct": lab_row["abnormal_rate"],
+        "abnormal_lab_rate_pct": row["abnormal_rate"],
+    }
+
+
+def quality_benchmarks(encounters: DataFrame) -> dict:
+    """The /analytics/quality-metrics payload (reference `:342-390`):
+    all-time readmission rate and mean LOS as metric cards against the
+    reference's fixed benchmarks, from one collected aggregate."""
+    row = encounters.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("readmission_flag").cast("int")).alias("readm"),
+        F.avg("length_of_stay").alias("avg_los"),
+    ).collect()[0]
+    rate = round(row["readm"] / row["n"] * 100, 2) if row["n"] else 0.0
+    avg_los = round(float(row["avg_los"]), 1) if row["avg_los"] else 0.0
+    return {
+        "metrics": [
+            {
+                "metric_name": "30-Day Readmission Rate",
+                "value": rate,
+                "benchmark": 15.0,
+                "status": "Good" if rate < 15.0 else "Needs Improvement",
+                "trend": "stable",
+                "details": {"total_encounters": row["n"], "readmissions": row["readm"]},
+            },
+            {
+                "metric_name": "Average Length of Stay",
+                "value": avg_los,
+                "benchmark": 4.5,
+                "status": "Good" if avg_los and avg_los < 4.5 else "Needs Improvement",
+                "trend": "improving",
+                "details": {"unit": "days", "specialty_adjusted": False},
+            },
+        ]
     }
 
 
@@ -215,16 +268,26 @@ def system_status(
     cache=None,
 ) -> dict:
     """The admin-only /status endpoint (reference `:500-545`): table
-    row counts + cache stats. Counts are three count-star aggregates —
-    metadata-cheap on columnar sources at any scale."""
+    row counts + cache stats. Spark has no row-count metadata to read:
+    each count scans its table. The three tagged count-star aggregates
+    run as one union, so the scans share one action."""
     from .security import require_role
 
     require_role(token_payload, ["admin"])
+    tables = {
+        "total_patients": patients,
+        "total_encounters": encounters,
+        "total_lab_results": labs,
+    }
+    counts = reduce(
+        DataFrame.unionByName,
+        [
+            df.agg(F.lit(key).alias("key"), F.count(F.lit(1)).alias("n"))
+            for key, df in tables.items()
+        ],
+    ).collect()
+    n = {r["key"]: r["n"] for r in counts}
     return {
-        "database": {
-            "total_patients": patients.count(),
-            "total_encounters": encounters.count(),
-            "total_lab_results": labs.count(),
-        },
+        "database": {key: n[key] for key in tables},
         "cache": {"keys": len(cache._store) if cache is not None else 0},
     }

@@ -49,7 +49,6 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..sources.sinks import ResultCache, to_records
 from . import api
@@ -287,33 +286,7 @@ class HealthcareApi:
 
         user = self._authed(headers)
         require_role(user, ["researcher", "analyst", "admin"])
-        row = self.encounters.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("readmission_flag").cast("int")).alias("readm"),
-            F.avg("length_of_stay").alias("avg_los"),
-        ).collect()[0]
-        rate = round(row["readm"] / row["n"] * 100, 2) if row["n"] else 0.0
-        avg_los = round(float(row["avg_los"]), 1) if row["avg_los"] else 0.0
-        return {
-            "metrics": [
-                {
-                    "metric_name": "30-Day Readmission Rate",
-                    "value": rate,
-                    "benchmark": 15.0,
-                    "status": "Good" if rate < 15.0 else "Needs Improvement",
-                    "trend": "stable",
-                    "details": {"total_encounters": row["n"], "readmissions": row["readm"]},
-                },
-                {
-                    "metric_name": "Average Length of Stay",
-                    "value": avg_los,
-                    "benchmark": 4.5,
-                    "status": "Good" if avg_los and avg_los < 4.5 else "Needs Improvement",
-                    "trend": "improving",
-                    "details": {"unit": "days", "specialty_adjusted": False},
-                },
-            ]
-        }
+        return api.quality_benchmarks(self.encounters)
 
     def generate_report(self, headers: dict, report_type: str) -> tuple[int, dict]:
         """GET /api/v1/reports/generate/{type} (reference `:434-468`):

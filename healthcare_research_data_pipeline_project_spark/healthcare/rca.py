@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.relational import band_self_join, zscore_outliers
+from ..operators.relational import band_self_join
 
 
 def readmission_analysis(encounters: DataFrame, labs: DataFrame) -> DataFrame:
@@ -23,9 +23,6 @@ def readmission_analysis(encounters: DataFrame, labs: DataFrame) -> DataFrame:
     encounter_id/patient_id/encounter_date/discharge_date/
     diagnosis_code, labs with encounter_id/abnormal_flag.
     """
-    e = encounters.select(
-        "encounter_id", "patient_id", "diagnosis_code", "discharge_date"
-    )
     # reference band (healthcare-data-pipeline-main.py:282): the
     # readmission's ADMISSION date within [discharge, discharge + 30d]
     # of the index encounter — inclusive of day 0

@@ -1,8 +1,8 @@
 """Reporting service — parity with the reference's ReportingService
 (`healthcare-data-pipeline-main.py:371-489`): executive summary,
 demographic distributions, daily-volume stats. Each report is one
-DataFrame plan; the reference's four separate DB round-trips become
-four Spark jobs over the same cached warehouse."""
+DataFrame plan with one collect: the reference's four separate DB
+round-trips become four sections cross-joined into a single row."""
 
 from __future__ import annotations
 
@@ -80,8 +80,8 @@ def daily_volume_stats(encounters: DataFrame) -> DataFrame:
 # Composite report (reference ReportingService.generate_research_report,
 # healthcare-data-pipeline-main.py:371-389; type validation from the
 # endpoint, healthcare-api-main.py:442-448). Each section is one of the
-# plan-builders above; the dict assembly collects only final small
-# aggregates.
+# plan-builders above, folded to a single-row column; the sections are
+# cross-joined and the one resulting row is the only thing collected.
 # ---------------------------------------------------------------------------
 VALID_REPORT_TYPES = ("monthly", "quarterly", "annual", "executive")
 
@@ -104,19 +104,17 @@ def generate_research_report(
     report window, demographic metrics (gender × race with average
     age), utilization by encounter type, and daily-volume operational
     stats. Unknown types raise ValueError (the endpoint's 400). The
-    window anchors on the data's max encounter_date rather than
-    wall-clock GETDATE() so the report is deterministic and
-    backfill-safe."""
+    window anchors on the data's max encounter_date (an in-plan scalar
+    subquery) rather than wall-clock GETDATE() so the report is
+    deterministic and backfill-safe."""
     if report_type not in VALID_REPORT_TYPES:
         raise ValueError(
             f"Invalid report type. Must be one of: {list(VALID_REPORT_TYPES)}"
         )
     days = _REPORT_WINDOW_DAYS[report_type]
-    anchor = encounters.agg(
-        F.max(F.to_date("encounter_date")).alias("d")
-    ).collect()[0]["d"]
+    anchor = encounters.agg(F.max(F.to_date("encounter_date"))).scalar()
     window = encounters.filter(
-        F.to_date("encounter_date") >= F.date_sub(F.lit(anchor), days)
+        F.to_date("encounter_date") >= F.date_sub(anchor, days)
     )
     # accept both patient shapes: raw (birth_date) and post-ETL
     # (birth_year — the reference's dim_patient, :417-424)
@@ -125,26 +123,48 @@ def generate_research_report(
         if "birth_year" in patients.columns
         else F.year("birth_date")
     )
-    patient_metrics = [
-        r.asDict()
-        for r in (
-            patients.groupBy("gender", "race")
-            .agg(
-                F.countDistinct("patient_id").alias("patient_count"),
-                rnd(F.avg(F.lit(AGE_ANCHOR) - birth_year), "avg_age"),
-            )
-            .orderBy(F.desc("patient_count"), "gender", "race")
-            .collect()
-        )
-    ]
+    patient_metrics = patients.groupBy("gender", "race").agg(
+        F.countDistinct("patient_id").alias("patient_count"),
+        rnd(F.avg(F.lit(AGE_ANCHOR) - birth_year), "avg_age"),
+    )
+    row = (
+        _one_row(executive_summary(window), "executive_summary")
+        .crossJoin(_all_rows(patient_metrics, "patient_metrics"))
+        .crossJoin(_all_rows(encounters_by_type(window), "utilization"))
+        .crossJoin(_one_row(daily_volume_stats(window), "operational_metrics"))
+        .collect()[0]
+    )
     return {
         "report_type": report_type,
         "window_days": days,
-        "executive_summary": executive_summary(window).collect()[0].asDict(),
-        "patient_metrics": patient_metrics,
-        "utilization": [
-            r.asDict()
-            for r in encounters_by_type(window).orderBy("encounter_type").collect()
-        ],
-        "operational_metrics": daily_volume_stats(window).collect()[0].asDict(),
+        "executive_summary": row["executive_summary"].asDict(),
+        "patient_metrics": sorted(
+            (r.asDict() for r in row["patient_metrics"]),
+            key=lambda m: (
+                -m["patient_count"],
+                _nulls_first(m["gender"]),
+                _nulls_first(m["race"]),
+            ),
+        ),
+        "utilization": sorted(
+            (r.asDict() for r in row["utilization"]),
+            key=lambda u: _nulls_first(u["encounter_type"]),
+        ),
+        "operational_metrics": row["operational_metrics"].asDict(),
     }
+
+
+def _one_row(df: DataFrame, name: str) -> DataFrame:
+    """A single-row aggregate as one struct column `name`."""
+    return df.select(F.struct(*df.columns).alias(name))
+
+
+def _all_rows(df: DataFrame, name: str) -> DataFrame:
+    """Every row of a small aggregate as one array-of-structs column
+    `name`, in no particular order."""
+    return df.agg(F.collect_list(F.struct(*df.columns)).alias(name))
+
+
+def _nulls_first(v):
+    """Sort key placing None first, as Spark's ascending orderBy does."""
+    return (v is not None, v)
