@@ -36,13 +36,13 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..caching import track_persist
+from ..session import scratch_dir
 
 
 def _rm_local(path: str) -> None:
@@ -194,8 +194,9 @@ def connected_components(
     `checkpoint_dir` — round i reads dir[i%2] and overwrites
     dir[(i+1)%2], so peak checkpoint storage is 2 copies of the label
     table no matter how many rounds run, with no unpersist API needed.
-    `checkpoint_dir` defaults to a driver-local tempdir (right for
-    local mode and removed on the non-convergence raise); on a real
+    `checkpoint_dir` defaults to a fresh dir under the session's
+    scratch root (right for local mode; removed on the non-convergence
+    raise, else at exit with the root); on a real
     cluster pass a shared-FS path (hdfs://...) that executors can
     reach — the converged result stays backed by it, so retention is
     the caller's. The edge list is `persist()`-ed for cross-round
@@ -259,7 +260,7 @@ def connected_components(
     del probe_rows
 
     own_dir = checkpoint_dir is None
-    base = checkpoint_dir or tempfile.mkdtemp(prefix="hrdp_cc_")
+    base = checkpoint_dir or scratch_dir(spark, "cc_")
     ping = [os.path.join(base, "labels_a"), os.path.join(base, "labels_b")]
 
     converged = False
@@ -917,7 +918,7 @@ def pagerank(
         finally:
             e.unpersist()
     del tbl
-    base = checkpoint_dir or tempfile.mkdtemp(prefix="hrdp_pr_")
+    base = checkpoint_dir or scratch_dir(spark, "pr_")
     ping = [os.path.join(base, "ranks_a"), os.path.join(base, "ranks_b")]
 
     try:
@@ -1030,9 +1031,9 @@ def pagerank(
                     converged = True
                     break
         # the returned frame stays backed by the checkpoint parquet, so
-        # the dir must outlive this call (own_dir tempdirs fall to the
-        # OS tempdir policy; caller-supplied paths follow the caller's
-        # retention, exactly like connected_components)
+        # the dir must outlive this call (own_dir tempdirs go with the
+        # session's scratch root at exit; caller-supplied paths follow
+        # the caller's retention, exactly like connected_components)
         return ranks.select(
             "node", "rank", F.lit(converged).alias("converged")
         )
@@ -1141,7 +1142,7 @@ def kcore(
             sym.unpersist()
     del probe_rows
 
-    base = checkpoint_dir or tempfile.mkdtemp(prefix="hrdp_kcore_")
+    base = checkpoint_dir or scratch_dir(spark, "kcore_")
     ping = [os.path.join(base, "alive_a"), os.path.join(base, "alive_b")]
 
     try:

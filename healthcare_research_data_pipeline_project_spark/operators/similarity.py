@@ -1919,13 +1919,12 @@ def ivfpq_topk(
 
 # ---------------------------------------------------------------------------
 # ANN index persistence — the cross-session half of the index
-# lifecycle (r12). The session-scoped trained-artifact cache
-# (queries/datapipe7.py::_trained_artifact) handles serve-don't-
-# rebuild WITHIN a session; these two functions make the trained
-# IVF-PQ index a durable artifact a fresh session (or another
-# cluster) loads and serves without retraining — what FAISS's
-# write_index/read_index does, expressed as parquet + one JSON
-# manifest. Commit protocol is the IVM manifest discipline
+# lifecycle (r12). The session memo (session.py::memo) handles
+# serve-don't-rebuild of trained artifacts WITHIN a session; these
+# two functions make the trained IVF-PQ index a durable artifact a
+# fresh session (or another cluster) loads and serves without
+# retraining — what FAISS's write_index/read_index does, expressed as
+# parquet + one JSON manifest. Commit protocol is the IVM manifest discipline
 # (operators/ivm.py): every data file is FULLY written into a
 # versioned subdirectory BEFORE one atomic `os.rename` of the tiny
 # manifest, so readers never observe a half-written index and a

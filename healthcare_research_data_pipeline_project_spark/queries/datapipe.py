@@ -27,7 +27,8 @@ from ..functions.text import (
 )
 from ..operators import dedup as D
 from ..operators import similarity as S
-from ..tables import load_tables
+from ..session import memo
+from ..tables import load_tables, table_path
 from . import register
 
 _TOKS = DUCK_TOKENS.format(text="text")
@@ -760,20 +761,16 @@ def sim_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # frozen output of auto_lsh_params_for(embeddings) at the oracle SF
 # (sf0.01, n=500, measured kth-cos p25 ≈ 0.27 → planes=2, nprobe=3)
 _AUTO_PLANES, _AUTO_PROBES = 2, 3
-_AUTO_CACHE: dict[tuple[str, str], tuple[int, int]] = {}
-
-
-def _auto_knobs(spark: SparkSession, sf_dir: str, emb) -> tuple[int, int]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _AUTO_CACHE:
-        _AUTO_CACHE[key] = S.auto_lsh_params_for(emb, k=_TOPK)
-    return _AUTO_CACHE[key]
 
 
 @register("sim_lsh_auto_topk", _mp_oracle(_AUTO_PLANES, _AUTO_PROBES))
 def sim_lsh_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
-    planes, nprobe = _auto_knobs(spark, sf_dir, t.embeddings)
+    planes, nprobe = memo(
+        spark, "auto-lsh", sf_dir,
+        lambda: S.auto_lsh_params_for(t.embeddings, k=_TOPK),
+        [table_path(sf_dir, "embeddings")],
+    )
     return S.lsh_multiprobe_topk(
         t.embeddings, _QUERY_IDS, k=_TOPK, num_planes=planes, nprobe=nprobe
     )

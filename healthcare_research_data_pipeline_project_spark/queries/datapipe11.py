@@ -57,7 +57,8 @@ from ..functions.text import DUCK_TOKENS, duck_shingles
 from ..operators import dedup as D
 from ..operators.scale import bloom_prefilter, prefix_sum
 from ..operators.similarity import _dot
-from ..tables import load_tables
+from ..session import memo
+from ..tables import load_tables, table_path
 from . import register
 
 _BLOOM_REGION = "EUROPE"
@@ -536,16 +537,17 @@ def _routed_range_oracle() -> str:
 @register("sim_ivf_range_search_routed", _routed_range_oracle())
 def sim_ivf_range_search_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import auto_ivf_nprobe, ivf_range_search
-    from .datapipe7 import _ivf_centroids_frame, _trained_artifact
+    from .datapipe7 import _ivf_centroids_frame
 
     t = load_tables(spark, sf_dir)
     # depth derived once per (session, corpus) — serve-don't-rebuild,
     # the ivfpq lifecycle; at the oracle SF the derivation lands on
     # _RANGE_ROUTED_NPROBE (frozen in the oracle SQL above). Centroids
     # served from the same trained artifact (r14).
-    nprobe = _trained_artifact(
-        spark, sf_dir, "ivf-range-nprobe",
+    nprobe = memo(
+        spark, "ivf-range-nprobe", sf_dir,
         lambda: auto_ivf_nprobe(t.embeddings, metric="cos", tau=_RANGE_TAU),
+        [table_path(sf_dir, "embeddings")],
     )
     return ivf_range_search(
         t.embeddings,

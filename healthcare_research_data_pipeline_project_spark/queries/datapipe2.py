@@ -22,7 +22,8 @@ from ..caching import track_persist
 from ..functions.helpers import duck_round_div, round_div
 from ..functions.text import DUCK_TOKENS, duck_shingles, shingles, tokens
 from ..operators.scale import duck_hash_bucket, hash_bucket, prefix_sum
-from ..tables import load_tables
+from ..session import memo, scratch_dir
+from ..tables import load_tables, table_path
 from . import register
 
 _TOKS = DUCK_TOKENS.format(text="text")
@@ -554,25 +555,18 @@ def _stored_cluster_state(
     `docs`' band index and cluster assignments, built ONCE per
     (session, corpus) into on-disk parquet artifacts and read back —
     the serve-don't-rebuild lifecycle the ANN queries use
-    (`_trained_artifact`). In production these are durable warehouse
-    tables; rebuilding them inside every timed run would charge the
-    maintenance query for the one-time corpus indexing it exists to
-    avoid. Returns (index, stored_assignments) as parquet-backed
-    frames."""
+    (`session.memo`, fingerprinted on the documents table). In
+    production these are durable warehouse tables; rebuilding them
+    inside every timed run would charge the maintenance query for the
+    one-time corpus indexing it exists to avoid. Returns (index,
+    stored_assignments) as parquet-backed frames."""
     from .datapipe import _LSH_BANDS, _LSH_HASHES
-    from .datapipe7 import _artifact_dir, _artifact_frame, _trained_artifact
 
     def _build():
-        import hashlib
-
         from ..operators import dedup as D
         from ..operators.graph import dedup_clusters
 
-        # SF-tag the dirs (like _pq_index) so a session touching two
-        # corpora never mode("overwrite")s a directory whose memoized
-        # _artifact_frame listing is still being served (r13 crash).
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-        idx_path = _artifact_dir(spark, f"{kind}_index_{tag}")
+        idx_path = scratch_dir(spark, f"{kind}_index_")
         # rebalance both artifact writes (guide §6): the band index is
         # map-only off the spread source scan and would otherwise land
         # as one KB-sized file per scan task, charging every
@@ -582,16 +576,16 @@ def _stored_cluster_state(
             docs, "text", "doc_id", _LSH_HASHES, _LSH_BANDS
         ).hint("rebalance").write.mode("overwrite").parquet(idx_path)
         idx = spark.read.parquet(idx_path)
-        asg_path = _artifact_dir(spark, f"{kind}_clusters_{tag}")
+        asg_path = scratch_dir(spark, f"{kind}_clusters_")
         dedup_clusters(docs, _index_pairs(idx)).hint("rebalance").write.mode(
             "overwrite"
         ).parquet(asg_path)
-        return idx_path, asg_path
+        return idx, spark.read.parquet(asg_path)
 
-    idx_path, asg_path = _trained_artifact(
-        spark, sf_dir, f"{kind}-cluster-state", _build
+    return memo(
+        spark, f"{kind}-cluster-state", sf_dir, _build,
+        [table_path(sf_dir, "documents")],
     )
-    return _artifact_frame(spark, idx_path), _artifact_frame(spark, asg_path)
 
 
 @register("dedup_incremental_clusters", _dedup_clusters_oracle())

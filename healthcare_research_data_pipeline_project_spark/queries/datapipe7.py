@@ -70,76 +70,11 @@ from ..functions.helpers import (
 from ..functions.text import DUCK_TOKENS, tokens
 from ..operators import similarity as S
 from ..operators.scale import morton16 as _morton16
-from ..tables import load_tables
+from ..session import memo, scratch_dir
+from ..tables import load_tables, table_path
 from . import register
 
 _TOKS = DUCK_TOKENS.format(text="text")
-
-#: Trained-artifact cache: quantizer centroids / PQ codebooks are
-#: DETERMINISTIC (content-hash sampling, fixed seeding and rounds), so
-#: one (session, corpus, kind) trains exactly once and every later
-#: invocation serves the trained artifact — the production index
-#: lifecycle (build once, query forever), and what a best-of-N bench
-#: re-run should measure is the QUERY path, not repeated training.
-_TRAINED: dict[tuple[str, str, str], object] = {}
-
-
-def _trained_artifact(spark: SparkSession, sf_dir: str, kind: str, build):
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    if key not in _TRAINED:
-        _TRAINED[key] = build()
-    return _TRAINED[key]
-
-
-_ARTIFACT_FRAMES: dict[tuple[str, str], DataFrame] = {}
-
-
-def _artifact_frame(spark: SparkSession, path: str) -> DataFrame:
-    """`spark.read.parquet(path)` memoized per (application, path) —
-    for BUILD-ONCE serving artifacts only (`_trained_artifact` /
-    `_artifact_dir` outputs, immutable for the session once written).
-    Every fresh read plans a footer/schema job plus a file listing
-    per invocation (r13 measured 3-4 one-task jobs per maintenance
-    call from artifact re-reads alone); the memoized frame keeps the
-    resolved relation while every ACTION still scans the parquet
-    bytes from disk — plans are lazy, so this caches no results. Do
-    NOT route evolving artifact chains (e.g. the append-segment ANN
-    index) through this: their file listing must refresh per read.
-    Entries from earlier (stopped) SparkSessions are evicted on the
-    first call of a new application, so session-restarting processes
-    (test suites) don't accumulate dead frame handles (ADVICE r13)."""
-    app_id = spark.sparkContext.applicationId
-    stale = [k for k in _ARTIFACT_FRAMES if k[0] != app_id]
-    for k in stale:
-        del _ARTIFACT_FRAMES[k]
-    key = (app_id, path)
-    if key not in _ARTIFACT_FRAMES:
-        _ARTIFACT_FRAMES[key] = spark.read.parquet(path)
-    return _ARTIFACT_FRAMES[key]
-
-
-_ARTIFACT_CLEANUPS: set[str] = set()
-
-
-def _artifact_dir(spark: SparkSession, name: str) -> str:
-    """Per-(application, corpus) on-disk artifact location under the
-    system tempdir, registered for removal at interpreter exit — the
-    index/non-keeper parquets are session-scoped serving artifacts,
-    not durable state, and were previously never cleaned (r9
-    ADVICE)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"hrdp_artifacts_{spark.sparkContext.applicationId}",
-    )
-    if root not in _ARTIFACT_CLEANUPS:
-        _ARTIFACT_CLEANUPS.add(root)
-        atexit.register(shutil.rmtree, root, True)
-    return os.path.join(root, name)
 
 # ---------------------------------------------------------------------------
 # Degree distribution of the bipartite part–supplier graph.
@@ -1019,17 +954,15 @@ def ml_kmeans_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_SLACK = 1.25
 
 
-def _pq_index(spark: SparkSession, sf_dir: str, t) -> tuple[list, str]:
+def _pq_index(spark: SparkSession, sf_dir: str, t) -> tuple[list, DataFrame]:
     """The trained PQ index (codebooks + encoded codes + flat vectors,
     what FAISS persists), built once per (session, corpus) and shared
-    by sim_pq_topk and sim_ivfpq_topk."""
+    by sim_pq_topk and sim_ivfpq_topk. Returns the codebooks and the
+    parquet-backed (vec_id, code, embedding, label, cell) frame."""
 
-    def _build() -> tuple[list, str]:
-        import hashlib
-
+    def _build() -> tuple[list, DataFrame]:
         books = S.train_pq_codebooks(t.embeddings, m=16, ksub=32)
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-        path = _artifact_dir(spark, f"pq_codes_m16_k32_{tag}")
+        path = scratch_dir(spark, "pq_codes_m16_k32_")
         # the index stores codes AND the flat vectors (FAISS's
         # IndexRefineFlat keeps both: codes for the compressed scan,
         # flat vectors for the refine re-rank) AND the coarse-cell id
@@ -1058,7 +991,8 @@ def _pq_index(spark: SparkSession, sf_dir: str, t) -> tuple[list, str]:
         # against (r9 ADVICE). Pin the index to the source corpus
         # row-for-row at build time — one cheap count per (session,
         # corpus).
-        n_idx = spark.read.parquet(path).count()
+        idx = spark.read.parquet(path)
+        n_idx = idx.count()
         n_src = t.embeddings.count()
         if n_idx != n_src:
             raise RuntimeError(
@@ -1066,9 +1000,11 @@ def _pq_index(spark: SparkSession, sf_dir: str, t) -> tuple[list, str]:
                 f"source embeddings — true-kth audit would be blind to "
                 f"the loss"
             )
-        return books, path
+        return books, idx
 
-    return _trained_artifact(spark, sf_dir, "pq-index-m16-k32", _build)
+    return memo(
+        spark, "pq-index-m16-k32", sf_dir, _build, [table_path(sf_dir, "embeddings")]
+    )
 
 
 def _pq_audit(cand: DataFrame, census: bool = False) -> DataFrame:
@@ -1183,14 +1119,13 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # artifact cache afterwards, so what a bench re-run measures is the
     # QUERY path. The same artifact serves sim_ivfpq_topk
     # (by_residual=False keeps the codebooks corpus-global).
-    books, codes_path = _pq_index(spark, sf_dir, t)
+    books, idx = _pq_index(spark, sf_dir, t)
     # Fused audit: the ADC shortlist, the refine re-rank AND the
     # brute-force true-kth audit all consume ONE |Q|·N candidate
     # expansion (`_pq_audit`). The exact column is computed per
     # candidate anyway for the audit's independent true-kth, so the
     # fusion adds no work. A production serving path (no audit) scans
     # codes only — that path is `S.pq_topk`, tested in tests/test_pq.py.
-    idx = _artifact_frame(spark, codes_path)  # (vec_id, code, embedding)
     qdf = S.pq_query_luts(t.embeddings, books, _SQ_QUERY_IDS)
     cand = S._adc_scan(qdf, idx, "vec_id", S._l2("qv", "embedding").alias("l2"))
     return _pq_audit(cand)
@@ -1285,14 +1220,15 @@ def _ivf_centroids_frame(spark: SparkSession, sf_dir: str, t) -> DataFrame:
     two aggregations over the corpus (r14, guide §2.4)."""
     from ..operators.similarity import label_centroids
 
-    cent_rows = _trained_artifact(
+    cent_rows = memo(
         spark,
-        sf_dir,
         "ivf-centroids",
+        sf_dir,
         lambda: [
             (int(r["cell"]), [float(x) for x in r["centroid"]])
             for r in label_centroids(t.embeddings).collect()
         ],
+        [table_path(sf_dir, "embeddings")],
     )
     return spark.createDataFrame(
         cent_rows, "cell int, centroid array<double>"
@@ -1307,8 +1243,7 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (session, corpus)): by_residual=False keeps the codebooks
     # corpus-global, so the two routes genuinely share one index — the
     # FAISS deployment shape
-    books, codes_path = _pq_index(spark, sf_dir, t)
-    idx = _artifact_frame(spark, codes_path)
+    books, idx = _pq_index(spark, sf_dir, t)
     # the coarse quantizer's centroids are trained once per (session,
     # corpus) too (serve-don't-rebuild): ≤#cells rows collected at
     # build, re-materialized as a literal frame per invocation
@@ -1318,11 +1253,12 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle SF the derivation lands on _IVFPQ_NPROBE (frozen above,
     # pinned by test_auto_ivf_frozen_nprobe), keeping the static
     # oracle SQL and the runtime route on the same probe set.
-    nprobe = _trained_artifact(
+    nprobe = memo(
         spark,
-        sf_dir,
         "ivfpq-nprobe",
+        sf_dir,
         lambda: S.auto_ivf_nprobe(t.embeddings, k=_SQ_TOPK, metric="l2"),
+        [table_path(sf_dir, "embeddings")],
     )
     q = S._queries(t.embeddings, _SQ_QUERY_IDS, "vec_id", "embedding")
     qdf = S.pq_query_luts(t.embeddings, books, _SQ_QUERY_IDS)
@@ -1443,8 +1379,8 @@ def dedup_semantic_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample = hash_sample(t.embeddings, "vec_id", pct=25, salt="km")
         return kmeans(sample, k=k_cells, max_iter=4)[1]
 
-    centroids = _trained_artifact(
-        spark, sf_dir, f"km-cells-{k_cells}", _train
+    centroids = memo(
+        spark, f"km-cells-{k_cells}", sf_dir, _train, [table_path(sf_dir, "embeddings")]
     )
     # persist: the assignment is consumed by the coverage count AND
     # (twice) by the recapture join below — one map-side evaluation of
@@ -2082,9 +2018,7 @@ def _pagerank_canonical_oracle() -> str:
     """
 
 
-def _canonical_reps(
-    spark: SparkSession, nk_path: str, embeddings: DataFrame
-) -> DataFrame:
+def _canonical_reps(non_keepers: DataFrame, embeddings: DataFrame) -> DataFrame:
     """Representatives = embeddings MINUS the parquet non-keeper
     artifact, as a LEFT ANTI join with NO forced broadcast: the
     non-keeper set is duplication-sized (commonly 20-50% of a crawl
@@ -2097,9 +2031,7 @@ def _canonical_reps(
     test can assert on the reps frame directly; the downstream
     pagerank's driver fast-path rebuilds the final frame, hiding this
     join from its plan)."""
-    non_keepers = _artifact_frame(spark, nk_path).withColumnRenamed(
-        "node", "vec_id"
-    )
+    non_keepers = non_keepers.withColumnRenamed("node", "vec_id")
     return embeddings.join(non_keepers, "vec_id", "left_anti")
 
 
@@ -2127,15 +2059,12 @@ def g_pagerank_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the kNN ranking to representatives is just a pre-scan anti-join
     # on the N-row input (the oracle's reps-join-before-ROW_NUMBER,
     # expressed as a pushdown).
-    def _canonicalize() -> str:
-        import hashlib
-
+    def _canonicalize() -> DataFrame:
         cc_edges = S.embedding_near_dup_pairs(
             t.embeddings, threshold=_TRI_T
         ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         comp = connected_components(cc_edges, "src", "dst")
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-        path = _artifact_dir(spark, f"canonical_nonkeepers_{tag}")
+        path = scratch_dir(spark, "canonical_nonkeepers_")
         # rebalanced write — NOT coalesce(1): the non-keeper set is
         # duplication-sized; the AQE rebalance keeps the write parallel
         # when the set is large while collapsing the tiny-SF case to
@@ -2148,15 +2077,16 @@ def g_pagerank_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(path)
         )
-        return path
+        return spark.read.parquet(path)
 
-    nk_path = _trained_artifact(
-        spark, sf_dir, "canonical-nonkeepers-path", _canonicalize
+    non_keepers = memo(
+        spark, "canonical-nonkeepers", sf_dir, _canonicalize,
+        [table_path(sf_dir, "embeddings")],
     )
     # stage 2 — bounded-degree kNN ranking restricted to the reps:
     # broadcast anti-join against the artifact (the embeddings side
     # never shuffles; plan pinned in tests/test_plans.py)
-    reps = _canonical_reps(spark, nk_path, t.embeddings)
+    reps = _canonical_reps(non_keepers, t.embeddings)
     e = S.knn_graph(reps, k=_KNNPR_K).select("src", "dst")
     sym = (
         e.select(

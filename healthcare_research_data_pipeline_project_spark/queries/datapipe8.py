@@ -46,27 +46,23 @@ from ..functions.helpers import (
     sum_cents,
 )
 from ..functions.text import DUCK_TOKENS, tokens
-from ..tables import load_tables
+from ..session import memo, scratch_dir
+from ..tables import load_tables, table_path
 from . import register
 
 _TOKS = DUCK_TOKENS.format(text="text")
 
-# IVM demo views live in ONE driver tempdir per (app, sf_dir, kind),
-# reused across invocations (bench best-of-N, mirror, tests): each call
-# re-inits + refreshes into new versions of the SAME root, and the
-# commit protocol's keep_last=2 retention bounds the footprint — no
-# per-call directory-tree leak (ADVICE r5). The returned frame stays
-# backed by the root, which outlives the call by construction.
-_IVM_VIEW_ROOTS: dict[tuple[str, str, str], str] = {}
-
-
 def _ivm_view_path(spark: SparkSession, sf_dir: str, kind: str) -> str:
-    import tempfile
-
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    if key not in _IVM_VIEW_ROOTS:
-        _IVM_VIEW_ROOTS[key] = tempfile.mkdtemp(prefix=f"hrdp_{kind}_") + "/view"
-    return _IVM_VIEW_ROOTS[key]
+    """The IVM demo view's location: one `scratch_dir` per (sf_dir,
+    kind), memoized on the orders table's content. Re-invocations
+    re-refresh the SAME view (the commit protocol's keep_last=2
+    retention bounds it); changed orders get a fresh view; the scratch
+    root goes at exit."""
+    return memo(
+        spark, "ivm-view", (sf_dir, kind),
+        lambda: scratch_dir(spark, f"{kind}_") + "/view",
+        [table_path(sf_dir, "orders")],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -309,10 +305,11 @@ def ivm_priority_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = t.orders.filter(F.col("o_orderdate") >= _IVM_SPLIT)
     path = _ivm_view_path(spark, sf_dir, "ivm")
     # IVM semantics on re-invocation: the maintained view is SERVED,
-    # not rebuilt — init only when the (content-keyed, per-session)
-    # view doesn't exist yet, and the ledgered batch_id makes the
-    # delta merge exactly-once, so a bench best-of-N re-run pays the
-    # read path only (the entire point of incremental maintenance)
+    # not rebuilt — init only when the view for this orders content
+    # (`_ivm_view_path` keys it on the table's fingerprint) doesn't
+    # exist yet, and the ledgered batch_id makes the delta merge
+    # exactly-once, so a bench best-of-N re-run pays the read path
+    # only (the entire point of incremental maintenance)
     if current_version(path) < 1:
         ivm.init_agg_view(
             base, path, ["o_orderpriority"], ["o_totalprice"]
@@ -368,7 +365,8 @@ def ivm_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.versioned import current_version
 
     # serve-don't-rebuild on re-invocation (see ivm_priority_rollup):
-    # init once per content-keyed view; the ledgered refresh no-ops on
+    # init once per view, and `_ivm_view_path` gives changed orders
+    # content a fresh one; the ledgered refresh no-ops on
     # redelivery, so re-runs exercise the serving path only
     if current_version(path) < 1:
         ivm.init_agg_view(base, path, keys, meas, distinct_cols=dcols)

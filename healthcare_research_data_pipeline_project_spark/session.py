@@ -1,4 +1,4 @@
-"""SparkSession factory.
+"""SparkSession factory and session-scoped state.
 
 The reference delegates all execution to an RDBMS plus pandas
 (`healthcare-data-pipeline-main.py:495-505` builds a SQLAlchemy engine);
@@ -9,11 +9,20 @@ Scale posture: these defaults are written for a real cluster and merely
 raise `spark.sql.shuffle.partitions` (or rely on AQE coalescing from a
 high initial number), keep AQE skew-join on, and leave broadcast
 thresholds to AQE runtime stats.
+
+Session-scoped state lives here too: `memo` (the one store for values
+built once per application), `fingerprint` (the one rule for "this
+content changed") and `scratch_dir` (the one temp-dir policy).
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import stat
+import tempfile
+from typing import Any, Callable, Sequence
 
 from pyspark.sql import SparkSession
 
@@ -121,3 +130,84 @@ def _local_heap_gib(want_gib: int = 24) -> int:
     except OSError:
         pass
     return min(want_gib, 4)
+
+
+_memo: dict[tuple[str, Any], tuple[tuple | None, Any]] = {}
+_memo_app: str | None = None
+
+
+def memo(
+    spark: SparkSession, kind: str, key: Any, build: Callable, paths: Sequence = ()
+) -> Any:
+    """The session-scoped memo: `build()` once, then serve its value.
+
+    - Key: `(kind, key)`. One entry per key; a rebuild replaces it.
+    - Content: the entry also stores `fingerprint` of every path in
+      `paths`. A hit returns the stored value only while those
+      fingerprints still match; otherwise the value is rebuilt. If a
+      path changes while `build()` runs (a source rewritten mid-build,
+      or an output the build itself creates), the entry is stored
+      already stale and the next call rebuilds: one extra build, never
+      a stale hit.
+    - Eviction: the first call from a new Spark application drops
+      every entry, so session-restarting processes (test suites) hold
+      no handles into stopped sessions.
+
+    Memoized values are build-once serving state: lazy relations
+    (every action still scans the files), trained artifacts, knobs and
+    scratch locations. They cache no query results, and every build is
+    deterministic in its sources (content-hash sampling, fixed seeds
+    and rounds), so serving an entry equals rebuilding it."""
+    global _memo_app
+    app = spark.sparkContext.applicationId
+    if app != _memo_app:
+        _memo.clear()
+        _memo_app = app
+    fp = tuple(map(fingerprint, paths))
+    hit = _memo.get((kind, key))
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    value = build()
+    stale = fp != tuple(map(fingerprint, paths))
+    _memo[(kind, key)] = (None if stale else fp, value)
+    return value
+
+
+def fingerprint(path: str) -> tuple:
+    """The engine's one rule for "this content changed": the absolute
+    path plus `(mtime_ns, size)` for a file; the count, max `mtime_ns`
+    and total size of the data files below a directory (recursive;
+    files named `_*` or `.*` are metadata by the parquet convention and
+    skipped); `None` for a missing path."""
+    path = os.path.abspath(path)
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (path, (st.st_mtime_ns, st.st_size))
+        data = [
+            os.stat(os.path.join(root, f))
+            for root, _dirs, files in os.walk(path)
+            for f in files
+            if not f.startswith(("_", "."))
+        ]
+    except OSError:  # missing, or a file vanished mid-walk
+        return (path, None)
+    mtimes = [d.st_mtime_ns for d in data]
+    return (path, (len(data), max(mtimes, default=0), sum(d.st_size for d in data)))
+
+
+def scratch_dir(spark: SparkSession, prefix: str) -> str:
+    """A new, unique directory under this application's temp root.
+    The root lives in the system tempdir and is removed at interpreter
+    exit: index artifacts, IVM views and graph checkpoints are
+    session-scoped serving state, not durable data, and a fresh
+    directory per build means no rebuild overwrites files a live frame
+    still reads."""
+    root = memo(spark, "scratch-root", None, _scratch_root)
+    return tempfile.mkdtemp(prefix=prefix, dir=root)
+
+
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="hrdp_artifacts_")
+    atexit.register(shutil.rmtree, root, True)
+    return root

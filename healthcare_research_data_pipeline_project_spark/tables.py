@@ -19,6 +19,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import fingerprint, memo
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -52,17 +54,16 @@ SPREAD_TABLES = {"orders", "lineitem", "events", "documents", "embeddings"}
 
 def _split_cache_dir(path: str, nparts: int) -> str:
     """Content-keyed location of the multi-file relayout of `path`:
-    invalidated by source mtime/size (regenerated testdata) and by the
-    split count (different CPU budget). The dir name leads with a
-    stable source-path id so stale siblings of the SAME source
-    (regenerated testdata, changed CPU count) are identifiable and
-    pruned on the next build — without it the cache grew a full table
-    copy per (mtime, size, nparts) forever (r9 ADVICE)."""
+    invalidated by the source's `session.fingerprint` (regenerated or
+    rewritten-in-place testdata) and by the split count (different CPU
+    budget). The dir name leads with a stable source-path id so stale
+    siblings of the SAME source (regenerated testdata, changed CPU
+    count) are identifiable and pruned on the next build — without it
+    the cache grew a full table copy per vintage forever (r9 ADVICE)."""
     import hashlib
 
-    st = os.stat(path)
     src = hashlib.md5(os.path.abspath(path).encode()).hexdigest()[:8]
-    spec = f"{os.path.abspath(path)}\x00{st.st_mtime_ns}\x00{st.st_size}\x00{nparts}"
+    spec = f"{fingerprint(path)!r}\x00{nparts}"
     key = hashlib.md5(spec.encode()).hexdigest()[:12]
     root = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -144,17 +145,9 @@ def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     return spark.read.parquet(cache)
 
 
-#: Resolved-relation memo: `spark.read.parquet` plans a footer/schema
-#: job plus a file listing PER CALL — two one-task jobs every query
-#: invocation pays for every table it touches (measured at the head of
-#: every job trace; ~180 queries × 2-3 bench passes × 2 jobs is pure
-#: scheduling overhead). The memoized DataFrame is a LAZY relation —
-#: every action still scans the parquet bytes — and the key carries the
-#: source file's (mtime, size), so regenerated testdata gets a fresh
-#: read/relayout and never serves a stale listing (the r13 crash class
-#: cannot arise: keys change with the bytes, and the split cache is
-#: content-keyed the same way).
-_TABLE_FRAMES: dict[tuple, DataFrame] = {}
+def table_path(sf_dir: str, name: str) -> str:
+    """The source file of table `name` under `sf_dir`."""
+    return os.path.join(sf_dir, f"{name}.parquet")
 
 
 def table(
@@ -162,30 +155,26 @@ def table(
 ) -> DataFrame:
     """Load one table. `spread=False` reads the source file verbatim,
     bypassing the split-layout cache — for consumers that must observe
-    the driver's file exactly (layout tests, cache-identity checks)."""
+    the driver's file exactly (layout tests, cache-identity checks).
+    The lazy relation is served from `session.memo` (a fresh read
+    plans a footer/schema job and a file listing per call),
+    fingerprinted on the source and on the relayout's `_DONE` marker."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    app_id = spark.sparkContext.applicationId
-    try:
-        st = os.stat(path)
-        key = (app_id, os.path.abspath(path), spread, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = None
-    if key is not None:
-        stale = [k for k in _TABLE_FRAMES if k[0] != app_id]
-        for k in stale:
-            del _TABLE_FRAMES[k]
-        if key in _TABLE_FRAMES:
-            return _TABLE_FRAMES[key]
-    df = _load_table(spark, sf_dir, name, spread, path)
-    if key is not None:
-        _TABLE_FRAMES[key] = df
-    return df
+    path = table_path(sf_dir, name)
+    spread = spread and name in SPREAD_TABLES
+    paths = [path]
+    if spread:
+        cache = _split_cache_dir(path, spark.sparkContext.defaultParallelism)
+        paths.append(os.path.join(cache, "_DONE"))
+    return memo(
+        spark, "table", (path, spread),
+        lambda: _load_table(spark, name, spread, path), paths,
+    )
 
 
 def _load_table(
-    spark: SparkSession, sf_dir: str, name: str, spread: bool, path: str
+    spark: SparkSession, name: str, spread: bool, path: str
 ) -> DataFrame:
     if name == "events":
         # events.ts has shipped as both parquet TIMESTAMP(NANOS) (which
@@ -221,9 +210,7 @@ def _load_table(
             raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
         return raw
     df = spark.read.parquet(path)
-    if spread and name in SPREAD_TABLES:
-        df = _spread(spark, df, path)
-    return df
+    return _spread(spark, df, path) if spread else df
 
 
 class Tables:
@@ -241,13 +228,6 @@ class Tables:
         if name not in self._cache:
             self._cache[name] = table(self._spark, self._sf_dir, name)
         return self._cache[name]
-
-    def raw(self, name: str) -> DataFrame:
-        """Scan the source file verbatim (no split-layout cache)."""
-        key = f"raw:{name}"
-        if key not in self._cache:
-            self._cache[key] = table(self._spark, self._sf_dir, name, spread=False)
-        return self._cache[key]
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> Tables:

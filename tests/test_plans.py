@@ -509,7 +509,7 @@ def test_pagerank_canonical_reps_is_unforced_anti_join(spark, tmp_path):
     nk = str(tmp_path / "nk")
     spark.createDataFrame([(3,), (7,)], "node long").write.parquet(nk)
     emb = load_tables(spark, SF_ORACLE).embeddings
-    reps = _canonical_reps(spark, nk, emb)
+    reps = _canonical_reps(spark.read.parquet(nk), emb)
     p = X.plan(reps)
     assert "LeftAnti" in p, "non-keepers must anti-join, got no LeftAnti"
     assert "vec_id IN (" not in p and "vec_id INSET" not in p, (

@@ -210,19 +210,26 @@ def test_ivfpq_shares_pq_index_artifact(spark):
     # sim_ivfpq_topk and sim_pq_topk must serve from ONE trained index
     # per (session, corpus) — by_residual=False is what makes the
     # codebooks corpus-global and shareable
-    import healthcare_research_data_pipeline_project_spark.queries.datapipe7 as d7
+    from healthcare_research_data_pipeline_project_spark.session import memo
+    from healthcare_research_data_pipeline_project_spark.tables import table_path
+
+    def served(kind):
+        def rebuilt():
+            raise AssertionError(f"{kind} rebuilt, not served")
+
+        return memo(
+            spark, kind, SF_SMOKE, rebuilt, [table_path(SF_SMOKE, "embeddings")]
+        )
 
     QUERIES["sim_pq_topk"](spark, SF_SMOKE).collect()
-    key = (spark.sparkContext.applicationId, SF_SMOKE, "pq-index-m16-k32")
-    before = id(d7._TRAINED[key])
+    before = served("pq-index-m16-k32")
     rows = QUERIES["sim_ivfpq_topk"](spark, SF_SMOKE).collect()
-    assert id(d7._TRAINED[key]) == before  # reused, not rebuilt
+    assert served("pq-index-m16-k32") is before  # reused, not rebuilt
     assert len(rows) == 8
     # the routing depth is derived per corpus (r11) and memoized in
-    # the same artifact store — every probe list must be exactly that
+    # the same session memo — every probe list must be exactly that
     # many cells
-    np_key = (spark.sparkContext.applicationId, SF_SMOKE, "ivfpq-nprobe")
-    derived = d7._TRAINED[np_key]
+    derived = served("ivfpq-nprobe")
     for r in rows:
         assert r["ranks_wellformed"] and r["within_slack"]
         assert r["n_candidates"] > 0
