@@ -25,10 +25,16 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 
 from ..session import fingerprint, memo
-from ..tables import TABLE_NAMES, register_views, table_path
+from ..tables import (
+    SPLIT_CACHE_ROOT,
+    TABLE_NAMES,
+    ensure_cache,
+    register_views,
+    source_id,
+    table_path,
+)
 from .dialect import SPARK as _SPARK_DIALECT
 from .dialect import Dialect
 
@@ -281,10 +287,18 @@ def query_with(extra_ctes: list[tuple[str, str]]) -> str:
     return "WITH " + body
 
 
+WAREHOUSE_CACHE_ROOT = os.path.join(
+    os.path.dirname(SPLIT_CACHE_ROOT), ".warehouse_cache"
+)
+
+
 def _warehouse_cache_dir(sf_dir: str) -> str:
     """Content-keyed on-disk location for the materialized warehouse:
     rebuilds automatically whenever the source tables' content
-    (`session.fingerprint`) or the mapping SQL changes."""
+    (`session.fingerprint`) or the mapping SQL changes. The dir name
+    leads with a stable id of `sf_dir`, as the split cache's does, so a
+    commit prunes only stale vintages of the same data directory
+    (`tables.prune_cache_siblings`)."""
     spec = repr([fingerprint(table_path(sf_dir, n)) for n in TABLE_NAMES])
     spec += "\x00".join(
         name + "\x01" + sql for name, sql in mapping_ctes(_SPARK_DIALECT)
@@ -296,9 +310,7 @@ def _warehouse_cache_dir(sf_dir: str) -> str:
         f"{t}->{k}" for t, k in sorted(BUCKETED_FACTS.items())
     )
     key = hashlib.md5(spec.encode()).hexdigest()[:12]
-    root = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__)))), ".warehouse_cache")
-    return os.path.join(root, key)
+    return os.path.join(WAREHOUSE_CACHE_ROOT, f"{source_id(sf_dir)}-{key}")
 
 
 #: facts bucketed on their hot join/group key: every hc_q* CTE
@@ -362,40 +374,7 @@ def ensure_warehouse(spark, sf_dir: str) -> None:
 
 def _register_warehouse(spark, sf_dir: str) -> None:
     cache = _warehouse_cache_dir(sf_dir)
-    done = os.path.join(cache, "_DONE")
-    if not os.path.exists(done):
-        # one-time ETL: derive every table from the base views and
-        # write it out (build into a temp dir; rename is the commit)
-        tmp = cache + ".building"
-        shutil.rmtree(tmp, ignore_errors=True)
-        register_views(spark, sf_dir)
-        for name, sql in mapping_ctes(_SPARK_DIALECT):
-            # each CTE references only base views and earlier warehouse
-            # views/tables, both registered by the time it is built
-            df = spark.sql(sql)
-            loc = os.path.join(tmp, name)
-            if name in BUCKETED_FACTS:
-                key = BUCKETED_FACTS[name]
-                # pre-repartition on the bucket key (same hash family as
-                # the bucketizer) so each task writes one bucket file —
-                # without it every task emits one file PER bucket
-                spark.sql(f"DROP TABLE IF EXISTS __bld_{name}")
-                (
-                    df.repartition(N_BUCKETS, key)
-                    .write.mode("overwrite")
-                    .bucketBy(N_BUCKETS, key)
-                    .sortBy(key)
-                    .option("path", loc)
-                    .saveAsTable(f"__bld_{name}")
-                )
-                spark.sql(f"DROP TABLE IF EXISTS __bld_{name}")
-                _register_bucketed(spark, name, loc, key)
-            else:
-                df.write.mode("overwrite").parquet(loc)
-                spark.read.parquet(loc).createOrReplaceTempView(name)
-        open(os.path.join(tmp, "_DONE"), "w").close()
-        shutil.rmtree(cache, ignore_errors=True)
-        os.rename(tmp, cache)
+    ensure_cache(cache, lambda tmp: _build_warehouse(spark, sf_dir, tmp))
 
     # serve: dims as plain parquet views (no memory cache — a pruned
     # columnar scan is already ~scan-speed); facts as bucketed catalog
@@ -405,4 +384,34 @@ def _register_warehouse(spark, sf_dir: str) -> None:
         if name in BUCKETED_FACTS:
             _register_bucketed(spark, name, loc, BUCKETED_FACTS[name])
         else:
+            spark.read.parquet(loc).createOrReplaceTempView(name)
+
+
+def _build_warehouse(spark, sf_dir: str, tmp: str) -> None:
+    """One-time ETL: derive every table from the base views and write
+    it under `tmp`."""
+    register_views(spark, sf_dir)
+    for name, sql in mapping_ctes(_SPARK_DIALECT):
+        # each CTE references only base views and earlier warehouse
+        # views/tables, both registered by the time it is built
+        df = spark.sql(sql)
+        loc = os.path.join(tmp, name)
+        if name in BUCKETED_FACTS:
+            key = BUCKETED_FACTS[name]
+            # pre-repartition on the bucket key (same hash family as
+            # the bucketizer) so each task writes one bucket file —
+            # without it every task emits one file PER bucket
+            spark.sql(f"DROP TABLE IF EXISTS __bld_{name}")
+            (
+                df.repartition(N_BUCKETS, key)
+                .write.mode("overwrite")
+                .bucketBy(N_BUCKETS, key)
+                .sortBy(key)
+                .option("path", loc)
+                .saveAsTable(f"__bld_{name}")
+            )
+            spark.sql(f"DROP TABLE IF EXISTS __bld_{name}")
+            _register_bucketed(spark, name, loc, key)
+        else:
+            df.write.mode("overwrite").parquet(loc)
             spark.read.parquet(loc).createOrReplaceTempView(name)

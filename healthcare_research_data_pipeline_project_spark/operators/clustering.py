@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import hash64_expr
+from ..session import literal_frame
 
 
 def _with_assignment(
@@ -58,7 +59,8 @@ def _with_assignment(
     min-of-structs."""
     spark = df.sparkSession
     cids = sorted(centroids)
-    crow = spark.createDataFrame(
+    crow = literal_frame(
+        spark,
         [([centroids[c] for c in cids], cids)],
         "__carr array<array<double>>, __cids array<int>",
     )

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..caching import track_persist
-from ..session import scratch_dir
+from ..session import literal_frame, scratch_dir
 
 
 def _rm_local(path: str) -> None:
@@ -75,7 +75,7 @@ def _driver_union_find(spark, edge_rows) -> DataFrame:
             lo, hi = (ru, rv) if ru < rv else (rv, ru)
             parent[hi] = lo
     rows = [(n, find(n)) for n in parent]
-    return spark.createDataFrame(rows, "node long, component long")
+    return literal_frame(spark, rows, "node long, component long")
 
 
 def collected_union_find(
@@ -509,9 +509,9 @@ def incremental_dedup_clusters(
             {int(r[0]) for r in pair_rows} | {int(r[1]) for r in pair_rows}
         )
         if eps:
-            eps_df = spark.createDataFrame(
-                [(e,) for e in eps], f"{id_col} long"
-            ).coalesce(1)
+            eps_df = literal_frame(
+                spark, [(e,) for e in eps], f"{id_col} long"
+            )
             found_rows = (
                 sid.join(F.broadcast(eps_df), id_col)
                 .select(id_col, "cluster_id", "cluster_size")
@@ -544,9 +544,11 @@ def incremental_dedup_clusters(
                 if ru != rv:
                     lo, hi = (ru, rv) if ru < rv else (rv, ru)
                     parent[hi] = lo
-        rep_map = spark.createDataFrame(
-            [(n, find(n)) for n in list(parent)], "rep long, new_comp long"
-        ).coalesce(1)  # delta-bounded literal: one build task
+        rep_map = literal_frame(
+            spark,
+            [(n, find(n)) for n in list(parent)],
+            "rep long, new_comp long",
+        )
         rep_map_b = F.broadcast(rep_map)
         # changed-cluster sizes, assembled driver-side (r14, guide
         # §2.4): everything the distributed aggregation counted is
@@ -568,9 +570,11 @@ def incremental_dedup_clusters(
                 lab = find(n)
                 new_sizes[lab] = new_sizes.get(lab, 0) + 1
         sizes_b = F.broadcast(
-            spark.createDataFrame(
-                list(new_sizes.items()), "cluster_id long, new_size long"
-            ).coalesce(1)
+            literal_frame(
+                spark,
+                list(new_sizes.items()),
+                "cluster_id long, new_size long",
+            )
         )
 
     upd_stored = sid.join(
@@ -795,8 +799,8 @@ def _driver_pagerank(
     nodes, inv = np.unique(both, return_inverse=True)
     n = int(nodes.shape[0])
     if n == 0:
-        return spark.createDataFrame(
-            [], "node long, rank double, converged boolean"
+        return literal_frame(
+            spark, [], "node long, rank double, converged boolean"
         )
     ui, vi = inv[: src_arr.shape[0]], inv[src_arr.shape[0]:]
     out_deg = np.bincount(ui, minlength=n)
@@ -815,7 +819,8 @@ def _driver_pagerank(
         if l1 <= tol * n:
             converged = True
             break
-    return spark.createDataFrame(
+    return literal_frame(
+        spark,
         [
             (int(x), float(r), converged)
             for x, r in zip(nodes.tolist(), rank.tolist())
@@ -942,8 +947,8 @@ def pagerank(
         ).collect()[0]
         n, n_dangling = stats["n"], stats["nd"] or 0
         if n == 0:
-            return spark.createDataFrame(
-                [], "node long, rank double, converged boolean"
+            return literal_frame(
+                spark, [], "node long, rank double, converged boolean"
             )
 
         base_nodes.withColumn("rank", F.lit(1.0)).write.mode(
@@ -1063,7 +1068,7 @@ def _driver_kcore(spark, edge_rows, k: int) -> DataFrame:
                 adj[nb].discard(node)
             changed = True
     rows = [(n, len(nb)) for n, nb in adj.items()]
-    return spark.createDataFrame(rows, "node long, core_degree long")
+    return literal_frame(spark, rows, "node long, core_degree long")
 
 
 def kcore(

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..functions.helpers import col_of
 from ..functions.text import duck_hash64, hash64_expr
+from ..session import literal_frame
 
 # ---------------------------------------------------------------------------
 # Skew-safe two-phase aggregation
@@ -522,7 +523,7 @@ def exact_percentiles_multi(
                 StructField("__n", LongType()),
             ]
         )
-        targets = spark.createDataFrame(tgt_rows, tgt_schema)
+        targets = literal_frame(spark, tgt_rows, tgt_schema)
         targets_vcol = None
         if len(vcol_wins) > _LITERAL_WINDOWS_CAP:
             win_t = StructType(
@@ -539,7 +540,8 @@ def exact_percentiles_multi(
                     StructField("__maxhi", DoubleType()),
                 ]
             )
-            targets_vcol = spark.createDataFrame(
+            targets_vcol = literal_frame(
+                spark,
                 [
                     gk + (c, sorted(wins), max(hi for _, hi in wins))
                     for (gk, c), wins in vcol_wins.items()
@@ -814,7 +816,7 @@ def exact_percentiles_multi(
             list(gfields)
             + [StructField(nm, DoubleType()) for nm in specs]
         )
-        return spark.createDataFrame(out_rows, out_schema)
+        return literal_frame(spark, out_rows, out_schema)
 
     # distributed assembly (> _DRIVER_ASSEMBLY_CAP groups): LEFT join
     # picked back onto the one-row-per-(group, spec) targets frame, so

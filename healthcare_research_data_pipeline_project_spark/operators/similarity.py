@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..caching import track_persist
+from ..session import literal_frame
 
 _log = logging.getLogger("hrdp.similarity")
 
@@ -1707,8 +1708,8 @@ def pq_encode(
     exactly once."""
     spark = emb.sparkSession
     m, dsub = len(codebooks), len(codebooks[0][0])
-    crow = spark.createDataFrame(
-        [(codebooks,)], "__cb array<array<array<double>>>"
+    crow = literal_frame(
+        spark, [(codebooks,)], "__cb array<array<array<double>>>"
     )
     code = F.transform(
         F.sequence(F.lit(0), F.lit(m - 1)),
@@ -1761,8 +1762,8 @@ def _query_frame_luts(
     selected by id. Same in-plan broadcast-codebook HOF expression."""
     spark = qdf.sparkSession
     dsub = len(codebooks[0][0])
-    crow = spark.createDataFrame(
-        [(codebooks,)], "__cb array<array<array<double>>>"
+    crow = literal_frame(
+        spark, [(codebooks,)], "__cb array<array<array<double>>>"
     )
     lut = F.transform(
         F.sequence(F.lit(0), F.lit(len(codebooks) - 1)),
@@ -1998,8 +1999,9 @@ def save_ann_index(
             continue
     encoded.write.mode("overwrite").parquet(os.path.join(vdir, "codes"))
     spark = encoded.sparkSession
-    spark.createDataFrame(
-        centroid_rows, "cell int, centroid array<double>"
+    # one partition: one centroid file per index version
+    literal_frame(
+        spark, centroid_rows, "cell int, centroid array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(vdir, "centroids")
     )
@@ -2228,8 +2230,10 @@ def ann_serve_topk(
     no namespace with corpus ids, so dropping them would silently
     discard true neighbors."""
     encoded = index["encoded"]
-    cents = encoded.sparkSession.createDataFrame(
-        index["centroid_rows"], "cell int, centroid array<double>"
+    cents = literal_frame(
+        encoded.sparkSession,
+        index["centroid_rows"],
+        "cell int, centroid array<double>",
     )
     q = queries.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("qe"))
     probe = _route(q, cents, "l2", int(index["nprobe"]) if nprobe is None else nprobe)

@@ -22,7 +22,7 @@ from ..caching import track_persist
 from ..functions.helpers import duck_round_div, round_div
 from ..functions.text import DUCK_TOKENS, duck_shingles, shingles, tokens
 from ..operators.scale import duck_hash_bucket, hash_bucket, prefix_sum
-from ..session import memo, scratch_dir
+from ..session import literal_frame, memo, scratch_dir
 from ..tables import load_tables, table_path
 from . import register
 
@@ -1080,7 +1080,9 @@ def a21_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         for k in _CM_PROBES
         for j in range(_CM_D)
     ]
-    probes = spark.createDataFrame(probe_rows, "probe_key long, j int, col long")
+    probes = literal_frame(
+        spark, probe_rows, "probe_key long, j int, col long"
+    )
     est = (
         probes.join(F.broadcast(sketch), ["j", "col"])
         .groupBy("probe_key")

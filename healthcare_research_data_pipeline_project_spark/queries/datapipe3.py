@@ -25,6 +25,7 @@ from ..functions.text import (
     shingles,
     tokens,
 )
+from ..session import literal_frame
 from ..tables import load_tables
 from . import register
 
@@ -524,7 +525,7 @@ _TIERS = [
 )
 def j11_broadcast_band_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
-    tiers = spark.createDataFrame(_TIERS, "tier string, lo double, hi double")
+    tiers = literal_frame(spark, _TIERS, "tier string, lo double, hi double")
     p = F.col("o_totalprice")
     j = t.orders.join(
         F.broadcast(tiers), (p >= F.col("lo")) & (p < F.col("hi"))

@@ -49,6 +49,7 @@ from ..caching import track_persist
 from ..functions.helpers import duck_round_div, round_div, sum_cents
 from ..functions.text import DUCK_TOKENS, duck_hash64, hash64_expr, tokens
 from ..operators.scale import prefix_sum
+from ..session import literal_frame
 from ..tables import load_tables
 from . import register
 
@@ -603,11 +604,11 @@ def ds_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tt = sum(r["tc"] for r in bs_rows)
     rt = sum(r["rc"] for r in bs_rows)
-    bs_local = spark.createDataFrame(
+    bs_local = literal_frame(
+        spark,
         [(int(r["bkt"]), int(r["tc"]), int(r["rc"])) for r in bs_rows],
         "bkt long, tc long, rc long",
-    ).coalesce(1)  # literal ≤1024 rows: don't fan the broadcast build
-    # out to defaultParallelism near-empty tasks
+    )
     lam = bs_local.select(
         "bkt",
         F.round(

@@ -70,7 +70,7 @@ from ..functions.helpers import (
 from ..functions.text import DUCK_TOKENS, tokens
 from ..operators import similarity as S
 from ..operators.scale import morton16 as _morton16
-from ..session import memo, scratch_dir
+from ..session import literal_frame, memo, scratch_dir
 from ..tables import load_tables, table_path
 from . import register
 
@@ -1230,9 +1230,7 @@ def _ivf_centroids_frame(spark: SparkSession, sf_dir: str, t) -> DataFrame:
         ],
         [table_path(sf_dir, "embeddings")],
     )
-    return spark.createDataFrame(
-        cent_rows, "cell int, centroid array<double>"
-    ).coalesce(1)  # ≤#cells rows: one build task, not 32 near-empty
+    return literal_frame(spark, cent_rows, "cell int, centroid array<double>")
 
 
 @register("sim_ivfpq_topk", _ivfpq_oracle())
@@ -1423,7 +1421,8 @@ def dedup_semantic_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_label_pairs == 0
         or n_recaptured >= _SEM_RECALL_FLOOR * n_label_pairs
     )
-    return spark.createDataFrame(
+    return literal_frame(
+        spark,
         [
             (
                 n_label_pairs,

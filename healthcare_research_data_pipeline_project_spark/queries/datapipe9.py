@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from ..caching import track_persist
 from ..functions.helpers import duck_round_div, duck_sum_cents
 from ..functions.text import duck_hash64, hash64_expr
+from ..session import literal_frame
 from ..tables import load_tables
 from . import register
 
@@ -430,12 +431,7 @@ def t_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     _DAY_CAP = 200_000
     day_rows = marked.limit(_DAY_CAP + 1).collect()
     if len(day_rows) <= _DAY_CAP:
-        # coalesce(1): createDataFrame parallelizes the literal into
-        # defaultParallelism partitions, so every downstream stage
-        # would run 32 near-empty tasks over the ≤day-count rows
-        marked = spark.createDataFrame(
-            day_rows, "d date, dow int, cents long"
-        ).coalesce(1)
+        marked = literal_frame(spark, day_rows, "d date, dow int, cents long")
     else:  # pragma: no cover — >200k distinct days
         marked = track_persist(marked)
     g = marked.agg(

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from ..caching import track_persist
 from ..functions.helpers import DEC, duck_dec_avg, rnd, round_div
 from ..operators import scale as SC
+from ..session import literal_frame
 from ..tables import load_tables
 from . import register
 
@@ -351,7 +352,8 @@ def ds_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     total_cnt = sum(c for _, c in census)
     sum_w = sum(math.sqrt(float(c)) for _, c in census)
-    rates = spark.createDataFrame(
+    rates = literal_frame(
+        spark,
         [
             (
                 s,

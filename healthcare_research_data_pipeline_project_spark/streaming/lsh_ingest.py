@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..caching import unpersist_tracked
 from ..operators.dedup import lsh_banded_index, lsh_pairs_delta
+from ..session import literal_frame
 from .surveillance import DOCUMENT_SCHEMA
 
 #: band-index subdirs and pair subdirs are keyed by micro-batch id
@@ -249,7 +250,7 @@ def _latest_cluster_state(
         if b < before_batch_id
     ]
     if not ids:
-        return spark.createDataFrame([], _CLUSTER_SCHEMA)
+        return literal_frame(spark, [], _CLUSTER_SCHEMA)
     return spark.read.parquet(
         os.path.join(clusters_dir, _BATCH_FMT.format(max(ids)))
     )
@@ -376,7 +377,7 @@ def read_clusters(spark: SparkSession, clusters_dir: str) -> DataFrame:
     """The current (newest committed) cluster-assignment snapshot."""
     ids = _committed_batch_ids(spark, clusters_dir)
     if not ids:
-        return spark.createDataFrame([], _CLUSTER_SCHEMA)
+        return literal_frame(spark, [], _CLUSTER_SCHEMA)
     return spark.read.parquet(
         os.path.join(clusters_dir, _BATCH_FMT.format(max(ids)))
     )

@@ -14,7 +14,9 @@ by date and bucketed by their join key — see `sources/sinks.py`.
 
 from __future__ import annotations
 
+import hashlib
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,6 +53,10 @@ ALWAYS_BROADCAST = {"region", "nation"}
 #: it saves.
 SPREAD_TABLES = {"orders", "lineitem", "events", "documents", "embeddings"}
 
+SPLIT_CACHE_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".split_cache"
+)
+
 
 def _split_cache_dir(path: str, nparts: int) -> str:
     """Content-keyed location of the multi-file relayout of `path`:
@@ -60,86 +66,111 @@ def _split_cache_dir(path: str, nparts: int) -> str:
     siblings of the SAME source (regenerated testdata, changed CPU
     count) are identifiable and pruned on the next build — without it
     the cache grew a full table copy per vintage forever (r9 ADVICE)."""
-    import hashlib
-
-    src = hashlib.md5(os.path.abspath(path).encode()).hexdigest()[:8]
     spec = f"{fingerprint(path)!r}\x00{nparts}"
     key = hashlib.md5(spec.encode()).hexdigest()[:12]
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".split_cache",
-    )
-    return os.path.join(root, f"{src}-{key}")
+    return os.path.join(SPLIT_CACHE_ROOT, f"{source_id(path)}-{key}")
+
+
+def source_id(path: str) -> str:
+    """The stable id of a source path (a table file or a data
+    directory) that leads the name of each of its on-disk cache
+    entries, so `prune_cache_siblings` can tell its vintages apart
+    from other sources'."""
+    return hashlib.md5(os.path.abspath(path).encode()).hexdigest()[:8]
+
+
+def ensure_cache(cache: str, write: Callable[[str], None]) -> None:
+    """The on-disk caches' one build protocol (the split cache and the
+    warehouse cache): unless `cache` holds its `_DONE` marker,
+    `write(tmp)` into a staging dir unique per build (pid alone is not
+    unique within a process: two threads would share it and one's
+    cleanup would race the other's in-flight write — r9 ADVICE), mark
+    it `_DONE` and commit it by atomic rename. If a concurrent process
+    won the race, the rename fails onto its dir: discard our build and
+    serve the winner's (contents are equivalent by construction). A
+    failed `write` removes its partial staging dir and re-raises. A
+    commit then prunes the cache's root (`prune_cache_siblings`)."""
+    import shutil
+    import uuid
+
+    done = os.path.join(cache, "_DONE")
+    if os.path.exists(done):
+        return
+    tmp = f"{cache}.building-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+    try:
+        write(tmp)
+        open(os.path.join(tmp, "_DONE"), "w").close()
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    try:
+        os.rename(tmp, cache)
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
+        if not os.path.exists(done):
+            raise
+    prune_cache_siblings(cache)
+
+
+def prune_cache_siblings(cache: str) -> None:
+    """Best-effort hygiene of an on-disk cache root whose entries are
+    named `<source id>-<content key>` (the split cache and the
+    warehouse cache). BOTH branches are age-gated (r10 ADVICE:
+    unconditional sibling pruning could delete the cache a CONCURRENT
+    process with a different key was actively reading, mid-query):
+    (a) committed siblings of `cache`'s source go once older than an
+        hour — stale vintages (regenerated testdata, a changed CPU
+        budget, a mapping change) age past the gate; a freshly-built
+        concurrent vintage is spared;
+    (b) `.building-*` staging dirs of any source go once older than
+        four hours (a crash between write and rename leaks one; the
+        r10 1-hour gate could reap a live build that legitimately
+        runs long, e.g. a 20x probe relayout)."""
+    import shutil
+    import time
+
+    root, base = os.path.split(cache)
+    src_prefix = base.split("-", 1)[0] + "-"
+    now = time.time()
+    for d in os.listdir(root):
+        full = os.path.join(root, d)
+        try:
+            age = now - os.path.getmtime(full)
+            if ".building-" in d:
+                if age > 4 * 3600:
+                    shutil.rmtree(full, ignore_errors=True)
+            elif d.startswith(src_prefix) and full != cache and age > 3600:
+                shutil.rmtree(full, ignore_errors=True)
+        except OSError:
+            pass
 
 
 def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
-    # file smaller than one scan split (spark.sql.files.maxPartitionBytes,
-    # 128 MB default) → Spark plans a single scan task. Bigger files get
+    # input smaller than one scan split (spark.sql.files.maxPartitionBytes,
+    # 128 MB default) → Spark plans a single scan task. Bigger inputs get
     # multiple byte-range splits from the scan itself and pass through.
     #
     # The fix is a LAYOUT, not a shuffle: relayout the single-row-group
-    # file into `defaultParallelism` files ONCE (rename-committed cache,
-    # same protocol as healthcare/mapping.ensure_warehouse), then serve
+    # file into `defaultParallelism` files ONCE (`ensure_cache`, the
+    # warehouse cache's protocol too), then serve
     # every query from the multi-file copy. Scans parallelize at the
     # source with ZERO per-query exchange — the previous per-query
     # round-robin repartition shuffled the full table through every
     # plan that touched a fact (~0.4 s/query at sf0.1, and an extra
     # exchange in every explain). On a real warehouse inputs arrive in
-    # many files/row-groups, `getsize >= 128 MB` short-circuits, and
-    # this path never runs — the cache exists only because the driver's
-    # testdata ships as one row group per table.
-    if os.path.getsize(path) >= 128 * 1024 * 1024:
+    # many files/row-groups, the size check short-circuits, and this
+    # path never runs — the cache exists only because the driver's
+    # testdata ships as one row group per table. The size is the data
+    # bytes of `fingerprint` (the last element for a file and for a
+    # directory alike), not `getsize`, which for a directory is its
+    # inode's size.
+    stamp = fingerprint(path)[1]
+    if stamp is not None and stamp[-1] >= 128 * 1024 * 1024:
         return df
     nparts = spark.sparkContext.defaultParallelism
     cache = _split_cache_dir(path, nparts)
-    done = os.path.join(cache, "_DONE")
-    if not os.path.exists(done):
-        import shutil
-        import time as _time
-        import uuid
-
-        # build into a uniquely-suffixed temp dir (pid alone is not
-        # unique within a process: two threads would share it and
-        # rmtree races the other's in-flight write — r9 ADVICE);
-        # atomic rename is the commit. If a concurrent process won the
-        # race, our rename fails onto the existing dir — discard our
-        # build and read the winner's (contents are equivalent by
-        # construction).
-        tmp = f"{cache}.building-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        df.repartition(nparts).write.mode("overwrite").parquet(tmp)
-        open(os.path.join(tmp, "_DONE"), "w").close()
-        try:
-            os.rename(tmp, cache)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(done):
-                raise
-        # cache hygiene, best-effort after a successful commit — BOTH
-        # branches age-gated (r10 ADVICE: unconditional sibling
-        # pruning could delete the cache a CONCURRENT process with a
-        # different nparts was actively reading, mid-query):
-        # (a) prune committed siblings of the SAME source only when
-        #     older than an hour — stale mtime/size/nparts vintages
-        #     (regenerated testdata, a changed CPU budget) age past
-        #     the gate and go; a freshly-built concurrent vintage is
-        #     spared;
-        # (b) reap orphaned .building-* staging dirs older than four
-        #     hours (a crash between write and rename leaks one; the
-        #     r10 1-hour gate could reap a live build that
-        #     legitimately runs long, e.g. a 20x probe relayout).
-        root, base = os.path.split(cache)
-        src_prefix = base.split("-", 1)[0] + "-"
-        for d in os.listdir(root):
-            full = os.path.join(root, d)
-            try:
-                age = _time.time() - os.path.getmtime(full)
-                if ".building-" in d:
-                    if age > 4 * 3600:
-                        shutil.rmtree(full, ignore_errors=True)
-                elif d.startswith(src_prefix) and full != cache and age > 3600:
-                    shutil.rmtree(full, ignore_errors=True)
-            except OSError:
-                pass
+    relayout = df.repartition(nparts).write.mode("overwrite")
+    ensure_cache(cache, relayout.parquet)
     # `_DONE` is invisible to the reader (files starting with `_` are
     # metadata by parquet convention)
     return spark.read.parquet(cache)

@@ -90,8 +90,6 @@ def test_column_quality_nulls(spark):
 # the shared session's conf exactly as it found it — tables.py)
 # ---------------------------------------------------------------------------
 def test_events_loader_reads_nanos_vintage_and_restores_conf(spark, tmp_path):
-    import shutil
-
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -128,4 +126,3 @@ def test_events_loader_reads_nanos_vintage_and_restores_conf(spark, tmp_path):
     assert dict(df2.dtypes)["ts"] == "timestamp"
     assert df2.count() == 6
     assert spark.conf.get(key, None) == before
-    shutil.rmtree(str(sf_dir), ignore_errors=True)

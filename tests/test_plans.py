@@ -202,8 +202,8 @@ def test_temperature_mix_has_no_window(spark):
         "ds_temperature_mix regressed to an unpartitioned window for "
         "the corpus totals"
     )
-    # the literal rates relation (createDataFrame renders as either)
-    assert "LocalTableScan" in plan or "Scan ExistingRDD" in plan
+    # the literal rates relation (`session.literal_frame`)
+    assert "LocalTableScan" in plan and "Scan ExistingRDD" not in plan
     assert plan.count("Scan parquet") == 1
 
 

@@ -20,7 +20,6 @@ from healthcare_research_data_pipeline_project_spark.healthcare import mapping
 from healthcare_research_data_pipeline_project_spark.healthcare.dialect import SPARK
 from healthcare_research_data_pipeline_project_spark.session import memo
 from healthcare_research_data_pipeline_project_spark.tables import (
-    SPREAD_TABLES,
     TABLE_NAMES,
     _split_cache_dir,
     table,
@@ -46,20 +45,12 @@ def test_dir_table_rewritten_in_place_reads_fresh(spark, tmp_path, spread):
     part = tmp_path / "orders.parquet" / "part-0.parquet"
     part.parent.mkdir()
     pq.write_table(pa.table({"x": [1, 2, 3]}), part)
-    src = str(part.parent)
-    nparts = spark.sparkContext.defaultParallelism
-    caches = [_split_cache_dir(src, nparts)]
-    try:
-        first = table(spark, str(tmp_path), "orders", spread=spread)
-        assert sorted(r.x for r in first.collect()) == [1, 2, 3]
-        # same part-file name: the directory's own stat does not move
-        pq.write_table(pa.table({"x": [10, 20, 30, 40, 50]}), part)
-        caches.append(_split_cache_dir(src, nparts))
-        again = table(spark, str(tmp_path), "orders", spread=spread)
-        assert sorted(r.x for r in again.collect()) == [10, 20, 30, 40, 50]
-    finally:
-        for c in caches:
-            shutil.rmtree(c, ignore_errors=True)
+    first = table(spark, str(tmp_path), "orders", spread=spread)
+    assert sorted(r.x for r in first.collect()) == [1, 2, 3]
+    # same part-file name: the directory's own stat does not move
+    pq.write_table(pa.table({"x": [10, 20, 30, 40, 50]}), part)
+    again = table(spark, str(tmp_path), "orders", spread=spread)
+    assert sorted(r.x for r in again.collect()) == [10, 20, 30, 40, 50]
 
 
 def test_pruned_split_cache_misses(spark, tmp_path):
@@ -69,10 +60,7 @@ def test_pruned_split_cache_misses(spark, tmp_path):
     cache = _split_cache_dir(src, spark.sparkContext.defaultParallelism)
     assert os.path.exists(os.path.join(cache, "_DONE"))
     shutil.rmtree(cache)  # another process's age-gated hygiene
-    try:
-        assert table(spark, str(tmp_path), "orders").count() == n
-    finally:
-        shutil.rmtree(cache, ignore_errors=True)
+    assert table(spark, str(tmp_path), "orders").count() == n
 
 
 def test_new_application_drops_entries(own_memo):
@@ -100,22 +88,14 @@ def test_ensure_warehouse_switch_back_reregisters(spark, tmp_path):
     other.mkdir()
     for n in TABLE_NAMES:
         shutil.copy(table_path(SF_SMOKE, n), other)
-    nparts = spark.sparkContext.defaultParallelism
-    leftovers = [mapping._warehouse_cache_dir(str(other))] + [
-        _split_cache_dir(table_path(str(other), n), nparts) for n in SPREAD_TABLES
-    ]
     names = [n for n, _sql in mapping.mapping_ctes(SPARK)]
-    try:
-        mapping.ensure_warehouse(spark, SF_SMOKE)
-        mapping.ensure_warehouse(spark, str(other))
-        mapping.ensure_warehouse(spark, SF_SMOKE)
-        served = mapping._warehouse_cache_dir(SF_SMOKE)
-        for n in names:
-            files = spark.table(n).inputFiles()
-            assert files and all(served in f for f in files), n
-    finally:
-        for d in leftovers:
-            shutil.rmtree(d, ignore_errors=True)
+    mapping.ensure_warehouse(spark, SF_SMOKE)
+    mapping.ensure_warehouse(spark, str(other))
+    mapping.ensure_warehouse(spark, SF_SMOKE)
+    served = mapping._warehouse_cache_dir(SF_SMOKE)
+    for n in names:
+        files = spark.table(n).inputFiles()
+        assert files and all(served in f for f in files), n
 
 
 def test_application_id_read_only_in_session():

@@ -10,10 +10,16 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from healthcare_research_data_pipeline_project_spark.healthcare import mapping
 from healthcare_research_data_pipeline_project_spark.tables import (
     _split_cache_dir,
+    _spread,
+    ensure_cache,
+    prune_cache_siblings,
+    source_id,
     table,
 )
 from tests.conftest import SF_SMOKE
@@ -93,7 +99,66 @@ def test_split_cache_prunes_stale_siblings_and_orphans(spark, tmp_path):
     os.utime(src, None)
     table(spark, str(tmp_path), "orders").count()
     assert not os.path.exists(old_cache), "aged sibling not pruned"
-    shutil.rmtree(live_orphan, ignore_errors=True)
+
+
+def test_directory_source_over_one_split_passes_through(spark, tmp_path):
+    # the size test reads the directory's data bytes, not the size of
+    # its inode: a 130 MB part file already splits at the scan
+    src = tmp_path / "orders.parquet"
+    src.mkdir()
+    part = src / "part-0.parquet"
+    part.touch()
+    os.truncate(part, 130 * 1024 * 1024)  # sparse: no disk blocks
+    df = object()  # never read: the passthrough returns it untouched
+    assert _spread(spark, df, str(src)) is df
+    cache = _split_cache_dir(str(src), spark.sparkContext.defaultParallelism)
+    assert not os.path.exists(cache)
+
+
+def test_prune_cache_siblings_is_age_gated(tmp_path):
+    import time
+
+    def entry(name, age_s=0.0):
+        d = tmp_path / name
+        d.mkdir()
+        t = time.time() - age_s
+        os.utime(d, (t, t))
+        return name
+
+    cache = entry("aaaa0000-current")
+    kept = {
+        cache,
+        entry("aaaa0000-fresh"),  # a concurrent vintage: spared
+        entry("bbbb1111-old", 7200),  # another source's cache
+        entry("aaaa0000-fresh.building-1-cafecafe", 3 * 3600),  # live build
+    }
+    entry("aaaa0000-old", 7200)
+    entry("aaaa0000-old.building-2-deadbeef", 5 * 3600)
+    entry("cccc2222-crashed.building-3-feedface", 5 * 3600)
+    prune_cache_siblings(str(tmp_path / cache))
+    assert set(os.listdir(tmp_path)) == kept
+
+
+def test_failed_cache_build_leaves_no_staging_dir(tmp_path):
+    def write(tmp):
+        os.makedirs(tmp)
+        open(os.path.join(tmp, "part-0.parquet"), "w").close()
+        raise RuntimeError("build failed part-way")
+
+    cache = str(tmp_path / "aaaa0000-key")
+    with pytest.raises(RuntimeError, match="part-way"):
+        ensure_cache(cache, write)
+    assert os.listdir(tmp_path) == []
+
+
+def test_warehouse_cache_named_by_data_dir():
+    # the split cache's naming rule: sibling SFs never prune each other
+    sf_a, sf_b = SF_SMOKE, os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
+    a = os.path.basename(mapping._warehouse_cache_dir(sf_a))
+    b = os.path.basename(mapping._warehouse_cache_dir(sf_b))
+    assert a.startswith(source_id(sf_a) + "-")
+    assert b.startswith(source_id(sf_b) + "-")
+    assert source_id(sf_a) != source_id(sf_b)
 
 
 def test_events_ts_normalized_through_cache(spark):
