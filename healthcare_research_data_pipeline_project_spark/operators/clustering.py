@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import hash64_expr
-from ..session import literal_frame
+from ..session import driver_rows, literal_frame
 
 
 def _with_assignment(
@@ -156,6 +156,10 @@ def _driver_kmeans(
     return {c: [float(v) for v in cent[c]] for c in range(len(cent))}, history
 
 
+#: input-row ceiling for training on the driver (one bounded collect)
+_DRIVER_TRAIN_CAP = 100_000
+
+
 def kmeans(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -163,7 +167,6 @@ def kmeans(
     k: int = 8,
     max_iter: int = 10,
     tol: float = 1e-6,
-    driver_train_threshold: int = 100_000,
 ) -> tuple[DataFrame, dict[int, list[float]], list[float]]:
     """Train k-means; returns (assignments, centroids, inertia_history).
 
@@ -173,13 +176,13 @@ def kmeans(
 
     Adaptive training path (the connected_components doctrine): a
     quantizer trains on a bounded sample, so when the input fits under
-    `driver_train_threshold` rows the Lloyd's loop runs in-memory on
-    the driver (numpy, exact, one bounded collect) — N distributed
-    rounds of broadcast+aggregate lose to one fetch at that size.
-    Above the threshold the loop is fully distributed: map-side
-    assignment against broadcast centroids, (cid, dim) partial-agg
-    update, driver holds only k×dim floats. The returned ASSIGNMENT
-    pass is always distributed.
+    `_DRIVER_TRAIN_CAP` rows the Lloyd's loop runs in-memory on the
+    driver (numpy, exact, one bounded collect) — N distributed rounds
+    of broadcast+aggregate lose to one fetch at that size. Above the
+    cap the loop is fully distributed: map-side assignment against
+    broadcast centroids, (cid, dim) partial-agg update, driver holds
+    only k×dim floats. The returned ASSIGNMENT pass is always
+    distributed.
 
     Empty clusters keep their previous centroid (standard Lloyd's
     degenerate-case handling), so k never shrinks during iteration.
@@ -189,15 +192,13 @@ def kmeans(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    probe = (
-        df.select(F.col(id_col), F.col(vec_col))
-        .limit(driver_train_threshold + 1)
-        .collect()
+    rows = driver_rows(
+        df.select(F.col(id_col), F.col(vec_col)), _DRIVER_TRAIN_CAP
     )
-    if not probe:
+    if rows == []:
         raise ValueError("kmeans requires a non-empty input frame")
-    if len(probe) <= driver_train_threshold:
-        centroids, history = _driver_kmeans(probe, k, max_iter, tol)
+    if rows is not None:
+        centroids, history = _driver_kmeans(rows, k, max_iter, tol)
         return assign(df, centroids, vec_col, id_col), centroids, history
     base = df.select(F.col(id_col), F.col(vec_col)).persist()
     try:

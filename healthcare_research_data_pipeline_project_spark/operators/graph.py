@@ -36,13 +36,14 @@ from __future__ import annotations
 
 import os
 import shutil
+from operator import methodcaller
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..caching import track_persist
-from ..session import literal_frame, scratch_dir
+from ..session import driver_rows, literal_frame, scratch_dir
 
 
 def _rm_local(path: str) -> None:
@@ -78,42 +79,30 @@ def _driver_union_find(spark, edge_rows) -> DataFrame:
     return literal_frame(spark, rows, "node long, component long")
 
 
-def collected_union_find(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    edge_cap: int | None = None,  # default: _DRIVER_EDGE_CAP (below)
-) -> DataFrame:
+def collected_union_find(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Exact components for edge sets that are SMALL BY CONSTRUCTION
-    (the delta-proportional maintenance paths): ONE capped collect
-    into the driver union-find, no regime probe. `connected_components`'
-    derived-threshold decision pays an extra count action and with it
-    a SECOND evaluation of the edge plan — which dominates wall-clock
-    when the edge set is tiny but its producing plan is not (measured
-    on the r13 incremental-cluster path: the probe+collect pair cost
-    ~3.0 s against ~0.5 s for the single collect). Over `edge_cap`
-    edges the collected rows are discarded and the call FALLS BACK to
+    (the delta-proportional maintenance paths): one capped collect of
+    the raw edges into the driver union-find, without the persist that
+    `connected_components` puts in front of its fetch. Over
+    `_DRIVER_EDGE_CAP` edges the call falls back to
     `connected_components` (distributed label propagation) instead of
-    raising (r14, VERDICT r13 #9): an over-cap delta batch re-pays the
-    edge plan once but completes, rather than turning a routine large
-    batch into an exception. Callers whose edge sets are NEVER
-    delta-bounded should go straight to `connected_components`."""
-    if edge_cap is None:
-        edge_cap = _DRIVER_EDGE_CAP
-    rows = (
-        edges.select(
-            F.col(src).cast("long"), F.col(dst).cast("long")
-        )
-        .limit(edge_cap + 1)
-        .collect()
+    raising: an over-cap delta batch re-pays the edge plan once but
+    completes. Callers whose edge sets are NEVER delta-bounded should
+    go straight to `connected_components`."""
+    rows = driver_rows(
+        edges.select(F.col(src).cast("long"), F.col(dst).cast("long")),
+        _DRIVER_EDGE_CAP,
     )
-    if len(rows) > edge_cap:
+    if rows is None:
         return connected_components(edges, src, dst)
     return _driver_union_find(edges.sparkSession, rows)
 
 
 # ---------------------------------------------------------------------------
 # Driver/distributed regime crossover — derived, not static (r11).
+# Every threshold below is applied through `session.driver_rows`: one
+# capped fetch decides the regime and, under the cap, is the driver
+# path's input.
 #
 # The r10 20x probe showed the cost of a static 100k-edge threshold:
 # g_pagerank_knn's edge list crossed it at 287k edges and paid the
@@ -174,7 +163,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    small_graph_threshold: int | None = None,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Label each node of the undirected graph `edges` with the
@@ -205,14 +193,11 @@ def connected_components(
     spark = edges.sparkSession
     # adaptive small-graph path: near-dup pair graphs are usually tiny
     # relative to the corpus (edges ∝ real duplication, not data size).
-    # Below the threshold an exact driver-side union-find beats N
+    # Below the cap an exact driver-side union-find beats N
     # distributed rounds of joins; above it the O(log d) loop below is
-    # the only shape that scales. The regime probe PERSISTS the
-    # symmetrized edge list and counts it, so the (possibly expensive)
-    # caller pipeline is evaluated exactly ONCE regardless of which
-    # path wins — the r6 form probed with limit+collect and then
-    # re-evaluated the pipeline inside the loop, paying the edge
-    # computation twice on the distributed path.
+    # the only shape that scales. The symmetrized edge list is
+    # persisted before the fetch, so the (possibly expensive) caller
+    # pipeline is evaluated once whichever path wins.
     #
     # Symmetrization is a 2-element explode, not a self-union: the
     # union form references the caller's edge pipeline twice (for LSH
@@ -233,31 +218,17 @@ def connected_components(
         ).alias("e")
     ).select("e.u", "e.v")
     sym = sym.persist()
-    if small_graph_threshold is None:
-        # the driver path is one union-find pass (O(E·alpha), not
-        # O(E·rounds)), so the cost crossover sits far above the
-        # memory cap — the cap IS the threshold
-        small_graph_threshold = _DRIVER_EDGE_CAP
-    # regime probe and edge fetch MERGED into one capped collect (r14,
-    # the r13 exact_percentiles probe doctrine): u <= v keeps one
-    # orientation per undirected pair AND any self-loop rows (which
-    # register their node in union-find); collecting at most cap+1 of
-    # them answers the regime question AND is the driver path's input.
-    # The r13 form ran count() then collect() — two jobs where one
-    # suffices, per call, for every CC consumer in the corpus.
-    probe_rows = (
-        sym.filter(F.col("u") <= F.col("v"))
-        .limit(small_graph_threshold + 1)
-        .collect()
-    )
-    if len(probe_rows) <= small_graph_threshold:
+    # the driver path is one union-find pass (O(E·alpha), not
+    # O(E·rounds)), so the cost crossover sits far above the memory
+    # cap — the cap IS the threshold. u <= v keeps one orientation per
+    # undirected pair AND any self-loop rows (which register their
+    # node in union-find).
+    rows = driver_rows(sym.filter(F.col("u") <= F.col("v")), _DRIVER_EDGE_CAP)
+    if rows is not None:
         try:
-            return _driver_union_find(
-                spark, [(r[0], r[1]) for r in probe_rows]
-            )
+            return _driver_union_find(spark, [(r[0], r[1]) for r in rows])
         finally:
             sym.unpersist()
-    del probe_rows
 
     own_dir = checkpoint_dir is None
     base = checkpoint_dir or scratch_dir(spark, "cc_")
@@ -384,7 +355,6 @@ def incremental_dedup_clusters(
     pair_a: str = "id_a",
     pair_b: str = "id_b",
     changed_only: bool = False,
-    edge_cap: int | None = None,  # default: _DRIVER_EDGE_CAP
 ) -> DataFrame:
     """Insert-only incremental maintenance of the `dedup_clusters`
     assignment table: merge a delta batch's candidate pairs into the
@@ -394,10 +364,10 @@ def incremental_dedup_clusters(
     `lsh_pairs_delta`) applied to the clustering step, which is what
     production dedup actually serves (VERDICT r12 #5).
 
-    NOT lazy: building the returned DataFrame executes one or two
-    Spark collect actions (the capped pair collect, and the stored-rep
-    lookup when pairs exist) — callers that only build/explain the
-    plan still pay them.
+    NOT lazy: building the returned DataFrame executes Spark actions
+    (the capped pair collect, then the rep lookup when pairs exist, or
+    over the cap the endpoint check and the components loop) —
+    callers that only build/explain the plan still pay them.
 
     Why the delta rule is exact: component labels are min-reachable
     ids, so every stored cluster is fully described by its
@@ -411,8 +381,8 @@ def incremental_dedup_clusters(
     single capped collect + in-function driver union-find below. The
     merged component's label min(member ids) = min(member reps) falls
     out because reps ARE cluster minima and new nodes are their own
-    rep. Batches over `edge_cap` pairs (default `_DRIVER_EDGE_CAP`,
-    ~200 MB collected) fall back to the DISTRIBUTED rep-level
+    rep. Batches over `_DRIVER_EDGE_CAP` pairs (~200 MB collected)
+    fall back to the DISTRIBUTED rep-level
     components loop instead of raising (r14, VERDICT r13 #9): the
     endpoint→rep mapping becomes two joins against the stored
     assignments and `connected_components` produces the same rep_map.
@@ -435,40 +405,29 @@ def incremental_dedup_clusters(
     `delta_docs` must carry ids disjoint from `stored` (insert-only:
     a re-ingested id would shadow its stored row); `delta_pairs` is
     the `lsh_pairs_delta` output — every pair touches ≥1 delta doc.
+    Every pair endpoint must be in `stored` or `delta_docs`: an
+    endpoint in neither has no row to carry its cluster, so both
+    regimes raise `ValueError` naming it rather than disagree on the
+    cluster sizes it would touch.
     """
     sid = stored.select(
         F.col(id_col).cast("long").alias(id_col),
         F.col("cluster_id").cast("long").alias("cluster_id"),
         F.col("cluster_size").cast("long").alias("cluster_size"),
     )
-    # r13 optimization (guide §1.2/§2.4): the delta-pair plan is
-    # evaluated EXACTLY ONCE — one capped collect — and everything
-    # downstream of it that is delta-bounded (endpoint set, rep-edge
-    # construction, union-find) runs driver-side on the collected
-    # rows. The r13.0 form built eps/found/fa/fb/rep_edges as Spark
-    # frames: a distinct exchange, a persisted lookup join, two
-    # broadcast builds and a second traversal of the pair plan inside
-    # the union-find collect — 32 jobs per maintenance call measured
-    # at sf0.1, of which this section owned ~15. Now: one collect of
-    # the pairs (cap-guarded, same raise-with-routing-guidance
-    # contract as collected_union_find), one streaming scan of the
-    # corpus-sized `stored` against the broadcast LITERAL endpoint
-    # set for the rep lookup (LocalTableScan build side — no upstream
-    # job), and the rep-level union-find in Python. 32 -> ~13 jobs,
-    # 2.4 -> ~1.3 s steady-state at sf0.1; the corpus-sized inputs
-    # are still scanned only by streaming joins, never shuffled.
+    delta_ids = delta_docs.select(F.col(id_col).cast("long").alias(id_col))
+    # the delta-pair plan is evaluated once, by the capped fetch, and
+    # everything delta-bounded downstream of it (endpoint set, rep-edge
+    # construction, union-find) runs driver-side on the fetched rows;
+    # the corpus-sized inputs are scanned only by streaming joins,
+    # never shuffled
     spark = stored.sparkSession
-    if edge_cap is None:
-        edge_cap = _DRIVER_EDGE_CAP
-    pair_rows = (
-        delta_pairs.select(
-            F.col(pair_a).cast("long").alias("pa"),
-            F.col(pair_b).cast("long").alias("pb"),
-        )
-        .limit(edge_cap + 1)
-        .collect()
+    pe = delta_pairs.select(
+        F.col(pair_a).cast("long").alias("pa"),
+        F.col(pair_b).cast("long").alias("pb"),
     )
-    if len(pair_rows) > edge_cap:
+    pair_rows = driver_rows(pe, _DRIVER_EDGE_CAP)
+    if pair_rows is None:
         # distributed fallback (r14): the batch is not delta-bounded,
         # so the endpoint→rep mapping and the rep-level components run
         # as Spark jobs. Two left joins of the pair frame against the
@@ -480,10 +439,14 @@ def incremental_dedup_clusters(
         # exact. rep_map is ≤ 2·|pairs| rows; the downstream joins
         # drop the broadcast hint in this regime and let the planner
         # choose.
-        pe = delta_pairs.select(
-            F.col(pair_a).cast("long").alias("pa"),
-            F.col(pair_b).cast("long").alias("pb"),
+        orphan = (
+            pe.select(F.explode(F.array("pa", "pb")).alias(id_col))
+            .join(sid.select(id_col).unionByName(delta_ids), id_col, "left_anti")
+            .limit(1)
+            .collect()
         )
+        if orphan:
+            raise _orphan_endpoint(orphan[0][0])
         look = sid.select(
             F.col(id_col).alias("__ep"), F.col("cluster_id").alias("__rep")
         )
@@ -504,21 +467,32 @@ def incremental_dedup_clusters(
         # stored scan against the broadcast literal endpoints (build
         # side is a LocalTableScan, probe side never exchanges). The
         # lookup also carries cluster_size so the changed-cluster
-        # sizes can be assembled driver-side below (r14).
+        # sizes can be assembled driver-side below (r14), and the
+        # delta ids (with a null cluster) so an endpoint in neither
+        # input is caught by the same action.
         eps = sorted(
             {int(r[0]) for r in pair_rows} | {int(r[1]) for r in pair_rows}
         )
+        found_rows = []
         if eps:
             eps_df = literal_frame(
                 spark, [(e,) for e in eps], f"{id_col} long"
             )
+            null = F.lit(None).cast("long")
             found_rows = (
-                sid.join(F.broadcast(eps_df), id_col)
+                sid.unionByName(
+                    delta_ids.select(
+                        id_col, null.alias("cluster_id"), null.alias("cluster_size")
+                    )
+                )
+                .join(F.broadcast(eps_df), id_col)
                 .select(id_col, "cluster_id", "cluster_size")
                 .collect()
             )
-        else:
-            found_rows = []
+        missing = set(eps).difference(int(r[0]) for r in found_rows)
+        if missing:
+            raise _orphan_endpoint(min(missing))
+        found_rows = [r for r in found_rows if r[1] is not None]
         rep_of = {int(r[0]): int(r[1]) for r in found_rows}
         old_size = {int(r[1]): int(r[2]) for r in found_rows}
         # rep-level edge set: endpoint → stored rep, itself if unseen;
@@ -586,8 +560,7 @@ def incremental_dedup_clusters(
         F.col("rep").isNotNull().alias("touched"),
     )
     upd_delta = (
-        delta_docs.select(F.col(id_col).cast("long").alias(id_col))
-        .join(rep_map_b, F.col(id_col) == F.col("rep"), "left")
+        delta_ids.join(rep_map_b, F.col(id_col) == F.col("rep"), "left")
         .select(
             id_col,
             F.coalesce("new_comp", F.col(id_col)).alias("cluster_id"),
@@ -634,6 +607,14 @@ def incremental_dedup_clusters(
             .cast("int")
             .alias("is_keeper"),
         )
+    )
+
+
+def _orphan_endpoint(doc_id: int) -> ValueError:
+    return ValueError(
+        f"incremental_dedup_clusters: pair endpoint {doc_id} is in neither "
+        "`stored` nor `delta_docs` — every endpoint must be an assigned "
+        "or a newly inserted document"
     )
 
 
@@ -836,7 +817,6 @@ def pagerank(
     damping: float = 0.85,
     max_iter: int = 20,
     tol: float = 1e-4,
-    small_graph_threshold: int | None = None,
     checkpoint_dir: str | None = None,
     spill_every: int = 3,
 ) -> DataFrame:
@@ -881,36 +861,28 @@ def pagerank(
     # adaptive small-graph path (same doctrine as connected_components:
     # similarity graphs are duplication-sized, not corpus-sized): below
     # the threshold, N distributed rounds of join+spill lose to one
-    # exact driver iteration. The regime probe persists + counts the
-    # edge list, so the caller's (possibly expensive) edge pipeline is
-    # evaluated exactly once on EITHER path — the r6 limit+collect
-    # probe re-evaluated it inside the distributed loop.
+    # exact driver iteration. The edge list is persisted before the
+    # fetch, so the caller's (possibly expensive) edge pipeline is
+    # evaluated once on either path.
     #
-    # The default threshold is DERIVED from this call's round count
-    # and batching factor against the measured cost model (see
+    # The threshold is DERIVED from this call's round count and
+    # batching factor against the measured cost model (see
     # derived_small_graph_threshold): the r10 probe's static 100k cut
     # sent a 287k-edge graph distributed for a 17.3x cliff where the
     # driver path was 6x faster.
-    if small_graph_threshold is None:
-        small_graph_threshold = derived_small_graph_threshold(
-            max_iter,
-            spill_every,
-            driver_edge_cap=_NP_DRIVER_EDGE_CAP,
-            edge_iters_per_materialization=(
-                _NP_EDGE_ITERS_PER_MATERIALIZATION
-            ),
-        )
+    threshold = derived_small_graph_threshold(
+        max_iter,
+        spill_every,
+        driver_edge_cap=_NP_DRIVER_EDGE_CAP,
+        edge_iters_per_materialization=_NP_EDGE_ITERS_PER_MATERIALIZATION,
+    )
     e = edges.select(
         F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
     ).persist()
-    # regime probe and edge fetch merged into ONE capped Arrow fetch
-    # (r14): at most cap+1 rows land as two int64 columns (16 B/edge —
-    # the cap is a real memory bound), answering the regime question
-    # and feeding the vectorized iteration without a separate count()
-    # job. Over the cap the partial batch is dropped and the
-    # distributed loop runs from the persisted edge list.
-    tbl = e.limit(small_graph_threshold + 1).toArrow()
-    if tbl.num_rows <= small_graph_threshold:
+    # fetched as Arrow: two int64 columns (16 B/edge — the cap is a
+    # real memory bound) that feed the vectorized iteration directly
+    tbl = driver_rows(e, threshold, fetch=methodcaller("toArrow"))
+    if tbl is not None:
         try:
             return _driver_pagerank(
                 spark,
@@ -922,7 +894,6 @@ def pagerank(
             )
         finally:
             e.unpersist()
-    del tbl
     base = checkpoint_dir or scratch_dir(spark, "pr_")
     ping = [os.path.join(base, "ranks_a"), os.path.join(base, "ranks_b")]
 
@@ -1077,7 +1048,6 @@ def kcore(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    small_graph_threshold: int | None = None,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Nodes of the k-core of the undirected graph `edges`: the
@@ -1099,9 +1069,8 @@ def kcore(
     distributed loop."""
     spark = edges.sparkSession
     # explode-symmetrize (one pass over the caller's edge pipeline —
-    # see connected_components), dedup, persist. The persisted frame
-    # doubles as the regime probe, so the edge pipeline is evaluated
-    # exactly once on either path.
+    # see connected_components), dedup, persist: the edge pipeline is
+    # evaluated once on either path.
     sym = (
         edges.select(
             F.col(src).cast("long").alias("a"),
@@ -1124,28 +1093,21 @@ def kcore(
         .distinct()
         .persist()
     )
-    if small_graph_threshold is None:
-        # the driver peel touches each edge only until it drops, so
-        # effective driver rounds are far below max_iter; the derived
-        # crossover (rounds=max_iter, no batching) is already past the
-        # memory cap — which therefore decides
-        small_graph_threshold = derived_small_graph_threshold(max_iter)
-    # regime probe and edge fetch merged into one capped collect (r14;
-    # self-loops are filtered before the explode and the index is
-    # distinct, so u < v is exactly one row per undirected edge)
-    probe_rows = (
-        sym.filter(F.col("u") < F.col("v"))
-        .limit(small_graph_threshold + 1)
-        .collect()
+    # the driver peel touches each edge only until it drops, so
+    # effective driver rounds are far below max_iter; the derived
+    # crossover (rounds=max_iter, no batching) is already past the
+    # memory cap — which therefore decides. Self-loops are filtered
+    # before the explode and the index is distinct, so u < v is
+    # exactly one row per undirected edge.
+    rows = driver_rows(
+        sym.filter(F.col("u") < F.col("v")),
+        derived_small_graph_threshold(max_iter),
     )
-    if len(probe_rows) <= small_graph_threshold:
+    if rows is not None:
         try:
-            return _driver_kcore(
-                spark, [(r[0], r[1]) for r in probe_rows], k
-            )
+            return _driver_kcore(spark, [(r[0], r[1]) for r in rows], k)
         finally:
             sym.unpersist()
-    del probe_rows
 
     base = checkpoint_dir or scratch_dir(spark, "kcore_")
     ping = [os.path.join(base, "alive_a"), os.path.join(base, "alive_b")]

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..functions.helpers import col_of
 from ..functions.text import duck_hash64, hash64_expr
-from ..session import literal_frame
+from ..session import driver_rows, literal_frame
 
 # ---------------------------------------------------------------------------
 # Skew-safe two-phase aggregation
@@ -322,7 +322,7 @@ def exact_percentiles(
 
 #: group-count ceiling for the driver-side targets/assembly regime in
 #: `exact_percentiles_multi` — above it every step stays a distributed
-#: expression (tests force that path by patching this to 0)
+#: expression
 _DRIVER_ASSEMBLY_CAP = 10_000
 
 #: (group, vcol) combo ceiling for folding the window table into
@@ -473,23 +473,16 @@ def exact_percentiles_multi(
     )
 
     spark = df.sparkSession
-    # regime probe and bracket fetch MERGED into one job (r13, VERDICT
-    # r12 #7): collect at most cap+1 rows — hitting the limit means
-    # group cardinality exceeds the driver cap (distributed path; only
-    # cap+1 group rows ever reached the driver, so the probe stays
-    # bounded), otherwise the probe rows ARE the bracket rows the
-    # driver assembly iterates. The r11/r12 form ran count() and then
-    # collect() — two jobs where one suffices; each job is ~fixed
-    # scheduling cost, the constant term that dominates a8 at sf0.1.
-    probe_rows = brackets.limit(_DRIVER_ASSEMBLY_CAP + 1).collect()
-    driver_assembly = len(probe_rows) <= _DRIVER_ASSEMBLY_CAP
+    # the fetched rows ARE the bracket rows the driver assembly iterates
+    bracket_rows = driver_rows(brackets, _DRIVER_ASSEMBLY_CAP)
+    driver_assembly = bracket_rows is not None
     if driver_assembly:
         gfields = [brackets.schema[c] for c in group_cols]
         tgt_rows = []
         gkeys: list[tuple] = []
         tgt_idx: dict[tuple, tuple] = {}
         vcol_wins: dict[tuple, list] = {}
-        for row in probe_rows:
+        for row in bracket_rows:
             gk = tuple(row[c_] for c_ in group_cols)
             ck = _canon_gk(gk)
             gkeys.append(gk)

@@ -792,9 +792,8 @@ def _pagerank_oracle() -> str:
     """
 
 
-def _g_pagerank_centrality_impl(
-    spark: SparkSession, sf_dir: str, small_graph_threshold: int | None = None
-) -> DataFrame:
+@register("g_pagerank_centrality", _pagerank_oracle())
+def g_pagerank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import pagerank
 
     t = load_tables(spark, sf_dir)
@@ -817,10 +816,7 @@ def _g_pagerank_centrality_impl(
         ).alias("ed")
     ).select("ed.src", "ed.dst")
     # tol=0.0: exactly _PR_ITERS iterations, the oracle's fixed depth
-    pr = pagerank(
-        sym, damping=_PR_DAMP, max_iter=_PR_ITERS, tol=0.0,
-        small_graph_threshold=small_graph_threshold,
-    )
+    pr = pagerank(sym, damping=_PR_DAMP, max_iter=_PR_ITERS, tol=0.0)
     lab = t.embeddings.select(
         F.col("vec_id").alias("node"), "label"
     )
@@ -842,11 +838,6 @@ def _g_pagerank_centrality_impl(
         )
         .orderBy("label", "pos")
     )
-
-
-@register("g_pagerank_centrality", _pagerank_oracle())
-def g_pagerank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _g_pagerank_centrality_impl(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -1490,9 +1481,8 @@ def _kcore_oracle() -> str:
     """
 
 
-def _g_kcore_dense_region_impl(
-    spark: SparkSession, sf_dir: str, small_graph_threshold: int | None = None
-) -> DataFrame:
+@register("g_kcore_dense_region", _kcore_oracle())
+def g_kcore_dense_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import kcore
 
     t = load_tables(spark, sf_dir)
@@ -1502,10 +1492,7 @@ def _g_kcore_dense_region_impl(
     # max_iter aligned with the oracle's fixed recursion depth: if the
     # peel ever needed more rounds, Spark raises rather than letting
     # the two engines certify different fixpoints
-    core = kcore(
-        e, k=_KCORE_K, max_iter=_KCORE_ROUNDS,
-        small_graph_threshold=small_graph_threshold,
-    )
+    core = kcore(e, k=_KCORE_K, max_iter=_KCORE_ROUNDS)
     lab = t.embeddings.select(F.col("vec_id").alias("node"), "label")
     return (
         core.join(lab, "node")
@@ -1517,11 +1504,6 @@ def _g_kcore_dense_region_impl(
         )
         .orderBy("label")
     )
-
-
-@register("g_kcore_dense_region", _kcore_oracle())
-def g_kcore_dense_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _g_kcore_dense_region_impl(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -1698,9 +1680,8 @@ def _pagerank_knn_oracle() -> str:
     """
 
 
-def _g_pagerank_knn_impl(
-    spark: SparkSession, sf_dir: str, small_graph_threshold: int | None = None
-) -> DataFrame:
+@register("g_pagerank_knn", _pagerank_knn_oracle())
+def g_pagerank_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import pagerank
 
     t = load_tables(spark, sf_dir)
@@ -1723,10 +1704,7 @@ def _g_pagerank_knn_impl(
         .select("e.src", "e.dst")
         .distinct()
     )
-    pr = pagerank(
-        sym, damping=_PR_DAMP, max_iter=_PR_ITERS, tol=0.0,
-        small_graph_threshold=small_graph_threshold,
-    )
+    pr = pagerank(sym, damping=_PR_DAMP, max_iter=_PR_ITERS, tol=0.0)
     lab = t.embeddings.select(F.col("vec_id").alias("node"), "label")
     return (
         pr.join(lab, "node")
@@ -1746,11 +1724,6 @@ def _g_pagerank_knn_impl(
         )
         .orderBy("label", "pos")
     )
-
-
-@register("g_pagerank_knn", _pagerank_knn_oracle())
-def g_pagerank_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _g_pagerank_knn_impl(spark, sf_dir)
 
 
 def _kcore_knn_oracle() -> str:
@@ -1785,9 +1758,8 @@ def _kcore_knn_oracle() -> str:
     """
 
 
-def _g_kcore_knn_impl(
-    spark: SparkSession, sf_dir: str, small_graph_threshold: int | None = None
-) -> DataFrame:
+@register("g_kcore_knn", _kcore_knn_oracle())
+def g_kcore_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import kcore
 
     t = load_tables(spark, sf_dir)
@@ -1806,10 +1778,7 @@ def _g_kcore_knn_impl(
         .filter(F.col("cnt") == 2)
         .select("src", "dst")
     )
-    core = kcore(
-        mutual, k=_KNN_CORE_K, max_iter=_KCORE_ROUNDS,
-        small_graph_threshold=small_graph_threshold,
-    )
+    core = kcore(mutual, k=_KNN_CORE_K, max_iter=_KCORE_ROUNDS)
     lab = t.embeddings.select(F.col("vec_id").alias("node"), "label")
     return (
         core.join(lab, "node")
@@ -1821,11 +1790,6 @@ def _g_kcore_knn_impl(
         )
         .orderBy("label")
     )
-
-
-@register("g_kcore_knn", _kcore_knn_oracle())
-def g_kcore_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _g_kcore_knn_impl(spark, sf_dir)
 
 
 def _triangle_knn_oracle() -> str:

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from ..caching import track_persist
 from ..functions.helpers import duck_round_div, duck_sum_cents
 from ..functions.text import duck_hash64, hash64_expr
-from ..session import literal_frame
+from ..session import driver_rows, literal_frame
 from ..tables import load_tables
 from . import register
 
@@ -357,6 +357,9 @@ def dq_expectations_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shuffle; everything downstream is day-frame sized.
 # ---------------------------------------------------------------------------
 _SEAS_Z = 2.0
+#: distinct-day ceiling for collecting the daily frame (no real
+#: calendar reaches it)
+_DAY_CAP = 200_000
 
 
 @register(
@@ -419,21 +422,19 @@ def t_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so it is collected once and re-materialized as a literal frame:
     # every downstream aggregate/join then plans over a
     # LocalTableScan with no fact re-scan and no persisted blocks
-    # (r14, guide §2.4/§5; the r13 shape ran 22 jobs / ~1250 tasks,
-    # almost all on the ≤90-row frame). The collected values are the
-    # exact (date, long) rows the persisted frame held, and every
-    # downstream expression is unchanged Catalyst — bit-identical
-    # output. Over the cap (a corpus spanning >200k days — not a real
-    # calendar) the persisted distributed shape remains.
+    # (the persisted shape ran 22 jobs / ~1250 tasks, almost all on
+    # the ≤90-row frame). The collected values are the exact (date,
+    # long) rows the persisted frame holds, and every downstream
+    # expression is unchanged Catalyst — bit-identical output. Over
+    # `_DAY_CAP` the persisted distributed shape remains.
     marked = daily.select(
         "d", (F.weekday("d") + 1).alias("dow"), "cents"
     )
-    _DAY_CAP = 200_000
-    day_rows = marked.limit(_DAY_CAP + 1).collect()
-    if len(day_rows) <= _DAY_CAP:
-        marked = literal_frame(spark, day_rows, "d date, dow int, cents long")
-    else:  # pragma: no cover — >200k distinct days
+    day_rows = driver_rows(marked, _DAY_CAP)
+    if day_rows is None:
         marked = track_persist(marked)
+    else:
+        marked = literal_frame(spark, day_rows, "d date, dow int, cents long")
     g = marked.agg(
         F.sum("cents").cast("long").alias("gc"),
         F.count(F.lit(1)).cast("long").alias("gn"),

@@ -14,6 +14,11 @@ Session-scoped state lives here too: `memo` (the one store for values
 built once per application), `fingerprint` (the one rule for "this
 content changed") and `scratch_dir` (the one temp-dir policy). So is
 `literal_frame`, the one way to turn driver-side rows into a frame.
+
+`driver_rows` is the one regime seam: every operator that picks
+between an exact driver path and a distributed path by input size
+makes that choice through its one capped fetch, and tests force the
+distributed side of every such split with `distributed_regime()`.
 """
 
 from __future__ import annotations
@@ -23,7 +28,10 @@ import os
 import shutil
 import stat
 import tempfile
-from typing import Any, Callable, Sequence
+from contextlib import contextmanager
+from contextvars import ContextVar
+from operator import methodcaller
+from typing import Any, Callable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, _parse_datatype_string
@@ -245,3 +253,42 @@ def literal_frame(
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
     )
     return spark.createDataFrame(table, struct)
+
+
+_forced_distributed: ContextVar[bool] = ContextVar(
+    "forced_distributed", default=False
+)
+
+
+def driver_rows(
+    df: DataFrame, cap: int, fetch: Callable = methodcaller("collect")
+) -> Any:
+    """The driver/distributed split: `fetch(df.limit(cap + 1))`, returned
+    when it holds at most `cap` rows (the driver path's whole input),
+    else `None` (take the distributed path; at most `cap + 1` rows ever
+    reached the driver, so the probe stays memory-bounded). One action
+    both answers the regime question and feeds the driver path, so
+    there is no separate count job. `fetch` calls `collect` (a list of
+    `Row`s) or `toArrow` (a `pyarrow.Table`) on the limited frame;
+    both results have a `len`. (Not the unbound `DataFrame.collect`:
+    in PySpark 4 that is the abstract declaration, which returns
+    `None`.)
+
+    Inside `distributed_regime()` the cap is 0: only an empty input
+    stays on the driver."""
+    if _forced_distributed.get():
+        cap = 0
+    rows = fetch(df.limit(cap + 1))
+    return rows if len(rows) <= cap else None
+
+
+@contextmanager
+def distributed_regime() -> Iterator[None]:
+    """Test seam: every `driver_rows` call made in this context (this
+    thread or task only; it is a `ContextVar`) takes the distributed
+    path for any non-empty input."""
+    token = _forced_distributed.set(True)
+    try:
+        yield
+    finally:
+        _forced_distributed.reset(token)

@@ -10,6 +10,7 @@ from healthcare_research_data_pipeline_project_spark.operators.clustering import
     kmeans,
 )
 from healthcare_research_data_pipeline_project_spark.queries import QUERIES
+from healthcare_research_data_pipeline_project_spark.session import distributed_regime
 from tests.conftest import SF_SMOKE
 
 import healthcare_research_data_pipeline_project_spark.queries.datapipe7  # noqa: F401
@@ -105,11 +106,12 @@ def test_k1_centroid_is_mean(spark):
 
 
 def test_distributed_loop_matches_driver_training(spark):
-    # force the distributed rounds (threshold 0) and pin them against
-    # the in-memory fast path: same seeds, same blobs, same clusters
+    # force the distributed rounds and pin them against the in-memory
+    # fast path: same seeds, same blobs, same clusters
     df = _blob_df(spark)
     a1, c1, h1 = kmeans(df, k=3, max_iter=8)
-    a2, c2, h2 = kmeans(df, k=3, max_iter=8, driver_train_threshold=0)
+    with distributed_regime():
+        a2, c2, h2 = kmeans(df, k=3, max_iter=8)
     m1 = {r["vec_id"]: r["cid"] for r in a1.collect()}
     m2 = {r["vec_id"]: r["cid"] for r in a2.collect()}
     assert m1 == m2

@@ -14,6 +14,7 @@ from healthcare_research_data_pipeline_project_spark.queries import (
     QUERIES,
     load_all,
 )
+from healthcare_research_data_pipeline_project_spark.session import distributed_regime
 
 from .conftest import SF_SMOKE
 
@@ -174,14 +175,12 @@ def test_connected_components_hand_graph(spark):
         for r in connected_components(edges, "id_a", "id_b").collect()
     }
     assert comp == expected
-    # threshold 0 forces the distributed label-propagation loop — both
-    # paths must agree
-    loop = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            edges, "id_a", "id_b", small_graph_threshold=0
-        ).collect()
-    }
+    # the distributed label-propagation loop must agree
+    with distributed_regime():
+        loop = {
+            r["node"]: r["component"]
+            for r in connected_components(edges, "id_a", "id_b").collect()
+        }
     assert loop == expected
 
 
@@ -274,8 +273,9 @@ def test_incremental_clusters_hand_case(spark):
 def test_incremental_clusters_over_cap_distributed_fallback(spark):
     # r14 (VERDICT r13 #9): a batch over the driver edge cap must fall
     # back to the distributed rep-level components path and produce the
-    # SAME table as the driver union-find — not raise. edge_cap=1
-    # forces the fallback on the hand case's 3-pair batch.
+    # SAME table as the driver union-find — not raise.
+    # distributed_regime() forces the fallback on the hand case's
+    # 3-pair batch.
     from healthcare_research_data_pipeline_project_spark.operators.graph import (
         incremental_dedup_clusters,
     )
@@ -289,12 +289,13 @@ def test_incremental_clusters_over_cap_distributed_fallback(spark):
     delta_pairs = spark.createDataFrame(
         [(3, 5), (5, 11), (0, 20)], "id_a long, id_b long"
     )
-    got = {
-        r["doc_id"]: (r["cluster_id"], r["cluster_size"], r["is_keeper"])
-        for r in incremental_dedup_clusters(
-            stored, delta_docs, delta_pairs, edge_cap=1
-        ).collect()
-    }
+    with distributed_regime():
+        got = {
+            r["doc_id"]: (r["cluster_id"], r["cluster_size"], r["is_keeper"])
+            for r in incremental_dedup_clusters(
+                stored, delta_docs, delta_pairs
+            ).collect()
+        }
     assert got == {
         1: (1, 6, 1), 2: (1, 6, 0), 3: (1, 6, 0),
         10: (1, 6, 0), 11: (1, 6, 0), 5: (1, 6, 0),

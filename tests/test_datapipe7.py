@@ -10,6 +10,7 @@ import datetime
 from pyspark.sql import functions as F
 
 from healthcare_research_data_pipeline_project_spark.queries import QUERIES
+from healthcare_research_data_pipeline_project_spark.session import distributed_regime
 from tests.conftest import SF_SMOKE
 
 import healthcare_research_data_pipeline_project_spark.queries.datapipe7 as d7
@@ -317,29 +318,19 @@ def test_pagerank_knn_well_formed_and_deterministic(spark):
 def test_pagerank_knn_forced_distributed_equivalence(spark):
     # the corpus row rides the driver fast path at test scale; pin it
     # against the batched distributed loop (the 100x path)
-    from healthcare_research_data_pipeline_project_spark.queries.datapipe7 import (
-        _g_pagerank_knn_impl,
-    )
-
     fast = QUERIES["g_pagerank_knn"](spark, SF_SMOKE).collect()
-    dist = _g_pagerank_knn_impl(
-        spark, SF_SMOKE, small_graph_threshold=0
-    ).collect()
+    with distributed_regime():
+        dist = QUERIES["g_pagerank_knn"](spark, SF_SMOKE).collect()
     assert sorted(map(tuple, fast)) == sorted(map(tuple, dist))
 
 
 def test_kcore_knn_forced_distributed_equivalence(spark):
-    from healthcare_research_data_pipeline_project_spark.queries.datapipe7 import (
-        _g_kcore_knn_impl,
-    )
-
     fast = QUERIES["g_kcore_knn"](spark, SF_SMOKE).collect()
     assert fast  # mutual-kNN cycles exist on the blob corpus
     for r in fast:
         assert r["min_core_degree"] >= 2
-    dist = _g_kcore_knn_impl(
-        spark, SF_SMOKE, small_graph_threshold=0
-    ).collect()
+    with distributed_regime():
+        dist = QUERIES["g_kcore_knn"](spark, SF_SMOKE).collect()
     assert sorted(map(tuple, fast)) == sorted(map(tuple, dist))
 
 

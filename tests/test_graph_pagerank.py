@@ -11,6 +11,7 @@ from healthcare_research_data_pipeline_project_spark.operators.graph import (
     pagerank,
 )
 from healthcare_research_data_pipeline_project_spark.queries import QUERIES
+from healthcare_research_data_pipeline_project_spark.session import distributed_regime
 from tests.conftest import SF_SMOKE
 
 import healthcare_research_data_pipeline_project_spark.queries.datapipe7  # noqa: F401  (registers g_pagerank_centrality)
@@ -71,20 +72,19 @@ def test_symmetric_clique_components_uniform(spark):
 
 
 def test_distributed_loop_matches_driver_path(spark):
-    # force the distributed rounds (threshold 0) and pin them against
-    # the driver-side fast path on an asymmetric multi-component graph
+    # force the distributed rounds and pin them against the
+    # driver-side fast path on an asymmetric multi-component graph
     e = [(0, 1), (1, 2), (2, 0), (2, 1), (5, 6), (6, 5), (7, 5)]
     edges = _edges(spark, e)
     fast = {
         r["node"]: r["rank"]
         for r in pagerank(edges, tol=1e-10, max_iter=100).collect()
     }
-    dist = {
-        r["node"]: r["rank"]
-        for r in pagerank(
-            edges, tol=1e-10, max_iter=100, small_graph_threshold=0
-        ).collect()
-    }
+    with distributed_regime():
+        dist = {
+            r["node"]: r["rank"]
+            for r in pagerank(edges, tol=1e-10, max_iter=100).collect()
+        }
     assert set(fast) == set(dist)
     for node in fast:
         assert dist[node] == pytest.approx(fast[node], abs=1e-8)
@@ -103,13 +103,13 @@ def test_fixed_iteration_batched_loop_matches_driver_path(spark):
         for r in pagerank(edges, tol=0.0, max_iter=7).collect()
     }
     for spill_every in (1, 3, 5):
-        dist = {
-            r["node"]: r["rank"]
-            for r in pagerank(
-                edges, tol=0.0, max_iter=7, small_graph_threshold=0,
-                spill_every=spill_every,
-            ).collect()
-        }
+        with distributed_regime():
+            dist = {
+                r["node"]: r["rank"]
+                for r in pagerank(
+                    edges, tol=0.0, max_iter=7, spill_every=spill_every
+                ).collect()
+            }
         assert set(dist) == set(fast)
         for node in fast:
             assert dist[node] == pytest.approx(fast[node], abs=1e-9)
@@ -124,12 +124,11 @@ def test_fixed_iteration_distributed_with_dangling(spark):
         r["node"]: r["rank"]
         for r in pagerank(edges, tol=0.0, max_iter=5).collect()
     }
-    dist = {
-        r["node"]: r["rank"]
-        for r in pagerank(
-            edges, tol=0.0, max_iter=5, small_graph_threshold=0
-        ).collect()
-    }
+    with distributed_regime():
+        dist = {
+            r["node"]: r["rank"]
+            for r in pagerank(edges, tol=0.0, max_iter=5).collect()
+        }
     assert set(dist) == set(fast)
     for node in fast:
         assert dist[node] == pytest.approx(fast[node], abs=1e-9)
@@ -181,8 +180,9 @@ def test_kcore_distributed_matches_driver(spark):
     e = _edges(spark, clique + [(3, 10), (10, 11)])
     fast = {r["node"]: r["core_degree"]
             for r in kcore(e, k=3).collect()}
-    dist = {r["node"]: r["core_degree"]
-            for r in kcore(e, k=3, small_graph_threshold=0).collect()}
+    with distributed_regime():
+        dist = {r["node"]: r["core_degree"]
+                for r in kcore(e, k=3).collect()}
     assert fast == dist == {0: 3, 1: 3, 2: 3, 3: 3}
 
 
@@ -198,12 +198,11 @@ def test_convergence_loop_distributed_with_dangling(spark):
         r["node"]: r["rank"]
         for r in pagerank(edges, tol=1e-10, max_iter=100).collect()
     }
-    dist = {
-        r["node"]: r["rank"]
-        for r in pagerank(
-            edges, tol=1e-10, max_iter=100, small_graph_threshold=0
-        ).collect()
-    }
+    with distributed_regime():
+        dist = {
+            r["node"]: r["rank"]
+            for r in pagerank(edges, tol=1e-10, max_iter=100).collect()
+        }
     assert set(dist) == set(fast)
     for node in fast:
         assert dist[node] == pytest.approx(fast[node], abs=1e-8)
@@ -225,7 +224,7 @@ def test_derived_small_graph_threshold():
     # more rounds per materialization -> distributed amortizes better
     # -> lower threshold; never exceeds the memory cap
     assert derived_small_graph_threshold(12, 1) <= _DRIVER_EDGE_CAP
-    assert derived_small_graph_threshold(12, 3) <= derived_small_graph_threshold(12, 6) or True
+    assert derived_small_graph_threshold(12, 3) > derived_small_graph_threshold(12, 6)
     # monotone sanity: fewer rounds means driver is cheaper per edge,
     # so the threshold can only grow (until the cap)
     assert derived_small_graph_threshold(6, 3) >= derived_small_graph_threshold(24, 3)

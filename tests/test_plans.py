@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from healthcare_research_data_pipeline_project_spark import queries as Q
 from healthcare_research_data_pipeline_project_spark.plans import explain as X
+from healthcare_research_data_pipeline_project_spark.session import distributed_regime
 from healthcare_research_data_pipeline_project_spark.tables import load_tables
 
 from .conftest import SF_ORACLE
@@ -523,24 +524,24 @@ def test_pagerank_canonical_reps_is_unforced_anti_join(spark, tmp_path):
     assert reps.filter(F.col("vec_id").isin(3, 7)).count() == 0
 
 
-def test_exact_percentiles_no_unpartitioned_window(spark, monkeypatch):
+def test_exact_percentiles_no_unpartitioned_window(spark):
     # the percentile rewrite exists to kill unbounded single-task
     # shapes: no WindowExec without a partition spec may appear (the
     # in-window running count partitions by (group, spec)), and no
     # exact-percentile aggregate buffer anywhere. Forced onto the
-    # DISTRIBUTED assembly path (cap=0): the small-groups regime
+    # DISTRIBUTED assembly path: the small-groups regime
     # returns a driver-assembled local relation whose plan is a
     # LocalTableScan — this pin guards the path big corpora ride.
     from healthcare_research_data_pipeline_project_spark.operators import (
         scale as SC,
     )
 
-    monkeypatch.setattr(SC, "_DRIVER_ASSEMBLY_CAP", 0)
     li = load_tables(spark, SF_ORACLE).lineitem
-    df = SC.exact_percentiles_multi(
-        li, ["l_returnflag"],
-        {"p50": ("l_extendedprice", 0.5), "p90": ("l_quantity", 0.9)},
-    )
+    with distributed_regime():
+        df = SC.exact_percentiles_multi(
+            li, ["l_returnflag"],
+            {"p50": ("l_extendedprice", 0.5), "p90": ("l_quantity", 0.9)},
+        )
     p = X.plan(df)
     assert "windowspecdefinition" in p.lower(), (
         "forced distributed path must contain the in-window running "

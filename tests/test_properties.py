@@ -16,6 +16,7 @@ from healthcare_research_data_pipeline_project_spark.operators.relational import
     band_self_join,
     bucketize,
 )
+from healthcare_research_data_pipeline_project_spark.session import distributed_regime
 from healthcare_research_data_pipeline_project_spark.sources.sinks import upsert_by_key
 
 # one shared tiny frame per case keeps each hypothesis example cheap;
@@ -147,12 +148,11 @@ def test_connected_components_paths_agree(spark, edges):
         (r["node"], r["component"])
         for r in connected_components(df, "a", "b").collect()
     }
-    loop = {
-        (r["node"], r["component"])
-        for r in connected_components(
-            df, "a", "b", small_graph_threshold=0
-        ).collect()
-    }
+    with distributed_regime():
+        loop = {
+            (r["node"], r["component"])
+            for r in connected_components(df, "a", "b").collect()
+        }
     assert fast == loop
 
 

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from healthcare_research_data_pipeline_project_spark.functions.helpers import DEC
 from healthcare_research_data_pipeline_project_spark.operators import scale as SC
 from healthcare_research_data_pipeline_project_spark.plans import explain as X
+from healthcare_research_data_pipeline_project_spark.session import distributed_regime
 from healthcare_research_data_pipeline_project_spark.streaming import (
     surveillance as sv,
 )
@@ -488,7 +489,7 @@ def test_leakage_safe_split_never_straddles(spark):
     assert s2 == {d: r["split"] for d, r in by_doc.items()}
 
 
-def test_exact_percentiles_driver_assembly_equals_distributed(spark, monkeypatch):
+def test_exact_percentiles_driver_assembly_equals_distributed(spark):
     # the two assembly regimes (driver-local literal relations +
     # python finish vs the distributed pivot path) must agree
     # bit-for-bit on the same input
@@ -499,16 +500,16 @@ def test_exact_percentiles_driver_assembly_equals_distributed(spark, monkeypatch
         .orderBy("l_returnflag")
         .collect()
     )
-    monkeypatch.setattr(SC, "_DRIVER_ASSEMBLY_CAP", 0)
-    big = (
-        SC.exact_percentiles(li, ["l_returnflag"], "l_quantity", specs)
-        .orderBy("l_returnflag")
-        .collect()
-    )
+    with distributed_regime():
+        big = (
+            SC.exact_percentiles(li, ["l_returnflag"], "l_quantity", specs)
+            .orderBy("l_returnflag")
+            .collect()
+        )
     assert [tuple(r) for r in small] == [tuple(r) for r in big]
 
 
-def test_exact_percentiles_null_group_key(spark, monkeypatch):
+def test_exact_percentiles_null_group_key(spark):
     # percentile() treats a NULL group KEY as a regular group — both
     # assembly regimes must emit its row instead of orphaning it into
     # the miss guard
@@ -527,15 +528,15 @@ def test_exact_percentiles_null_group_key(spark, monkeypatch):
         for r in SC.exact_percentiles(df, ["g"], "v", {"p50": 0.5}).collect()
     }
     assert small == ref
-    monkeypatch.setattr(SC, "_DRIVER_ASSEMBLY_CAP", 0)
-    big = {
-        r["g"]: r["p50"]
-        for r in SC.exact_percentiles(df, ["g"], "v", {"p50": 0.5}).collect()
-    }
+    with distributed_regime():
+        big = {
+            r["g"]: r["p50"]
+            for r in SC.exact_percentiles(df, ["g"], "v", {"p50": 0.5}).collect()
+        }
     assert big == ref
 
 
-def test_exact_percentiles_nan_group_key(spark, monkeypatch):
+def test_exact_percentiles_nan_group_key(spark):
     # Spark grouping treats NaN = NaN, so a float-NaN group key is one
     # regular group. Python NaN is unequal to itself and hashes by
     # object id (3.10+), so the driver-assembly regime's dicts keyed
@@ -562,8 +563,8 @@ def test_exact_percentiles_nan_group_key(spark, monkeypatch):
         SC.exact_percentiles(df, ["g"], "v", {"p50": 0.5}).collect()
     )
     assert small == ref
-    monkeypatch.setattr(SC, "_DRIVER_ASSEMBLY_CAP", 0)
-    big = keyed(
-        SC.exact_percentiles(df, ["g"], "v", {"p50": 0.5}).collect()
-    )
+    with distributed_regime():
+        big = keyed(
+            SC.exact_percentiles(df, ["g"], "v", {"p50": 0.5}).collect()
+        )
     assert big == ref

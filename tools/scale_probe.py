@@ -30,7 +30,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from healthcare_research_data_pipeline_project_spark import queries as Q  # noqa: E402
-from healthcare_research_data_pipeline_project_spark.session import get_spark  # noqa: E402
+from healthcare_research_data_pipeline_project_spark.session import (  # noqa: E402
+    distributed_regime,
+    get_spark,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SRC = "/root/testdata/sf0.1"
@@ -75,27 +78,14 @@ HEADLINE = [
 #: forced-distributed graph-loop probes (r6 verdict ask #2): the
 #: corpus queries ride the driver fast path at sf0.1 and the
 #: distributed loop at sf1, so their raw ratio conflates the regime
-#: change with the true asymptote. These variants pin
-#: small_graph_threshold=0 so BOTH legs ride the distributed loop —
-#: the ratio then measures the loop itself. Resolved lazily (after
-#: Q.load_all()).
+#: change with the true asymptote. Each variant runs its registered
+#: query inside `distributed_regime()` so BOTH legs ride the
+#: distributed loop — the ratio then measures the loop itself.
 DIST_VARIANTS = {
-    "g_pagerank_knn_dist": (
-        "healthcare_research_data_pipeline_project_spark.queries.datapipe7",
-        "_g_pagerank_knn_impl",
-    ),
-    "g_kcore_knn_dist": (
-        "healthcare_research_data_pipeline_project_spark.queries.datapipe7",
-        "_g_kcore_knn_impl",
-    ),
-    "g_pagerank_centrality_dist": (
-        "healthcare_research_data_pipeline_project_spark.queries.datapipe7",
-        "_g_pagerank_centrality_impl",
-    ),
-    "g_kcore_dense_region_dist": (
-        "healthcare_research_data_pipeline_project_spark.queries.datapipe7",
-        "_g_kcore_dense_region_impl",
-    ),
+    "g_pagerank_knn_dist": "g_pagerank_knn",
+    "g_kcore_knn_dist": "g_kcore_knn",
+    "g_pagerank_centrality_dist": "g_pagerank_centrality",
+    "g_kcore_dense_region_dist": "g_kcore_dense_region",
 }
 
 
@@ -125,13 +115,13 @@ def _resolve_query(name):
     if name == "sim_ivf_range_search_routed":
         return _ivf_range_routed
     if name in DIST_VARIANTS:
-        import importlib
+        query = Q.QUERIES[DIST_VARIANTS[name]]
 
-        mod, fn = DIST_VARIANTS[name]
-        impl = getattr(importlib.import_module(mod), fn)
-        return lambda spark, sf_dir: impl(
-            spark, sf_dir, small_graph_threshold=0
-        )
+        def forced(spark, sf_dir):
+            with distributed_regime():
+                return query(spark, sf_dir)
+
+        return forced
     return Q.QUERIES[name]
 
 
