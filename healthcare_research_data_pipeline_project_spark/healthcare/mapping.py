@@ -24,9 +24,10 @@ SURVEY §7.3) is reproduced literally.
 from __future__ import annotations
 
 import hashlib
+import math
 import os
 
-from ..session import fingerprint, memo
+from ..session import default_parallelism, fingerprint, memo
 from ..tables import (
     SPLIT_CACHE_ROOT,
     TABLE_NAMES,
@@ -306,7 +307,7 @@ def _warehouse_cache_dir(sf_dir: str) -> str:
     # physical layout is part of the contract: a layout change must
     # invalidate the cache (bucketed files read as unbucketed — or the
     # reverse — would silently mis-plan joins)
-    spec += f"\x02buckets={N_BUCKETS}:" + ",".join(
+    spec += f"\x02buckets={_fact_buckets(sf_dir)}:" + ",".join(
         f"{t}->{k}" for t, k in sorted(BUCKETED_FACTS.items())
     )
     key = hashlib.md5(spec.encode()).hexdigest()[:12]
@@ -319,15 +320,44 @@ def _warehouse_cache_dir(sf_dir: str) -> str:
 #: exchange-free (the same co-location a 100 TB warehouse gets from
 #: bucketed fact tables). One spec per table — encounter_id wins over
 #: patient_id because it keys ~all per-encounter aggregation.
+#:
+#: All facts share one bucket count (`_fact_buckets`): a bucketed join
+#: is exchange-free only between tables of equal bucket counts. The
+#: count is one bucket per core, rising with source volume once a
+#: bucket would exceed one scan split: every bucketed scan runs one
+#: task per bucket, and at interactive sizes the task count, not the
+#: bytes, sets the latency.
 BUCKETED_FACTS = {
     "fact_encounters": "encounter_id",
     "fact_lab_results": "encounter_id",
     "fact_medication_orders": "encounter_id",
 }
-N_BUCKETS = 32
+#: the base tables every fact is derived from
+_FACT_SOURCES = ("orders", "lineitem")
+#: Spark's default `spark.sql.files.maxPartitionBytes`, the most one
+#: scan task reads; the engine does not change it
+_SPLIT_BYTES = 128 * 1024 * 1024
 
 
-def _register_bucketed(spark, name: str, location: str, key: str) -> None:
+def _bucket_count(source_bytes: int, cores: int) -> int:
+    """One bucket per core, or one per scan split of the sources when
+    that is more."""
+    return max(cores, math.ceil(source_bytes / _SPLIT_BYTES))
+
+
+def _fact_buckets(sf_dir: str) -> int:
+    """The facts' bucket count for `sf_dir`'s sources on this host,
+    sized from the data bytes `session.fingerprint` records (the last
+    element of its content part, for a file or a directory)."""
+    sizes = [fingerprint(table_path(sf_dir, n))[1] for n in _FACT_SOURCES]
+    return _bucket_count(
+        sum(s[-1] for s in sizes if s), default_parallelism()
+    )
+
+
+def _register_bucketed(
+    spark, name: str, location: str, key: str, buckets: int
+) -> None:
     """(Re-)register existing bucketed parquet files as a catalog table
     (the in-memory catalog forgets them between sessions; the files and
     their bucket layout persist)."""
@@ -339,7 +369,7 @@ def _register_bucketed(spark, name: str, location: str, key: str) -> None:
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     spark.sql(
         f"CREATE TABLE {name} ({schema_ddl}) USING parquet "
-        f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {N_BUCKETS} BUCKETS "
+        f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {buckets} BUCKETS "
         f"LOCATION '{location}'"
     )
 
@@ -362,7 +392,12 @@ def ensure_warehouse(spark, sf_dir: str) -> None:
     (they broadcast); facts are written BUCKETED by their join key and
     register as catalog tables, so per-encounter aggregation and
     join-back — the shape of every hc_q* query — plans with no
-    exchange. At 100 TB the write becomes
+    exchange. The bucket count is one per core
+    (`session.default_parallelism`), rising with the sources' volume
+    once a bucket would exceed one scan split, and it is shared by all
+    facts, because their joins stay bucket-local only between equal
+    counts; it is part of the cache key, so another core count builds
+    its own entry. At 100 TB the write becomes
     `sources.sinks.write_warehouse` partitioned by date AND bucketed
     the same way — the query texts are unchanged either way.
     """
@@ -374,7 +409,10 @@ def ensure_warehouse(spark, sf_dir: str) -> None:
 
 def _register_warehouse(spark, sf_dir: str) -> None:
     cache = _warehouse_cache_dir(sf_dir)
-    ensure_cache(cache, lambda tmp: _build_warehouse(spark, sf_dir, tmp))
+    buckets = _fact_buckets(sf_dir)
+    ensure_cache(
+        cache, lambda tmp: _build_warehouse(spark, sf_dir, tmp, buckets)
+    )
 
     # serve: dims as plain parquet views (no memory cache — a pruned
     # columnar scan is already ~scan-speed); facts as bucketed catalog
@@ -382,14 +420,14 @@ def _register_warehouse(spark, sf_dir: str) -> None:
     for name, _sql in mapping_ctes(_SPARK_DIALECT):
         loc = os.path.join(cache, name)
         if name in BUCKETED_FACTS:
-            _register_bucketed(spark, name, loc, BUCKETED_FACTS[name])
+            _register_bucketed(spark, name, loc, BUCKETED_FACTS[name], buckets)
         else:
             spark.read.parquet(loc).createOrReplaceTempView(name)
 
 
-def _build_warehouse(spark, sf_dir: str, tmp: str) -> None:
+def _build_warehouse(spark, sf_dir: str, tmp: str, buckets: int) -> None:
     """One-time ETL: derive every table from the base views and write
-    it under `tmp`."""
+    it under `tmp`, the facts in `buckets` buckets."""
     register_views(spark, sf_dir)
     for name, sql in mapping_ctes(_SPARK_DIALECT):
         # each CTE references only base views and earlier warehouse
@@ -403,15 +441,15 @@ def _build_warehouse(spark, sf_dir: str, tmp: str) -> None:
             # without it every task emits one file PER bucket
             spark.sql(f"DROP TABLE IF EXISTS __bld_{name}")
             (
-                df.repartition(N_BUCKETS, key)
+                df.repartition(buckets, key)
                 .write.mode("overwrite")
-                .bucketBy(N_BUCKETS, key)
+                .bucketBy(buckets, key)
                 .sortBy(key)
                 .option("path", loc)
                 .saveAsTable(f"__bld_{name}")
             )
             spark.sql(f"DROP TABLE IF EXISTS __bld_{name}")
-            _register_bucketed(spark, name, loc, key)
+            _register_bucketed(spark, name, loc, key, buckets)
         else:
             df.write.mode("overwrite").parquet(loc)
             spark.read.parquet(loc).createOrReplaceTempView(name)

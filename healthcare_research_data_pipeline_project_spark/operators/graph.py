@@ -84,18 +84,45 @@ def collected_union_find(edges: DataFrame, src: str, dst: str) -> DataFrame:
     (the delta-proportional maintenance paths): one capped collect of
     the raw edges into the driver union-find, without the persist that
     `connected_components` puts in front of its fetch. Over
-    `_DRIVER_EDGE_CAP` edges the call falls back to
-    `connected_components` (distributed label propagation) instead of
-    raising: an over-cap delta batch re-pays the edge plan once but
-    completes. Callers whose edge sets are NEVER delta-bounded should
-    go straight to `connected_components`."""
-    rows = driver_rows(
-        edges.select(F.col(src).cast("long"), F.col(dst).cast("long")),
-        _DRIVER_EDGE_CAP,
+    `_DRIVER_EDGE_CAP` edges the call falls back to the distributed
+    label propagation instead of raising: it persists the edge
+    projection and starts the loop from it, so an over-cap delta batch
+    re-pays the edge plan once, to fill that cache, and fetches no
+    second capped sample. Callers whose edge sets are NEVER
+    delta-bounded should go straight to `connected_components`."""
+    pairs = edges.select(
+        F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
     )
-    if rows is None:
-        return connected_components(edges, src, dst)
-    return _driver_union_find(edges.sparkSession, rows)
+    rows = driver_rows(pairs, _DRIVER_EDGE_CAP)
+    if rows is not None:
+        return _driver_union_find(edges.sparkSession, rows)
+    # the one cached copy holds each edge once; the loop reads both
+    # orientations through the explode over it
+    pairs = pairs.persist()
+    return _propagate_labels(pairs, _symmetrize(pairs, "u", "v"))
+
+
+def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Both orientations of every edge as long (u, v).
+
+    A 2-element explode, not a self-union: the union form references
+    the caller's edge pipeline twice (for LSH dedup that is the whole
+    minhash + banding computation); the explode emits both directions
+    in one pass."""
+    return edges.select(
+        F.explode(
+            F.array(
+                F.struct(
+                    F.col(src).cast("long").alias("u"),
+                    F.col(dst).cast("long").alias("v"),
+                ),
+                F.struct(
+                    F.col(dst).cast("long").alias("u"),
+                    F.col(src).cast("long").alias("v"),
+                ),
+            )
+        ).alias("e")
+    ).select("e.u", "e.v")
 
 
 # ---------------------------------------------------------------------------
@@ -190,7 +217,6 @@ def connected_components(
     the caller's. The edge list is `persist()`-ed for cross-round
     reuse and released via the matching public `unpersist()`.
     """
-    spark = edges.sparkSession
     # adaptive small-graph path: near-dup pair graphs are usually tiny
     # relative to the corpus (edges ∝ real duplication, not data size).
     # Below the cap an exact driver-side union-find beats N
@@ -198,26 +224,7 @@ def connected_components(
     # the only shape that scales. The symmetrized edge list is
     # persisted before the fetch, so the (possibly expensive) caller
     # pipeline is evaluated once whichever path wins.
-    #
-    # Symmetrization is a 2-element explode, not a self-union: the
-    # union form references the caller's edge pipeline twice (for LSH
-    # dedup that is the whole minhash + banding computation); the
-    # explode emits both directions in one pass.
-    sym = edges.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col(src).cast("long").alias("u"),
-                    F.col(dst).cast("long").alias("v"),
-                ),
-                F.struct(
-                    F.col(dst).cast("long").alias("u"),
-                    F.col(src).cast("long").alias("v"),
-                ),
-            )
-        ).alias("e")
-    ).select("e.u", "e.v")
-    sym = sym.persist()
+    sym = _symmetrize(edges, src, dst).persist()
     # the driver path is one union-find pass (O(E·alpha), not
     # O(E·rounds)), so the cost crossover sits far above the memory
     # cap — the cap IS the threshold. u <= v keeps one orientation per
@@ -226,10 +233,24 @@ def connected_components(
     rows = driver_rows(sym.filter(F.col("u") <= F.col("v")), _DRIVER_EDGE_CAP)
     if rows is not None:
         try:
-            return _driver_union_find(spark, [(r[0], r[1]) for r in rows])
+            return _driver_union_find(
+                edges.sparkSession, [(r[0], r[1]) for r in rows]
+            )
         finally:
             sym.unpersist()
+    return _propagate_labels(sym, sym, max_iter, checkpoint_dir)
 
+
+def _propagate_labels(
+    cached: DataFrame,
+    sym: DataFrame,
+    max_iter: int = 25,
+    checkpoint_dir: str | None = None,
+) -> DataFrame:
+    """The distributed loop of `connected_components` over the
+    symmetrized edges `sym`, which read the persisted frame `cached`;
+    `cached` is released when the loop returns or raises."""
+    spark = sym.sparkSession
     own_dir = checkpoint_dir is None
     base = checkpoint_dir or scratch_dir(spark, "cc_")
     ping = [os.path.join(base, "labels_a"), os.path.join(base, "labels_b")]
@@ -300,7 +321,7 @@ def connected_components(
                 converged = True
                 break
     finally:
-        sym.unpersist()
+        cached.unpersist()
     if not converged:
         if own_dir:
             _rm_local(base)

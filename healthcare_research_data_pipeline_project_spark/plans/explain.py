@@ -65,12 +65,15 @@ def capture_build_actions():
 
     Pure-Python interception: the repo's build-time jobs all fire
     through the public DataFrame action surface (collect / count /
-    first / head / take / toLocalIterator / foreach* ) or a
-    DataFrameWriter terminal — so wrapping those methods captures
-    every such job without JVM listener plumbing (which PySpark does
-    not expose and Spark Connect forbids). Yields a list of
-    (action_name, executed_plan_string) appended in call order; the
-    plan is read AFTER delegation so AQE's final plan is recorded.
+    first / head / take / toLocalIterator / foreach* / toArrow /
+    toPandas) or a DataFrameWriter terminal — so wrapping those
+    methods captures every such job without JVM listener plumbing
+    (which PySpark does not expose and Spark Connect forbids). Yields
+    a list of (action_name, executed_plan_string) appended in call
+    order; the plan is read AFTER delegation so AQE's final plan is
+    recorded. An action that runs through another wrapped one
+    (`first` → `head` → `take` → `collect`, a non-Arrow `toPandas`)
+    is recorded once, by the innermost call.
     """
     from pyspark.sql import readwriter
 
@@ -98,9 +101,20 @@ def capture_build_actions():
         except Exception:  # Connect / teardown: nothing to record
             pass
 
+    def wrap(orig, label: str, frame_of):
+        def wrapper(self, *a, **k):
+            seen = len(captured)
+            out = orig(self, *a, **k)
+            if len(captured) == seen:  # no wrapped action ran inside
+                grab(label, frame_of(self))
+            return out
+
+        return wrapper
+
     df_actions = (
         "collect", "count", "first", "head", "take", "tail",
-        "toLocalIterator", "foreach", "foreachPartition",
+        "toLocalIterator", "foreach", "foreachPartition", "toArrow",
+        "toPandas",
     )
     saved = {}
     for cls in df_classes:
@@ -109,24 +123,15 @@ def capture_build_actions():
                 continue
             orig = cls.__dict__[name]
             saved[(cls, name)] = orig
-
-            def wrapper(self, *a, __orig=orig, __name=name, **k):
-                out = __orig(self, *a, **k)
-                grab(__name, self)
-                return out
-
-            setattr(cls, name, wrapper)
+            setattr(cls, name, wrap(orig, name, lambda df: df))
     for name in ("save", "parquet", "orc", "json", "csv", "text",
                  "saveAsTable"):
         orig = getattr(readwriter.DataFrameWriter, name)
         saved[(readwriter.DataFrameWriter, name)] = orig
-
-        def wwrapper(self, *a, __orig=orig, __name=name, **k):
-            out = __orig(self, *a, **k)
-            grab(f"write.{__name}", self._df)
-            return out
-
-        setattr(readwriter.DataFrameWriter, name, wwrapper)
+        setattr(
+            readwriter.DataFrameWriter, name,
+            wrap(orig, f"write.{name}", lambda w: w._df),
+        )
     try:
         yield captured
     finally:

@@ -38,7 +38,15 @@ from pyspark.sql.types import StructType, _parse_datatype_string
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """`$SPARK_GRAFT_CPUS`, else the cores this process may run on
+    (what `nproc` counts)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    if cpus:
+        return int(cpus)
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API (macOS, Windows)
+        return os.cpu_count() or 1
 
 
 def get_spark(

@@ -7,11 +7,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from healthcare_research_data_pipeline_project_spark import queries as Q
+from healthcare_research_data_pipeline_project_spark.healthcare import mapping
 from healthcare_research_data_pipeline_project_spark.plans import explain as X
 from healthcare_research_data_pipeline_project_spark.session import distributed_regime
 from healthcare_research_data_pipeline_project_spark.tables import load_tables
 
-from .conftest import SF_ORACLE
+from .conftest import SF_ORACLE, SF_SMOKE
 
 Q.load_all()
 
@@ -112,6 +113,10 @@ def test_warehouse_fact_aggregation_uses_bucketing(spark):
     # single-partition gather are the only allowed exchanges.
     df = Q.QUERIES["hc_q2_sepsis_bundle"](spark, SF_ORACLE)
     assert "Bucketed: true" in X.plan(df), "facts must scan as bucketed tables"
+    # every fact scan reads all of the derived bucket count, one per core
+    # at this volume
+    n = mapping._fact_buckets(SF_ORACLE)
+    assert X.plan(df).count(f"SelectedBucketsCount: {n} out of {n}") == 3
     # simple mode inlines exchange arguments on one line
     for line in X.plan(df, "simple").splitlines():
         if "Exchange" in line:
@@ -349,6 +354,24 @@ def test_capture_build_actions_sees_census_collect(spark):
     for p in collects:
         assert "CartesianProduct" not in p
         assert "Window" not in p
+
+
+def test_capture_build_actions_sees_arrow_fetch(spark):
+    # pagerank's driver regime fetches its edges with `toArrow`, and a
+    # `first()` is one action, not one per nested call it makes
+    from healthcare_research_data_pipeline_project_spark.caching import (
+        unpersist_tracked,
+    )
+
+    try:
+        with X.capture_build_actions() as acts:
+            Q.QUERIES["g_pagerank_knn"](spark, SF_SMOKE)
+    finally:
+        unpersist_tracked()
+    assert "toArrow" in [a for a, _p in acts], acts
+    with X.capture_build_actions() as acts:
+        spark.range(3).first()
+    assert [a for a, _p in acts] == ["collect"]
 
 
 def test_ks_two_sample_scans_fact_once_in_final_plan(spark):

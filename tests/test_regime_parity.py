@@ -26,6 +26,9 @@ from healthcare_research_data_pipeline_project_spark.operators.graph import (
     decremental_dedup_clusters,
     incremental_dedup_clusters,
 )
+from healthcare_research_data_pipeline_project_spark.plans.explain import (
+    capture_build_actions,
+)
 from healthcare_research_data_pipeline_project_spark.session import (
     distributed_regime,
     driver_rows,
@@ -116,6 +119,20 @@ def test_regimes_agree(spark, monkeypatch, case):
     assert outcomes[0] == outcomes[1]
     if error is None:
         assert outcomes[0], "an empty result pins nothing"
+
+
+def test_union_find_fallback_fetches_once(spark, monkeypatch):
+    # the driver regime is its one capped collect; over the cap the
+    # label loop starts from the persisted edges, with no second fetch
+    # (seed write + one write per round)
+    actions = []
+    for regime in (nullcontext, distributed_regime):
+        with regime(), capture_build_actions() as acts:
+            _union_find_fallback(spark, monkeypatch)
+        unpersist_tracked()
+        actions.append([a for a, _p in acts])
+    assert actions[0] == ["collect"]
+    assert actions[1].count("collect") == 1 and len(actions[1]) < 5, actions
 
 
 def test_driver_rows_contract(spark):
