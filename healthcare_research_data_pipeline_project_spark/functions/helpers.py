@@ -115,12 +115,6 @@ def rnd(c: Column, alias: str, scale: int = 2) -> Column:
     return F.round(c, scale).cast("double").alias(alias)
 
 
-def bool_sum(c: str | Column, alias: str) -> Column:
-    """SUM over a boolean flag (MySQL sums booleans natively; Spark
-    needs the int cast — SURVEY §7.10)."""
-    return F.sum(col_of(c).cast("int")).alias(alias)
-
-
 def count_if(cond: Column, alias: str) -> Column:
     """COUNT(CASE WHEN cond THEN 1 END) — conditional aggregation (A5)."""
     return F.sum(F.when(cond, 1).otherwise(0)).cast("long").alias(alias)

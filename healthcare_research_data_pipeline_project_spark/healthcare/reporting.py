@@ -42,12 +42,6 @@ def encounters_by_type(encounters: DataFrame) -> DataFrame:
     )
 
 
-def demographic_distribution(patients: DataFrame, col: str) -> DataFrame:
-    """Gender/race %-distribution (reference API `_calculate_distribution`,
-    healthcare-api-main.py:527-542) — in-plan, not driver-side."""
-    return distribution_pct(patients, col)
-
-
 def age_distribution(patients: DataFrame, current_year: int = 2025) -> DataFrame:
     """Fixed-range age histogram (healthcare-api-main.py:544-576)."""
     ages = patients.select(

@@ -80,6 +80,7 @@ import base64 as _b64
 import hashlib as _hashlib
 import hmac as _hmac
 import json as _json
+import threading as _threading
 import time as _time
 
 
@@ -158,7 +159,9 @@ class RateLimiter:
     """Fixed-window counter per key — Redis INCR + first-call EXPIRE
     semantics (reference `:181-206`) without the Redis dependency. The
     window starts at the first call and resets `window_seconds` later,
-    exactly like an EXPIRE set on count==1."""
+    exactly like an EXPIRE set on count==1. One lock makes each check's
+    read-modify-write atomic, as INCR is: the HTTP server runs requests
+    on threads."""
 
     def __init__(self, max_calls: int = 100, window_seconds: int = 3600,
                  clock=_time.monotonic):
@@ -166,15 +169,17 @@ class RateLimiter:
         self.window_seconds = window_seconds
         self._clock = clock
         self._windows: dict[str, tuple[float, int]] = {}  # key → (start, count)
+        self._lock = _threading.Lock()
 
     def check(self, key: str) -> int:
         """Count a call; return the in-window count or raise 429."""
-        now = self._clock()
-        start, count = self._windows.get(key, (now, 0))
-        if now - start >= self.window_seconds:
-            start, count = now, 0
-        count += 1
-        self._windows[key] = (start, count)
+        with self._lock:
+            now = self._clock()
+            start, count = self._windows.get(key, (now, 0))
+            if now - start >= self.window_seconds:
+                start, count = now, 0
+            count += 1
+            self._windows[key] = (start, count)
         if count > self.max_calls:
             raise RateLimitExceededError(
                 f"Rate limit exceeded. Max {self.max_calls} calls per "

@@ -19,9 +19,19 @@ differ only in how they generate candidates:
   squared-L2 fold in array order.
 - `_adc_scan`: the PQ compressed scan, Σ_j LUT[j][code[j]] over the
   stored m-byte codes, optionally restricted to routed cells.
-- `_topk` / `_adc_rank`: the per-qid `row_number` rank, kept to k.
+- `_topk(by=...)` / `_adc_rank`: the `row_number` rank per `by`
+  (qid by default), kept to k — also the rank tail of `knn_graph`,
+  `knn_graph_ann` (by src) and `tfidf_knn_posting` (by doc_id).
 - `_refine`: the exact squared-L2 re-rank of a PQ shortlist
   (IndexRefineFlat).
+- `_projections` / `_sign_bits(lo, n)`: the `pr` array of md5-plane
+  projections and its sign-bit key over planes lo..lo+n-1 — the LSH
+  bucket of `lsh_multiprobe_topk` and the band keys of
+  `knn_graph_ann`.
+- `_normed` / `_cos_self_join`: the persisted (id, block, v, nrm)
+  self-join on block (plus band keys), with the pair predicate and
+  the 4-dp `dot / (na·nb)` cosine — the catalyst branches of
+  `embedding_near_dup_pairs` and `knn_graph`, and `knn_graph_ann`.
 
 Route compositions:
 
@@ -33,18 +43,21 @@ Route compositions:
 | `ivf_topk`, `ivf_range_search` | `_route("cos")` ⋈ cell | `_cos4` | `_topk` / τ screen |
 | `pq_topk` | `_adc_scan` (all codes) | ADC | `_adc_rank` [+ `_refine`] |
 | `ivfpq_topk`, `ann_serve_topk` | `_route("l2")` + `_adc_scan` | ADC | `_adc_rank` [+ `_refine`] |
+| `knn_graph_ann` | `_cos_self_join` on block + band key | rounded cosine | `_topk(by="src")` |
 
 `auto_ivf_nprobe` ranks cells with the same `_route` stage the
 serving routes use, and the audited corpus rows `sim_pq_topk` /
 `sim_ivfpq_topk` (queries/datapipe7.py) build their one candidate
-expansion from `_route` and `_adc_scan`. LSH candidates only join inside a bucket and IVF
-candidates only inside a probed cell (equi-joins), which is what
-replaces the cross product at 100 TB.
+expansion from `_route` and `_adc_scan`. LSH candidates only join
+inside a bucket and IVF candidates only inside a probed cell
+(equi-joins), which is what replaces the cross product at 100 TB.
 """
 
 from __future__ import annotations
 
+import functools
 import logging
+import operator
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -60,10 +73,6 @@ def _dot(a: str, b: str) -> F.Column:
         f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)),"
         f" cast(0.0 as double), (acc, v) -> acc + v)"
     )
-
-
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return df.withColumn("norm", F.sqrt(_dot(vec_col, vec_col)))
 
 
 # ---------------------------------------------------------------------------
@@ -113,16 +122,61 @@ def _pairs(q: DataFrame, c: DataFrame, on: F.Column | None = None) -> DataFrame:
     return F.broadcast(q).join(c, not_self if on is None else on & not_self)
 
 
-def _topk(df: DataFrame, k: int, *order) -> DataFrame:
-    """Per-qid top-k by `order` (which must end in a unique tie-break):
+def _topk(df: DataFrame, k: int, *order, by: str = "qid") -> DataFrame:
+    """Per-`by` top-k by `order` (which must end in a unique tie-break):
     `rank` is the int row_number, kept to k. The filter sits on the bare
     row_number so Spark plans a partial WindowGroupLimit below the
     shuffle."""
-    w = Window.partitionBy("qid").orderBy(*order)
+    w = Window.partitionBy(by).orderBy(*order)
     return (
         df.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .withColumn("rank", F.col("rank").cast("int"))
+    )
+
+
+def _normed(
+    emb: DataFrame, id_col: str, block_col: str, vec_col: str, *extra
+) -> DataFrame:
+    """(id, block, v, nrm, *extra): the `_cos_self_join` input, each
+    vector's norm computed once so every pair costs one dot."""
+    return emb.select(
+        F.col(id_col),
+        F.col(block_col).alias("block"),
+        F.col(vec_col).alias("v"),
+        F.sqrt(_dot(vec_col, vec_col)).alias("nrm"),
+        *extra,
+    )
+
+
+def _cos_self_join(
+    d: DataFrame, id_col: str, block_col: str, ids, pair, keys=()
+) -> DataFrame:
+    """Cosine pairs of a `_normed` frame: (ids[0], ids[1], block_col,
+    cos_sim). `d` is persisted (both join sides branch from it), the
+    sides equi-join on block plus `keys`, `pair(left_id, right_id)`
+    keeps the wanted id pairs (`operator.lt`: each unordered pair once;
+    `operator.ne`: both directions), and the cosine is one divide of
+    the dot by |a|·|b|, rounded HALF_UP to 4 dp — the op order of
+    `_blocked_cos_scan` and the SQL oracles."""
+    d = track_persist(d)
+    on = ("block", *keys)
+    a = d.select(
+        F.col(id_col).alias(ids[0]), *on,
+        F.col("v").alias("va"), F.col("nrm").alias("na"),
+    )
+    b = d.select(
+        F.col(id_col).alias(ids[1]), *[F.col(c).alias(f"{c}_b") for c in on],
+        F.col("v").alias("vb"), F.col("nrm").alias("nb"),
+    )
+    cond = functools.reduce(
+        operator.and_,
+        [F.col(c) == F.col(f"{c}_b") for c in on]
+        + [pair(F.col(ids[0]), F.col(ids[1]))],
+    )
+    cos = F.round(_dot("va", "vb") / (F.col("na") * F.col("nb")), 4)
+    return a.join(b, cond).select(
+        *ids, F.col("block").alias(block_col), cos.cast("double").alias("cos_sim")
     )
 
 
@@ -291,11 +345,12 @@ def _blocked_cos_scan(
     import numpy as np
     import pandas as pd
 
+    names = [f.split()[0] for f in out_schema.split(",")]
+
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
-        empty = emit(None, None, 0, 0, None)
         if n < 2:
-            return empty
+            return pd.DataFrame(columns=names)
         if n > max_block_rows:
             raise ValueError(
                 f"block {pdf[block_col].iloc[0]!r} has {n} rows, over the "
@@ -325,7 +380,7 @@ def _blocked_cos_scan(
             # catalyst/oracle op order (see contract above)
             S = (V[lo:hi] @ V.T) / (nrm[lo:hi, None] * nrm[None, :])
             outs.append(emit(ids, _half_up_units(S), lo, hi, block_val))
-        return pd.concat(outs, ignore_index=True) if outs else empty
+        return pd.concat(outs, ignore_index=True)
 
     return emb.select(id_col, block_col, vec_col).filter(
         F.col(block_col).isNotNull()
@@ -374,15 +429,6 @@ def embedding_near_dup_pairs(
         def emit(ids, units, lo, hi, block_val):
             import numpy as np
 
-            if ids is None:
-                return pd.DataFrame(
-                    {
-                        "id_a": pd.Series([], dtype="int64"),
-                        "id_b": pd.Series([], dtype="int64"),
-                        block_col: pd.Series([], dtype="int64"),
-                        "cos_sim": pd.Series([], dtype="float64"),
-                    }
-                )
             n = units.shape[1]
             cosr = units / 1e4
             # id_a < id_b ⇔ column index > row index (ids ascending)
@@ -401,33 +447,11 @@ def embedding_near_dup_pairs(
             emb, block_col, id_col, vec_col, schema, emit,
             max_block_rows=max_block_rows,
         )
-    d = emb.select(
-        F.col(id_col),
-        F.col(block_col).alias("block"),
-        F.col(vec_col).alias("v"),
-        F.sqrt(_dot(vec_col, vec_col)).alias("nrm"),
+    pairs = _cos_self_join(
+        _normed(emb, id_col, block_col, vec_col), id_col, block_col,
+        ("id_a", "id_b"), operator.lt,
     )
-    d = track_persist(d)  # both self-join sides branch from this node
-    a = d.select(
-        F.col(id_col).alias("id_a"), "block", F.col("v").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = d.select(
-        F.col(id_col).alias("id_b"), F.col("block").alias("block_b"),
-        F.col("v").alias("vb"), F.col("nrm").alias("nb"),
-    )
-    pairs = a.join(
-        b, (F.col("block") == F.col("block_b")) & (F.col("id_a") < F.col("id_b"))
-    )
-    cos = F.round(
-        _dot("va", "vb") / (F.col("na") * F.col("nb")), 4
-    ).cast("double")
-    return (
-        pairs.select(
-            "id_a", "id_b", F.col("block").alias(block_col), cos.alias("cos_sim")
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
+    return pairs.filter(F.col("cos_sim") >= threshold)
 
 
 def knn_graph(
@@ -479,16 +503,6 @@ def knn_graph(
         def emit(ids, units, lo, hi, block_val):
             import numpy as np
 
-            if ids is None:
-                return pd.DataFrame(
-                    {
-                        "src": pd.Series([], dtype="int64"),
-                        "dst": pd.Series([], dtype="int64"),
-                        block_col: pd.Series([], dtype="int64"),
-                        "cos_sim": pd.Series([], dtype="float64"),
-                        "rank": pd.Series([], dtype="int32"),
-                    }
-                )
             m, n = units.shape
             kk = min(k, n - 1)
             cols = np.arange(n, dtype=np.int64)
@@ -517,38 +531,11 @@ def knn_graph(
             emb, block_col, id_col, vec_col, schema, emit,
             max_block_rows=max_block_rows,
         )
-    d = emb.select(
-        F.col(id_col),
-        F.col(block_col).alias("block"),
-        F.col(vec_col).alias("v"),
-        F.sqrt(_dot(vec_col, vec_col)).alias("nrm"),
+    pairs = _cos_self_join(
+        _normed(emb, id_col, block_col, vec_col), id_col, block_col,
+        ("src", "dst"), operator.ne,
     )
-    d = track_persist(d)  # both self-join sides branch from this node
-    a = d.select(
-        F.col(id_col).alias("src"), "block", F.col("v").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = d.select(
-        F.col(id_col).alias("dst"), F.col("block").alias("block_b"),
-        F.col("v").alias("vb"), F.col("nrm").alias("nb"),
-    )
-    pairs = a.join(
-        b,
-        (F.col("block") == F.col("block_b"))
-        & (F.col("src") != F.col("dst")),
-    )
-    cos = F.round(_dot("va", "vb") / (F.col("na") * F.col("nb")), 4).cast(
-        "double"
-    )
-    w = Window.partitionBy("src").orderBy(F.desc("cos_sim"), "dst")
-    return (
-        pairs.select(
-            "src", "dst", F.col("block").alias(block_col),
-            cos.alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk(pairs, k, F.desc("cos_sim"), "dst", by="src")
 
 
 def knn_graph_ann(
@@ -578,11 +565,11 @@ def knn_graph_ann(
     Scale shape: each vector emits `bands` bucket keys; bucket
     populations are corpus-sized / 2^planes_per_band per band within
     a block, and the join never forms the block cross product. The
-    md5-derived planes are the `lsh_bucket` scheme — deterministic
-    across engines and runs.
+    band keys are `_sign_bits` over the md5-derived planes of
+    `_projections` — deterministic across engines and runs.
 
-    MEASURED LIMIT (r7, same corpus shape as the r6
-    embedding_near_dup_pairs_banded finding): on THIS test corpus the
+    MEASURED LIMIT (r7, same corpus shape as the r6 banded
+    near-dup-pairs finding): on THIS test corpus the
     ANN route is SLOWER than the exact operator at sf1 (~30 s vs
     ~13 s for 20k vectors) — the default knobs leave band buckets
     concentrated (avg 250/bucket at sf1, cutting candidates only
@@ -594,162 +581,20 @@ def knn_graph_ann(
     a bucket-size profile first; when blocks are tight clusters,
     prefer canonicalize-first (`g_pagerank_canonical`'s recipe) and
     the exact bounded-degree ranking."""
-    n_planes = bands * planes_per_band
-    dim = _vec_dim(emb, vec_col)
-    projs = "array(" + ", ".join(
-        _proj_expr(vec_col, p, dim) for p in range(n_planes)
+    band_keys = "array(" + ", ".join(
+        _sign_bits(b * planes_per_band, planes_per_band) for b in range(bands)
     ) + ")"
-    band_hashes = "array(" + ", ".join(
-        "concat("
-        + ", ".join(
-            f"CASE WHEN pr[{b * planes_per_band + j}] >= 0"
-            " THEN '1' ELSE '0' END"
-            for j in range(planes_per_band)
-        )
-        + ")"
-        for b in range(bands)
-    ) + ")"
-    d = (
-        emb.withColumn("pr", F.expr(projs))
-        .select(
-            F.col(id_col),
-            F.col(block_col).alias("block"),
-            F.col(vec_col).alias("v"),
-            F.sqrt(_dot(vec_col, vec_col)).alias("nrm"),
-            F.expr(band_hashes).alias("bhs"),
-        )
-        .select(
-            id_col, "block", "v", "nrm",
-            F.posexplode("bhs").alias("band", "bh"),
-        )
+    d = _normed(
+        _projections(emb, vec_col, bands * planes_per_band),
+        id_col, block_col, vec_col,
+        F.posexplode(F.expr(band_keys)).alias("band", "bh"),
     )
-    d = track_persist(d)  # both self-join sides branch from this node
-    a = d.select(
-        F.col(id_col).alias("src"), "block", "band", "bh",
-        F.col("v").alias("va"), F.col("nrm").alias("na"),
-    )
-    b = d.select(
-        F.col(id_col).alias("dst"), F.col("block").alias("block_b"),
-        F.col("band").alias("band_b"), F.col("bh").alias("bh_b"),
-        F.col("v").alias("vb"), F.col("nrm").alias("nb"),
-    )
-    pairs = a.join(
-        b,
-        (F.col("block") == F.col("block_b"))
-        & (F.col("band") == F.col("band_b"))
-        & (F.col("bh") == F.col("bh_b"))
-        & (F.col("src") != F.col("dst")),
-    )
-    cos = F.round(_dot("va", "vb") / (F.col("na") * F.col("nb")), 4).cast(
-        "double"
+    pairs = _cos_self_join(
+        d, id_col, block_col, ("src", "dst"), operator.ne, keys=("band", "bh")
     )
     # a pair found by several bands carries the identical rounded
     # cosine; distinct() collapses it before the top-k window
-    cand = pairs.select(
-        "src", "dst", F.col("block").alias(block_col), cos.alias("cos_sim")
-    ).distinct()
-    w = Window.partitionBy("src").orderBy(F.desc("cos_sim"), "dst")
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def embedding_near_dup_pairs_banded(
-    emb: DataFrame,
-    threshold: float = 0.35,
-    bands: int = 4,
-    planes_per_band: int = 3,
-    block_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Near-duplicate pairs via banded hyperplane LSH inside coarse
-    blocks — sub-blocked candidate generation for
-    `embedding_near_dup_pairs`.
-
-    Each vector emits `bands` (band_idx, band_hash) keys from
-    md5-derived hyperplane sign bits (deterministic — both engines
-    reproduce the identical buckets, same scheme as `lsh_bucket`);
-    candidates need block + band + hash equality, and every candidate
-    is verified with the exact rounded cosine before thresholding.
-    Recall is the standard banded curve P(candidate) = 1-(1-p^r)^b
-    with p = 1 - theta/pi: at bands=4, r=3, cos 0.9 -> ~0.97,
-    cos 0.35 (borderline) -> ~0.65. Pinned by
-    tests/test_dedup_similarity.py's banded tests.
-
-    MEASURED LIMIT (r6 probe): when the block IS a tight cluster — a
-    class label over blob data, any true near-dup neighborhood — LSH
-    cannot split it: similar vectors share sign bits by construction,
-    so in-block bucket populations stay concentrated and the 10x
-    corpus bought only ~1.3-1.5x. Use this operator when blocks are
-    heterogeneous (mixed-similarity populations, where hashing
-    genuinely partitions); when the quadratic lives in the TRUE edge
-    set of a near-dup cluster, the scalable composition is
-    canonicalize-first (minhash + connected components, then graph
-    analytics on representatives) or a bounded-degree kNN graph —
-    see the scale note in queries/datapipe7.py.
-    """
-    n_planes = bands * planes_per_band
-    dim = _vec_dim(emb, vec_col)
-    projs = "array(" + ", ".join(
-        _proj_expr(vec_col, p, dim) for p in range(n_planes)
-    ) + ")"
-    band_hashes = "array(" + ", ".join(
-        "concat("
-        + ", ".join(
-            f"CASE WHEN pr[{b * planes_per_band + j}] >= 0"
-            " THEN '1' ELSE '0' END"
-            for j in range(planes_per_band)
-        )
-        + ")"
-        for b in range(bands)
-    ) + ")"
-    d = (
-        emb.withColumn("pr", F.expr(projs))
-        .select(
-            F.col(id_col),
-            F.col(block_col).alias("block"),
-            F.col(vec_col).alias("v"),
-            F.sqrt(_dot(vec_col, vec_col)).alias("nrm"),
-            F.expr(band_hashes).alias("bhs"),
-        )
-        .select(
-            id_col, "block", "v", "nrm",
-            F.posexplode("bhs").alias("band", "bh"),
-        )
-    )
-    d = track_persist(d)  # both self-join sides branch from this node
-    a = d.select(
-        F.col(id_col).alias("id_a"), "block", "band", "bh",
-        F.col("v").alias("va"), F.col("nrm").alias("na"),
-    )
-    b = d.select(
-        F.col(id_col).alias("id_b"), F.col("block").alias("block_b"),
-        F.col("band").alias("band_b"), F.col("bh").alias("bh_b"),
-        F.col("v").alias("vb"), F.col("nrm").alias("nb"),
-    )
-    pairs = a.join(
-        b,
-        (F.col("block") == F.col("block_b"))
-        & (F.col("band") == F.col("band_b"))
-        & (F.col("bh") == F.col("bh_b"))
-        & (F.col("id_a") < F.col("id_b")),
-    )
-    cos = F.round(_dot("va", "vb") / (F.col("na") * F.col("nb")), 4).cast(
-        "double"
-    )
-    # score + threshold BEFORE the dedup so the distinct shuffles only
-    # (ids, block, cos) — a pair caught by several bands carries the
-    # identical rounded cosine, so distinct() collapses it exactly
-    return (
-        pairs.select(
-            "id_a", "id_b", F.col("block").alias(block_col),
-            cos.alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-        .distinct()
-    )
+    return _topk(pairs.distinct(), k, F.desc("cos_sim"), "dst", by="src")
 
 
 def tfidf_knn_posting(
@@ -924,11 +769,8 @@ def tfidf_knn_posting(
         ).alias("e"),
         "cos_sim",
     ).select("e.doc_id", "e.nbr_id", "cos_sim")
-    w = Window.partitionBy("doc_id").orderBy(F.desc("cos_sim"), "nbr_id")
-    return (
-        sym.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("doc_id", "nbr_id", "cos_sim", "rank")
+    return _topk(sym, k, F.desc("cos_sim"), "nbr_id", by="doc_id").select(
+        "doc_id", "nbr_id", "cos_sim", "rank"
     )
 
 
@@ -1233,26 +1075,6 @@ def auto_ivf_nprobe(
     return ncells
 
 
-def lsh_bucket(
-    df: DataFrame, vec_col: str, num_planes: int = 8, dim: int | None = None
-) -> DataFrame:
-    """Random-hyperplane LSH bucket id as a bit-string column.
-
-    bucket bit p = sign(v · plane_p); identical for identical vectors,
-    Hamming-close for cosine-close vectors. Plane weights are folded
-    to literals at plan-build time (`_plane_weights` — the md5 numbers
-    the oracle recomputes in SQL, bit-identical); `dim` is read from
-    the data when not given.
-    """
-    if dim is None:
-        dim = _vec_dim(df, vec_col)
-    bits = []
-    for p in range(num_planes):
-        proj = _proj_expr(vec_col, p, dim)
-        bits.append(f"CASE WHEN {proj} >= 0 THEN '1' ELSE '0' END")
-    return df.withColumn("lsh_bucket", F.expr("concat(" + ", ".join(bits) + ")"))
-
-
 def lsh_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -1362,6 +1184,25 @@ def _proj_expr(vec_col: str, plane: int, dim: int) -> str:
     )
 
 
+def _projections(emb: DataFrame, vec_col: str, n: int) -> DataFrame:
+    """`emb` plus `pr`, the array of its projections on the md5 planes
+    0..n-1 (`_proj_expr`); the dim is read from the data."""
+    dim = _vec_dim(emb, vec_col)
+    return emb.withColumn("pr", F.expr(
+        "array(" + ", ".join(_proj_expr(vec_col, p, dim) for p in range(n)) + ")"
+    ))
+
+
+def _sign_bits(lo: int, n: int) -> str:
+    """SQL bit-string key over `pr[lo]`..`pr[lo + n - 1]`: bit p is
+    sign(v · plane_p), so identical vectors share the key and
+    cosine-close ones are Hamming-close. The DuckDB twin is
+    `queries/datapipe.py::_lsh_bucket_oracle_expr`."""
+    return "concat(" + ", ".join(
+        f"CASE WHEN pr[{p}] >= 0 THEN '1' ELSE '0' END" for p in range(lo, lo + n)
+    ) + ")"
+
+
 def lsh_multiprobe_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -1388,18 +1229,8 @@ def lsh_multiprobe_topk(
         num_planes, nprobe = auto_lsh_params_for(
             emb, k=k, id_col=id_col, vec_col=vec_col
         )
-    dim = _vec_dim(emb, vec_col)
-    projs = "array(" + ", ".join(
-        _proj_expr(vec_col, p, dim) for p in range(num_planes)
-    ) + ")"
-    bucket = (
-        "concat(" + ", ".join(
-            f"CASE WHEN pr[{p}] >= 0 THEN '1' ELSE '0' END"
-            for p in range(num_planes)
-        ) + ")"
-    )
-    base = emb.withColumn("pr", F.expr(projs)).withColumn(
-        "bkt", F.expr(bucket)
+    base = _projections(emb, vec_col, num_planes).withColumn(
+        "bkt", F.expr(_sign_bits(0, num_planes))
     )
     # rank each plane by (|proj|, idx); flip the m lowest-margin bits.
     # The rank form avoids an argsort: rank_p = #{q : (|pr[q]|, q) <

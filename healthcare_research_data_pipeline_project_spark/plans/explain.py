@@ -27,10 +27,6 @@ def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in plan(df)
 
 
-def uses_sort_merge_join(df: DataFrame) -> bool:
-    return "SortMergeJoin" in plan(df)
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """Filter predicates that reached the parquet scan."""
     out = []

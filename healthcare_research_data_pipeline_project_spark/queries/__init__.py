@@ -26,14 +26,12 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-#: The driver's correctness gate records only the FIRST 50 registered
+#: The driver's correctness gate reads only the FIRST 50 registered
 #: queries, so registration order decides which operators get an oracle
-#: row. This list pins the 50 highest-value rows up front: the flagship
-#: executive summary, the 10 reference analytics queries
-#: (healthcare-sql-analytics.sql:146-779), every SURVEY §2 core-operator
-#: row, and the named LLM-data-pipeline operators (dedup/ANN/multimodal/
-#: text). Everything else still registers (pytest + bench cover it) —
-#: it just sorts after the gate window.
+#: row. `load_all` puts these names first, in this order: the executive
+#: summary and the 10 reference analytics queries (the `bench.py`
+#: headline), then core-operator and LLM-data-pipeline rows. The rest
+#: sort after the gate window; git history says why each row is here.
 GATE_PRIORITY = [
     "exec_summary",
     "hc_q1_readmission_risk",
@@ -47,431 +45,43 @@ GATE_PRIORITY = [
     "hc_q9_access_audit",
     "hc_q10_data_quality",
     "p_filter_predicates",
-    # p_like_predicates rotated OUT r4 for t_autocorr (ADVICE: sample
-    # the newest oracle-backed operators in the driver gate). LIKE
-    # stays gate-evidenced by hc_q2/hc_q4/hc_q7 in this window and the
-    # row stays green in the committed MIRROR.json.
-    # t_autocorr rotated OUT r10 (lag-window arithmetic stays gate-
-    # evidenced by w1_w2_group_outliers' windowed stats in this
-    # window; the row stays green in MIRROR.json) for
-    # t_funnel_conversion — the r9 single-scan/single-shuffle funnel
-    # rewrite that never had a driver gate row (VERDICT r9 #4).
-    # t_funnel_conversion rotated OUT r13 (gated green r10-r12;
-    # ordered event-sequence gating stays gate-evidenced by the
-    # incoming t_retention_cohorts' cohort-period event gating in
-    # this window; the row stays green in MIRROR.json) for
-    # t_retention_cohorts — in the never-gated temporal set VERDICT
-    # r12 #1 named.
     "t_retention_cohorts",
     "j1_star_join",
     "j2_band_self_join",
-    # j3_left_join_pred rotated OUT r5 (left-join-with-side-predicate
-    # stays gate-evidenced by hc_q3/hc_q9 in this window; j3 stays
-    # green in MIRROR.json) for dedup_canonical_keep — the r4-era
-    # oracle route through connected components (ADVICE: rotate the
-    # newest oracle-backed ops through the gate).
-    # dedup_canonical_keep rotated OUT r12 (gated green r10-r11; the
-    # connected-components keeper logic stays gate-evidenced TWICE in
-    # this window: ds_leakage_safe_split keys its split on the CC
-    # cluster representative and its RECURSIVE-CTE oracle re-derives
-    # the components, and g_pagerank_canonical's canonicalize stage
-    # consumes the full component sweep; the row stays green in
-    # MIRROR.json) for ds_leakage_safe_split — in the never-gated
-    # r11-new set VERDICT r11 #1 named.
     "ds_leakage_safe_split",
-    # j4_semi_exists rotated OUT r6 (EXISTS semi-join stays gate-
-    # evidenced by hc_q1's EXISTS flag in this window; j4 stays green
-    # in MIRROR.json) for mm_decode_stats — the multimodal decode
-    # oracle (sha256 counter-mode payload statistics) that never had a
-    # driver CORRECTNESS row.
-    # mm_decode_stats rotated OUT r11 (multimodal decode stays gate-
-    # evidenced by mm_media_features, whose per-row payload-
-    # reconstruction oracle is strictly stronger — it rebuilds every
-    # PPM/WAV byte sequence in SQL; the row stays green in
-    # MIRROR.json) for t_asof_join — the as-of temporal join, in the
-    # never-gated set VERDICT r10 #3 named.
-    # t_asof_join rotated OUT r12 (gated green in r11; the merge_asof
-    # operator stays gate-evidenced by t_asof_nearest in this window —
-    # the nearest-direction variant COMPOSES the backward and forward
-    # carries, so its oracle exercises strictly more of the operator;
-    # the row stays green in MIRROR.json) for t_asof_nearest — in the
-    # never-gated r11-new set VERDICT r11 #1 named.
     "t_asof_nearest",
-    # j5_anti_not_exists rotated OUT r4 (its sf0.01 result is 0 rows —
-    # a trivially-true hash check; hc_q9 in this window is itself a
-    # NOT-EXISTS anti-join, and j5 stays green in the committed
-    # MIRROR.json): gate slots go to queries whose oracle rows carry
-    # real signal, newest first (ADVICE r3).
-    # ds_pack_sequences rotated OUT r12 (gated green r10-r11; the
-    # prefix-sum global-offset machinery it rides stays gate-
-    # evidenced by t_max_concurrency's interval sweep in this window;
-    # the row stays green in MIRROR.json) for a28_winsorize — the
-    # winsorized-stats consumer of the sketch-bracketed exact-
-    # percentile operator, in the never-gated r11-new set VERDICT
-    # r11 #1 named and the corpus's slowest query (1.91 s).
     "a28_winsorize",
-    # j6_in_subquery / j7_role_playing_dim rotated OUT r5 (IN-subquery
-    # semi-join stays evidenced by hc_q2, role-playing dims by hc_q8;
-    # both stay green in MIRROR.json) for two r5-new oracle routes:
-    # the per-document connected-components assignment and the
-    # fixed-iteration PageRank recursive-CTE check.
-    # dedup_clusters rotated OUT r10 (connected-components assignment
-    # stays gate-evidenced TWICE in this window: dedup_canonical_keep
-    # consumes the CC keeper logic and g_pagerank_canonical's
-    # canonicalize stage consumes the full component sweep; the row
-    # stays green in MIRROR.json) for mb_pair_lift — the market-basket
-    # pair-lift query whose n_orders computation was rewritten r10
-    # from an unpartitioned window to a broadcast scalar aggregate
-    # (rotate refactored queries into the gate, VERDICT r9 #1/#4).
-    # mb_pair_lift rotated OUT r13 (gated green r10-r12; pair
-    # co-occurrence expansion stays gate-evidenced by
-    # text_containment_pairs' posting-list pair expansion in this
-    # window, and the broadcast-scalar n_orders shape stays plan-
-    # pinned by test_mb_pair_lift_scans_fact_once_in_final_plan; the row stays
-    # green in MIRROR.json) for a17_pivot — grouping-set/pivot
-    # semantics had NO gate representative (VERDICT r12 #1 named it).
     "a17_pivot",
-    # g_pagerank_centrality rotated OUT r9 (the recursive-CTE PageRank
-    # oracle stays green in MIRROR.json; PageRank stays gate-evidenced
-    # by g_pagerank_knn AND the new canonical row below) for
-    # g_pagerank_canonical — the canonicalize-then-rank composition
-    # whose r8 blocked-scan + r9 broadcast-anti-join refactor touched
-    # both stages (rotate refactored queries into the gate, VERDICT r8
-    # #2).
-    # g_pagerank_canonical rotated OUT r13 (gated green r9-r12;
-    # PageRank stays gate-evidenced by g_pagerank_knn in this window,
-    # and the canonicalize/connected-components stage stays gate-
-    # evidenced by the incoming dedup_incremental_clusters, whose
-    # RECURSIVE-CTE oracle re-derives the full component sweep; the
-    # row stays green in MIRROR.json) for dedup_incremental_clusters
-    # — the r13-new insert-only cluster maintenance (VERDICT r12 #5),
-    # gated from birth: its oracle equality IS the proof that merging
-    # delta pairs via the rep-level union-find equals the full
-    # recompute.
     "dedup_incremental_clusters",
-    # g_kcore_dense_region rotated OUT r9 (recursive-peel k-core stays
-    # gate-evidenced by g_kcore_knn in this window; the dense-region
-    # row stays green in MIRROR.json) for g_triangle_knn — triangle /
-    # clustering-coefficient over the mutual kNN graph, an r8
-    # blocked-scan consumer never driver-gated before.
-    # g_triangle_knn rotated OUT r13 (gated green r11-r12; mutual-kNN
-    # edge-set consumption stays gate-evidenced TWICE in this window
-    # by g_pagerank_knn and g_kcore_knn, which consume the same
-    # oracled edge set; the row stays green in MIRROR.json) for
-    # t_ks_two_sample — the ECDF rank statistic, in the never-gated
-    # stat/temporal set VERDICT r12 #1 named (its oracle carries a
-    # full two-sample D computation).
     "t_ks_two_sample",
     "a1_agg_battery",
     "a8_percentiles",
-    # a9_iqr_outliers rotated OUT r5 (exact-quantile evidence stays
-    # via a8_percentiles in this window; a9 stays green in
-    # MIRROR.json) for ivm_sketch_distinct — incremental
-    # approx-distinct view maintenance with mergeable HLL sketches.
-    # ivm_sketch_distinct rotated OUT late-r12 (gated green r5-r12;
-    # incremental-view-maintenance evidence stays gate-carried by
-    # ivm_join_view in this window, whose oracle is the full
-    # recompute; the row stays green in MIRROR.json) for
-    # dedup_incremental_lsh — the r12-new insert-only incremental LSH
-    # dedup, gated from birth (its oracle equality IS the proof that
-    # the delta rule adds exactly the pairs a full recompute would).
-    # dedup_incremental_lsh rotated OUT r13 (gated green in r12; the
-    # Δ⋈index ∪ Δ⋈Δ pair rule stays gate-evidenced by
-    # dedup_incremental_clusters in this window, which CONSUMES
-    # lsh_pairs_delta and whose full-recompute oracle pins the pair
-    # set end to end; the row stays green in MIRROR.json) for
-    # dedup_incremental_delete — the r13-new delete-direction twin
-    # (localized cluster repair from the stored band index), gated
-    # from birth: its oracle equality IS the proof that the repair
-    # equals the full recompute over survivors.
     "dedup_incremental_delete",
-    # a10_zscore_outliers rotated OUT r6 (z-score anomaly evidence
-    # stays via w1_w2_group_outliers' windowed mean/stddev outlier
-    # flags in this window; a10 stays green in MIRROR.json) for
-    # a2d_topk_sketch_merge, itself rotated OUT r7 — see the
-    # g_knn_graph entry below.
-    # a11_correlation rotated OUT late-r11 (Pearson-correlation
-    # evidence stays gate-carried by hc_q2_sepsis_bundle's correlation
-    # nest in this window; a11 stays green in MIRROR.json) for
-    # j12_bloom_prefilter_join — the new runtime bloom-filter join
-    # pruning operator, whose oracle equality IS the no-false-negative
-    # proof and so belongs in the driver's independent gate.
     "j12_bloom_prefilter_join",
-    # a12_distribution_pct rotated OUT r4 for ds_zorder_layout (the
-    # distribution-as-% shape stays evidenced by the CASE-bucketed
-    # pct columns of hc_q1/q5-q8; a12 and a13_histogram — itself
-    # rotated OUT r7, see the g_kcore_knn entry below — stay green in
-    # MIRROR.json).
-    # ds_zorder_layout rotated OUT r12 (gated green r4-r11; the
-    # layout-op verdict family stays gate-evidenced by the incoming
-    # ds_range_layout, whose equi-depth boundary derivation consumes
-    # the same sketch-bracketed percentile operator as a28_winsorize;
-    # the row stays green in MIRROR.json) for ds_range_layout — in
-    # the never-gated r11-new set VERDICT r11 #1 named.
     "ds_range_layout",
-    # u2_set_ops rotated OUT r5 (set-op evidence stays via hc_q10's
-    # UNION ALL in this window) for a2b_approx_stats — the sketch
-    # tier's new tolerance-verdict oracle.
-    # a2b_approx_stats rotated OUT r11 (mergeable-sketch evidence
-    # stays TWICE in this window: a2c_sketch_rollup's HLL partial
-    # unions and ivm_sketch_distinct's incremental sketch view; the
-    # row stays green in MIRROR.json) for stat_bootstrap_ci — the
-    # deterministic hash-resample bootstrap CI, in the never-gated
-    # set VERDICT r10 #3 named.
-    # stat_bootstrap_ci rotated OUT r12 (gated green in r11; hash-
-    # derived deterministic resampling stays gate-evidenced by
-    # ds_leakage_safe_split's hash split + the a28_winsorize order-
-    # statistics row in this window; the row stays green in
-    # MIRROR.json) for text_containment_pairs — the asymmetric
-    # shingle-containment screen whose df-cap posting-list expansion
-    # was rewritten in r11's LAST code commit (a83487c) and so is the
-    # highest-risk never-gated semantics (VERDICT r11 #1, named
-    # first).
     "text_containment_pairs",
     "a14_quality_metrics",
-    # w1_w2_group_outliers rotated OUT r13 (gated green r4-r12;
-    # AVG/STDDEV OVER (PARTITION BY) outlier flags stay gate-
-    # evidenced by hc_q6_drg_outliers' windowed z-scores in this
-    # window, and the incoming w7_rank_battery keeps a dedicated
-    # window-function gate row; the row stays green in MIRROR.json)
-    # for a18_cube — CUBE grouping-set semantics, in the never-gated
-    # agg-battery set VERDICT r12 #1 named (a17_pivot + a18_cube
-    # together give the grouping-set family its first gate rows).
     "a18_cube",
-    # w3_topn_per_group rotated OUT r5 (top-N-per-frame stays
-    # evidenced by w4's argmax + g_pagerank_centrality's row_number
-    # top-3 in this window) for stat_mannwhitney_u — the r4
-    # value-histogram rank statistic.
-    # stat_mannwhitney_u rotated OUT r12 (gated green r4-r11; exact
-    # rank/order-statistic evidence stays gate-carried by
-    # a8_percentiles and the incoming a28_winsorize in this window;
-    # the row stays green in MIRROR.json) for t_resample_ohlc — the
-    # time-bucket resample battery, part of the never-gated temporal
-    # family VERDICT r11 #7 named.
-    # t_resample_ohlc rotated OUT r13 (gated green r12; time-bucket
-    # windowing stays gate-evidenced by events_hopping_rollup's
-    # window() bucketing and the temporal family keeps
-    # t_asof_nearest / t_rate_limit_window / t_max_concurrency in
-    # this window; the row stays green in MIRROR.json) for
-    # w7_rank_battery — the rank/dense_rank/ntile battery VERDICT
-    # r12 #1 named FIRST (15,000-row hash signal; the window-function
-    # family had no dedicated gate representative).
     "w7_rank_battery",
-    # w4_latest_per_entity rotated OUT r5 (latest-per-entity argmax
-    # stays evidenced by hc_q7's latest-A1C in this window; w4 stays
-    # green in MIRROR.json) for a2c_sketch_rollup — the mergeable-HLL
-    # rollup whose global estimate unions per-group sketch partials.
     "a2c_sketch_rollup",
-    # f_date_functions rotated OUT r5 (date add/diff/trunc/format stay
-    # evidenced by hc_q8 + exec_summary's relative-date filter) for
-    # dq_k_anonymity — the r4 privacy-audit battery.
-    # dq_k_anonymity rotated OUT r12 (gated green r4-r11; the data-
-    # quality audit family stays gate-evidenced by a14_quality_metrics
-    # and dq_expectations_orders in this window; the row stays green
-    # in MIRROR.json) for t_rate_limit_window — the sliding-window
-    # rate-limit batch twin, part of the never-gated temporal family
-    # VERDICT r11 #7 named.
     "t_rate_limit_window",
     "f_case_mask_hash",
-    # events_hourly_rollup rotated OUT r12 (gated green r4-r11; the
-    # tumbling-window rollup is the hop=width special case of
-    # events_hopping_rollup, which stays in this window; the row
-    # stays green in MIRROR.json) for ivm_join_view — the r11-new
-    # insert-only join-view delta maintenance (ΔV=(ΔA⋈B_new)∪(A_old⋈
-    # ΔB), base⋈base never recomputed), in the never-gated r11-new
-    # set VERDICT r11 #1 named.
     "ivm_join_view",
-    # events_sessionize / t_gap_fill rotated OUT r5 (session windows
-    # stay pytest-pinned and both stay green in MIRROR.json) for the
-    # r4 sequence ops: event-pattern matching and the explicit
-    # tie-break mode battery.
-    # t_event_pattern_match rotated OUT r10 (event-sequence gating
-    # stays evidenced by t_funnel_conversion's ordered step gates in
-    # this window; the row stays green in MIRROR.json) for
-    # text_source_overlap — the r9-new cross-source contamination
-    # matrix that never had a driver gate row (VERDICT r9 #4).
-    # text_source_overlap rotated OUT r12 (gated green r10-r11;
-    # cross-document overlap semantics stay gate-evidenced by
-    # text_substring_dedup and the incoming text_containment_pairs in
-    # this window; the row stays green in MIRROR.json) for
-    # ds_temperature_mix — the temperature-scaled corpus mixture,
-    # whose scalar-aggregate rewrite lands THIS round (rotate
-    # refactored queries into the gate, VERDICT r9 #1 doctrine; also
-    # in the never-gated r11-new set VERDICT r11 #1 named).
     "ds_temperature_mix",
-    # a27_mode_battery rotated OUT r9 (the explicit tie-break mode
-    # battery stays green in MIRROR.json) for mm_media_features — the
-    # per-row payload-reconstruction oracle added in r9 (the last
-    # rows-only corpus entry, now value-hashed; newest oracle routes
-    # get gate slots first, ADVICE r3).
     "mm_media_features",
-    # dedup_exact rotated OUT r9 (exact hash-groupBy dedup stays gate-
-    # evidenced by dedup_canonical_keep's keeper logic in this window;
-    # the row stays green in MIRROR.json) for g_triangle_count —
-    # exact triangle count over the thresholded similarity graph,
-    # another r8 blocked-scan consumer whose operator changed two
-    # rounds running without a driver gate row.
-    # g_triangle_count rotated OUT r11 (triangle counting stays gate-
-    # evidenced by g_triangle_knn in this window — same oriented-
-    # wedge-join algorithm over the mutual kNN edge set; the row
-    # stays green in MIRROR.json) for text_tfidf_knn — the posting-
-    # list + champion-list TF-IDF document kNN, the corpus's slowest
-    # query and never gated (VERDICT r10 #3).
     "text_tfidf_knn",
-    # dedup_simhash rotated OUT r7 (SimHash signatures stay green in
-    # MIRROR.json alongside the blocked-Hamming pairs variant;
-    # in-window hash evidence stays via f_case_mask_hash) for
-    # sim_pq_topk — PQ ADC+refine, oracled for the first time in r7
-    # (per-query audit verdicts: exact true-kth-L2 equality + slack
-    # bound, the k-means doctrine).
-    # sim_pq_topk rotated OUT r11 (PQ ADC+refine stays gate-evidenced
-    # by sim_ivfpq_topk in this window — the composed route serves
-    # from the SAME trained index and its oracle additionally
-    # recomputes the routing; the row stays green in MIRROR.json) for
-    # dedup_ngram_jaccard_capped — the df-capped n-gram Jaccard
-    # inverted index, the corpus's steepest non-graph 20x scaling row
-    # and never gated (VERDICT r10 #3/#4).
-    # dedup_ngram_jaccard_capped rotated OUT late-r13 (gated green
-    # r11-r12; df-capped posting-list candidate expansion stays gate-
-    # evidenced by text_containment_pairs in this window — the same
-    # df-cap discipline with an exact hot-shingle correction — and
-    # banded-minhash pair semantics by dedup_incremental_clusters /
-    # dedup_incremental_delete, whose RECURSIVE-CTE oracles re-derive
-    # the LSH pair set end to end; the row stays green in MIRROR.json)
-    # for ds_dsir_sample — the r13-new DSIR importance-resampling
-    # data-selection operator (hashed-bigram likelihood-ratio weights
-    # + deterministic Gumbel top-k), gated from birth per the
-    # newest-ops-first discipline.
     "ds_dsir_sample",
-    # dedup_ngram_jaccard rotated OUT r6 (exact n-gram Jaccard stays
-    # gate-evidenced by dedup_lsh_pairs' exact-Jaccard verify stage in
-    # this window, and the df-capped variant stays green in
-    # MIRROR.json) for dq_expectations_orders — the data-quality
-    # expectations battery, never gated before r6.
-    # dq_expectations_orders rotated OUT r13 (gated green r6-r12; the
-    # data-quality audit family stays gate-evidenced by
-    # a14_quality_metrics and hc_q10_data_quality's UNION ALL
-    # null-scan in this window; the row stays green in MIRROR.json)
-    # for scd2_customer_segments — the slowly-changing-dimension
-    # type-2 history build, in the never-gated set VERDICT r12 #1
-    # named (no gate row has ever covered the SCD2 operator family).
     "scd2_customer_segments",
-    # dedup_lsh_pairs rotated OUT late-r11 (MinHash-LSH banded
-    # bucketing stays gate-evidenced by sim_lsh_auto_topk and the
-    # dedup family's dedup_canonical_keep/dedup_semantic_blocks in
-    # this window; the row stays green in MIRROR.json) for
-    # t_max_concurrency — the new interval-overlap sweep riding the
-    # two-phase prefix sum, a shape no other gate row exercises.
     "t_max_concurrency",
-    # dedup_embedding_cosine rotated OUT r7 (the identical label-
-    # blocked threshold pair set stays gate-evidenced THREE ways in
-    # this window: g_triangle_count / g_pagerank_centrality /
-    # g_kcore_dense_region consume it as their oracled edge set, and
-    # dedup_semantic_blocks' n_label_pairs column recomputes its
-    # count; the row stays green in MIRROR.json) for
-    # dedup_semantic_blocks — trained-quantizer-cell dedup, oracled
-    # for the first time in r7 (audit verdicts: data-adaptive
-    # k-formula equality, assignment coverage, label-pair-set value
-    # equality, recall floor).
-    # dedup_semantic_blocks rotated OUT r13 (gated green r7-r12;
-    # trained-quantizer-cell assignment stays gate-evidenced by
-    # sim_ivfpq_topk, whose oracle recomputes the routing against
-    # the SAME per-cell centroids, and the embedding-cosine screen
-    # stays gate-evidenced by sim_range_search in this window; the
-    # row stays green in MIRROR.json) for sim_sq8_topk — the
-    # scalar-quantized (SQ8) served-ANN variant, in the never-gated
-    # served-ANN set VERDICT r12 #1 named.
     "sim_sq8_topk",
-    # sim_bruteforce_topk rotated OUT r7 for sim_ivf_topk, whose
-    # oracle IS the brute-force cosine SQL (nprobe=all ≡ exhaustive
-    # search, proven in r6) — the brute-force semantics stay gate-
-    # checked by construction while the gate row moves to the IVF
-    # routing path, never gated before.
-    # sim_ivf_topk rotated OUT r10 (its oracle sidesteps routing with
-    # nprobe=all; the row stays green in MIRROR.json) for
-    # sim_ivfpq_topk — the composed IVF-PQ index whose oracle
-    # RECOMPUTES the routing itself (SQL cell centroids + rounded
-    # centroid distances + the probe set as a value column): strictly
-    # stronger routing evidence, newest oracle route first.
     "sim_ivfpq_topk",
-    # sim_lsh_topk rotated OUT r7 for sim_lsh_auto_topk — the r7
-    # auto-tuned default route (derived planes/nprobe); its oracle
-    # pins the identical bucket/probe computation (superset: probes
-    # include the query's own bucket), and single-bucket LSH stays
-    # green in MIRROR.json.
-    # sim_lsh_auto_topk rotated OUT r13 (gated green r7-r12; LSH
-    # band/bucket equi-join candidacy stays gate-evidenced by
-    # dedup_incremental_lsh in this window, and the auto-derived
-    # (planes, nprobe) stay pytest-pinned by test_auto_lsh_frozen_pair;
-    # the row stays green in MIRROR.json) for
-    # sim_ivf_range_search_routed — the r13-new DEPLOYED radius scale
-    # path (VERDICT r12 #3), gated from birth: its oracle recomputes
-    # the τ-regime routing itself (SQL centroids + rounded
-    # cosine-to-centroid ranks + the frozen derived depth), so the
-    # partial-probe candidate set finally has a value-hash row.
     "sim_ivf_range_search_routed",
-    # mm_media_manifest rotated OUT r7 (multimodal stays gate-
-    # evidenced by mm_decode_stats' sha256 counter-mode decode oracle
-    # in this window; the manifest row stays green in MIRROR.json)
-    # for ml_kmeans_summary — the distributed-Lloyd's invariant-
-    # verdict oracle, never gated before.
-    # ml_kmeans_summary rotated OUT r12 (gated green r7-r11; the
-    # trained-quantizer invariants stay gate-evidenced by
-    # sim_ivfpq_topk, whose oracle recomputes the routing against the
-    # SAME k-means centroids, and dedup_semantic_blocks' data-adaptive
-    # k-formula equality in this window; the row stays green in
-    # MIRROR.json) for sim_range_search — the r11-new exact radius
-    # search whose oracle pins the Q-broadcast path against brute
-    # force, in the never-gated r11-new set VERDICT r11 #1 named.
-    # sim_range_search rotated OUT late-r13 (gated green in r12-r13;
-    # the 4-dp-rounded radius screen stays gate-evidenced by
-    # sim_ivf_range_search_routed in this window — its oracle applies
-    # the SAME τ screen inside the derived probe set — and the exact
-    # full-scan identity stays pinned by sim_ivf_range_search's
-    # probe-all oracle in MIRROR.json) for dedup_semdedup_keep — the
-    # r13-new SemDeDup keep policy, gated from birth: its oracle
-    # rebuilds centroids, pair threshold, components AND the keeper
-    # argmin in SQL, so the keep decision itself is value-hash-pinned.
     "dedup_semdedup_keep",
-    # text_token_stats rotated OUT r13 (gated green r4-r12; the
-    # token-stat HOF machinery stays gate-evidenced by
-    # text_quality_score, which consumes the same tokenizer and
-    # ratio chain, plus text_substring_dedup/text_containment_pairs
-    # in this window; the row stays green in MIRROR.json) for
-    # f_map_battery — the map-type function battery VERDICT r12 #1
-    # named (14,743-row hash signal; map_from_entries /
-    # map_filter / transform_values semantics had no gate row).
     "f_map_battery",
     "text_quality_score",
-    # text_langid rotated OUT r10 (n-gram language-ID stays green in
-    # MIRROR.json; the text family keeps two in-window rows above)
-    # for text_substring_dedup — the r10-new Lee-et-al ExactSubstr
-    # accounting pass, oracled from birth (newest oracle routes get
-    # gate slots first, ADVICE r3).
     "text_substring_dedup",
-    # text_fingerprint rotated OUT r7 (rolling-hash fingerprinting
-    # stays green in MIRROR.json; the text family keeps three
-    # in-window rows above) for g_pagerank_knn — PageRank over the
-    # union-symmetrized bounded-degree kNN graph, the scale-safe
-    # graph-analytics composition added in r7.
     "g_pagerank_knn",
-    # a13_histogram rotated OUT r7 (F1 CASE-bucketing stays gate-
-    # evidenced by hc_q1/q5/q6/q7/q8's CASE buckets in this window;
-    # a13 stays green in MIRROR.json) for g_kcore_knn — k-core over
-    # the mutual kNN graph, r7's second scale-safe analytics row.
     "g_kcore_knn",
-    # a2d_topk_sketch_merge rotated OUT r7 (mergeable-sketch evidence
-    # stays via a2b_approx_stats + a2c_sketch_rollup in this window;
-    # a2d stays green in MIRROR.json) for g_knn_graph — the bounded-
-    # degree kNN graph summary the two analytics rows above consume,
-    # never driver-gated before (added r6).
-    # g_knn_graph rotated OUT r11 (the bounded-degree kNN graph stays
-    # gate-evidenced THREE ways in this window: g_pagerank_knn,
-    # g_kcore_knn, and g_triangle_knn all consume it as their oracled
-    # edge set; the row stays green in MIRROR.json) for
-    # events_hopping_rollup — the hopping-window rollup batch twin,
-    # widening the streaming family's gate coverage beyond
-    # events_hourly_rollup (VERDICT r10 #7).
     "events_hopping_rollup",
 ]
 

@@ -622,8 +622,9 @@ _LSH_PLANES = 8
 
 
 def _lsh_bucket_oracle_expr(vec: str) -> str:
-    """DuckDB twin of `similarity.lsh_bucket`: bit p = sign(v·plane_p),
-    plane component = md5('p:dim')[0:8]/2^31 - 1."""
+    """DuckDB twin of `similarity._sign_bits(0, 8)` over the planes of
+    `similarity._projections`: bit p = sign(v·plane_p), plane
+    component = md5('p:dim')[0:8]/2^31 - 1."""
     bits = []
     for p in range(_LSH_PLANES):
         comp = (

@@ -987,13 +987,6 @@ _CM_PROBES = list(range(1, 11))
 # splits into four independent 32-bit words (substrings of the hex),
 # so the fan-out costs 1 md5 instead of d — the dominant cost of the
 # sketch build at scale.
-def _cm_bucket_spark(j: int) -> str:
-    return (
-        f"(cast(conv(substring(md5(concat(cast(l_partkey as string), '#cm')),"
-        f" {1 + 8 * j}, 8), 16, 10) as bigint) % {_CM_W})"
-    )
-
-
 def _cm_bucket_duck(j: int, key: str = "l_partkey") -> str:
     return (
         f"(CAST('0x' || substr(md5(CAST({key} AS VARCHAR) || '#cm'),"

@@ -158,7 +158,7 @@ def _tri_dot(a: str, b: str) -> str:
 # g_kcore_dense_region) generates candidate pairs within FIXED-
 # cardinality label blocks, so candidates grow quadratically with the
 # corpus — the 10x probe measured 43-46x time. Banded hyperplane LSH
-# (operators/similarity.py::embedding_near_dup_pairs_banded) was
+# (the band keys `operators/similarity.py::knn_graph_ann` uses) was
 # measured as a sub-blocking layer and bought only ~1.3-1.5x at sf1:
 # a label block IS a tight cluster, and LSH by construction cannot
 # split genuinely-similar vectors into different buckets, so in-block

@@ -91,7 +91,8 @@ class ResultCache:
         if time.monotonic() - ts > self.ttl:
             if isinstance(value, DataFrame):
                 value.unpersist()
-            del self._store[key]
+            # pop, not del: two threads may expire the same key
+            self._store.pop(key, None)
             return None
         return value
 

@@ -6,6 +6,7 @@ strategies advertise the SAME output contract, so this file pins it:
   (cosines engineered to land within ~1e-9 of the 4-dp rounding
   midpoint, where an op-order divergence would flip the rounded value);
 - NULL-block rows drop in BOTH impls (equi-join semantics);
+- one-row blocks emit no rows in BOTH impls;
 - zero-norm vectors raise in the blocked impl (explicit policy — the
   catalyst twin would emit NaN and Spark NaN-ordering would rank them
   first, silently);
@@ -92,6 +93,23 @@ def test_null_block_rows_drop_in_both_impls(spark):
         got = _pairs(S.embedding_near_dup_pairs(emb, threshold=0.3, impl=impl))
         ids = {(a, b) for a, b, _ in got}
         assert ids == {(3, 4)}, (impl, got)
+
+
+def test_singleton_blocks_emit_nothing_in_both_impls(spark):
+    # a one-row block has no pair: the blocked scan returns its empty
+    # frame there, typed by the output schema for int and long ids
+    for idt in ("int", "long"):
+        emb = spark.createDataFrame(
+            [(1, [1.0, 0.0], 1), (2, [0.9, 0.1], 2), (3, [0.8, 0.3], 2)],
+            f"vec_id {idt}, embedding array<double>, label int",
+        )
+        for impl in ("blocked", "catalyst"):
+            pairs = S.embedding_near_dup_pairs(emb, threshold=0.3, impl=impl)
+            assert {(a, b) for a, b, _ in _pairs(pairs)} == {(2, 3)}, impl
+            edges = _edges(S.knn_graph(emb, k=2, impl=impl))
+            assert {(a, b) for a, b, _, _ in edges} == {(2, 3), (3, 2)}, impl
+            single = emb.filter("label = 1")
+            assert S.knn_graph(single, k=2, impl=impl).collect() == [], impl
 
 
 def test_zero_norm_vector_raises_in_blocked(spark):

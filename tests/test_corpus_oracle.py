@@ -49,3 +49,17 @@ def test_query_matches_oracle(name, spark, duck):
     assert sorted(sdf.columns) == sorted(odf.columns)
     assert len(sdf) == len(odf)
     pd.testing.assert_frame_equal(canon(sdf), canon(odf))
+
+
+def test_gate_window_leads_the_registry():
+    # the driver gate reads the first 50 registered rows, so the sorted
+    # registry must open with GATE_PRIORITY in its order, and its first
+    # 11 names are the bench.py headline
+    Q.load_all()
+    assert len(Q.GATE_PRIORITY) == 50
+    assert list(Q.QUERIES)[: len(Q.GATE_PRIORITY)] == Q.GATE_PRIORITY
+    head = Q.GATE_PRIORITY[:11]
+    assert head[0] == "exec_summary"
+    assert [n.split("_")[:2] for n in head[1:]] == [
+        ["hc", f"q{i}"] for i in range(1, 11)
+    ]
